@@ -383,102 +383,6 @@ object Frontier {
       .select("url", "host", "host_bucket", "depth", "discovered_at", "admit")
   }
 
-  /** Stage-1 row of the delta pop: a pool row plus the (data file, split
-    * start) it came from — the segment key. Per-SEGMENT runs are sorted;
-    * cross-segment order isn't: FilePartition packs splits length-descending,
-    * so two fragments of the SAME file can sit adjacent in one partition out
-    * of offset order — the file name alone would fuse them and trip the
-    * sortedness assertions. `input_file_block_start()` disambiguates. */
-  case class PopScanRow(url: String, host: String, host_bucket: Int,
-      depth: Int, discovered_at: Long, file: String, file_off: Long)
-
-  /**
-   * Stage 1 of the DELTA-POOL pop: per (data file, host), stream the first
-   * `perHostBudget` rows. With the LSM pool a bucket's rows live in SEVERAL
-   * (host, priority)-sorted files (base + per-round deltas), so the global
-   * fifo order is a k-way merge the single-file streaming pop can't see.
-   * Superset property: a host's global top-b rows are each inside their own
-   * file's top-b (fewer than b rows beat them globally ⇒ fewer than b beat
-   * them in-file), so per-file prefixes of length b cover the global
-   * winners — stage 2 ([[popSortedFifoDeltaFlagged]]) merges them exactly.
-   * Holds under file splits too (a fragment's take-b is a prefix union).
-   *
-   * Output volume is O(popped + live-delta rows), NOT O(pool): the base
-   * file contributes ≤ b per host; each delta file is itself the round's
-   * new urls. Per-file sortedness is asserted per row, like the classic
-   * pop. Archived (popped) rows must be filtered out UPSTREAM — the caller
-   * passes the seen-filtered pool view, so budget counting here only ever
-   * sees live rows.
-   */
-  def popDeltaScan(pool: DataFrame, perHostBudget: Int): DataFrame = {
-    implicit val enc = org.apache.spark.sql.Encoders.product[PopScanRow]
-    implicit val outEnc =
-      org.apache.spark.sql.Encoders.product[graft.model.Model.FrontierEntry]
-    pool
-      .select(col("url"), col("host"), col("host_bucket"), col("depth"),
-        col("discovered_at"), input_file_name().as("file"),
-        input_file_block_start().as("file_off"))
-      .as[PopScanRow]
-      .mapPartitions { it =>
-        var curFile: String = null
-        var curOff = -1L
-        var curHost: String = null
-        var curCount = 0
-        var prevDepth = 0
-        var prevAt = 0L
-        var prevUrl: String = null
-        it.flatMap { e =>
-          val newSegment =
-            e.file_off != curOff || ((e.file ne curFile) && e.file != curFile)
-          if (newSegment || e.host != curHost) {
-            if (!newSegment && e.host < curHost)
-              throw new IllegalStateException(
-                s"pool file ${e.file} not host-sorted: ${e.host} after $curHost")
-            if (newSegment) { curFile = e.file; curOff = e.file_off }
-            curHost = e.host; curCount = 0; prevUrl = null
-          } else if (prevUrl != null &&
-              (e.depth < prevDepth || (e.depth == prevDepth &&
-                (e.discovered_at < prevAt ||
-                  (e.discovered_at == prevAt && e.url < prevUrl))))) {
-            throw new IllegalStateException(
-              s"pool file ${e.file} host ${e.host} not priority-sorted")
-          }
-          prevDepth = e.depth; prevAt = e.discovered_at; prevUrl = e.url
-          if (curCount < perHostBudget) {
-            curCount += 1
-            Iterator.single(graft.model.Model.FrontierEntry(
-              e.url, e.host, e.host_bucket, e.depth, e.discovered_at, 0L))
-          } else Iterator.empty
-        }
-      }
-      .toDF()
-  }
-
-  /**
-   * Stage 2 of the delta pop: ONE exchange of the stage-1 candidates onto
-   * the balanced bucket token (1:1 bucket→partition — the same layout the
-   * delta commit writes with), an in-partition sort back into (host,
-   * priority) order, then EXACTLY the classic fused walker
-   * ([[popSortedFifoFlagged]]'s implementation): per-host budget, fused
-   * politeness verdicts in global priority order, bounded per-bucket heap.
-   * The exchange carries O(popped + delta) slim rows — it REPLACES the
-   * round's former O(pool) merge exchange + sort + rewrite, the round's
-   * largest and worst-scaling stage. Verdict equivalence with the
-   * single-file pop follows from stage 1's superset property: each host's
-   * merged candidate sequence has the same first-b prefix as the
-   * single-file scan, and verdicts/heaps only look at that prefix.
-   */
-  def popSortedFifoDeltaFlagged(scanned: DataFrame, numBuckets: Int,
-      perHostBudget: Int, perBucketBudget: Int,
-      state: Option[org.apache.spark.broadcast.Broadcast[java.util.HashMap[String, (Double, Long)]]],
-      roundId: Long, ratePerRound: Double, burst: Double,
-      admitAcc: Option[graft.streaming.Politeness.AdmittedCountsAcc] = None): DataFrame =
-    popSortedFifoImpl(
-      scanned
-        .repartition(numBuckets, bucketToken(col("host_bucket"), numBuckets))
-        .sortWithinPartitions(col("host"), col("depth"), col("discovered_at"), col("url")),
-      perHostBudget, perBucketBudget, state, roundId, ratePerRound, burst, admitAcc)
-
   /**
    * One-pass round merge — the MERGE INTO formulation of
    * (Add new candidates ⊕ Visit popped, store/url.go:155-249) as a SINGLE

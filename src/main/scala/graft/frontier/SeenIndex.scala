@@ -57,9 +57,8 @@ object SeenIndex {
 
   private final class Entry {
     var maxRound: Int = -1
-    // concurrent set, not HashSet: peek() reads while entryFor() loaders may
-    // still be appending (a recomputed pop cache re-running contains_at
-    // probes during the overlapped thinning stage). Loads only ADD — a
+    // concurrent set, not HashSet: peek() may read while an entryFor()
+    // loader in another task is still appending. Loads only ADD — a
     // racing reader sees a safe subset, never a torn structure.
     val set: java.util.Set[UTF8String] =
       java.util.concurrent.ConcurrentHashMap.newKeySet[UTF8String]()
@@ -87,9 +86,8 @@ object SeenIndex {
     * early dropping wherever the authoritative probe still runs
     * downstream. Racing a loader is safe: the backing set is concurrent
     * and loads only ADD, so a racing peek sees a subset at worst (the
-    * crawler still orders its peeks after the round's load-triggering
-    * jobs — see Crawler.peekEverSeen — but a recomputed pop cache
-    * re-running loads mid-peek can no longer corrupt or hang). */
+    * crawler also orders its peeks after the round's load-triggering
+    * jobs — see Crawler.peekEverSeen). */
   def peek(root: String, bucket: Int, url: UTF8String): Boolean = {
     val e = cache.get((root, bucket))
     e != null && e.set.contains(url)
@@ -120,9 +118,9 @@ object SeenIndex {
     loadUrlDir(
       java.nio.file.Paths.get(root, s"round=$r", s"host_bucket=$bucket").toString, into)
 
-  /** Load the `url` column of every parquet file under `dir` into `into`
-    * (shared with [[PoolIndex]]). Missing dirs are a no-op. */
-  private[frontier] def loadUrlDir(dirPath: String,
+  /** Load the `url` column of every parquet file under `dir` into `into`.
+    * Missing dirs are a no-op. */
+  private def loadUrlDir(dirPath: String,
       into: java.util.Set[UTF8String]): Unit = {
     val dir = java.nio.file.Paths.get(dirPath)
     if (!java.nio.file.Files.exists(dir)) return
@@ -192,53 +190,4 @@ case class SeenIndexContains(child: Expression, root: String, cutoff: Int)
 
   override protected def withNewChildInternal(newChild: Expression): SeenIndexContains =
     copy(child = newChild)
-}
-
-/**
- * `seen_index_contains_at(url, host_bucket)` — the by-column form of
- * [[SeenIndexContains]]: the bucket comes from the row itself (the restored
- * `host_bucket` column), not the task's partitionIndex, so it is valid in
- * ANY plan position — scan filters included. Used by the delta-pool mode
- * ([[graft.pipeline.CrawlConfig.poolDeltaRounds]]) where popped rows leave
- * the pool LOGICALLY (their stale base-file rows are dropped at read
- * against the archive — Iceberg's delete-file semantics) instead of via a
- * physical rewrite. Deterministic: archive rounds ≤ `cutoff` are immutable.
- */
-case class SeenIndexContainsAt(left: Expression, right: Expression,
-    root: String, cutoff: Int)
-  extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-  with CodegenFallback {
-
-  override def dataType: DataType = BooleanType
-  override def nullable: Boolean = false
-  override def prettyName: String = "seen_index_contains_at"
-
-  // single-slot memo: rows arrive bucket-clustered (sorted bucket files),
-  // so the per-row entry resolution (CHM lookup + watermark check) almost
-  // always hits the same bucket. One immutable pair read/written whole —
-  // a concurrent overwrite only costs a re-resolve, never a wrong set.
-  @transient @volatile
-  private var memo: (Int, java.util.Set[UTF8String]) = null
-
-  override def eval(input: InternalRow): Any = {
-    val u = left.eval(input)
-    val b = right.eval(input)
-    if (u == null || b == null) false
-    else {
-      val bucket = b.asInstanceOf[Int]
-      val m = memo
-      val set =
-        if (m != null && m._1 == bucket) m._2
-        else {
-          val s = SeenIndex.setFor(root, cutoff, bucket)
-          memo = (bucket, s)
-          s
-        }
-      set.contains(u.asInstanceOf[UTF8String])
-    }
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SeenIndexContainsAt =
-    copy(left = newLeft, right = newRight)
 }

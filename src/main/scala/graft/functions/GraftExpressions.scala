@@ -924,21 +924,6 @@ object GraftExpressions {
         es(1).eval(org.apache.spark.sql.catalyst.InternalRow.empty).toString,
         es(2).eval(org.apache.spark.sql.catalyst.InternalRow.empty).asInstanceOf[Int]),
       "scala_udf")
-    // by-column bucket form (args: url, host_bucket, root literal, cutoff
-    // literal) — valid in any plan position; see SeenIndexContainsAt
-    reg.createOrReplaceTempFunction("seen_index_contains_at",
-      es => graft.frontier.SeenIndexContainsAt(es(0), es(1),
-        es(2).eval(org.apache.spark.sql.catalyst.InternalRow.empty).toString,
-        es(3).eval(org.apache.spark.sql.catalyst.InternalRow.empty).asInstanceOf[Int]),
-      "scala_udf")
-    // partition-local exact pool-membership probe (args: url, table-root
-    // literal, snapshot-round literal) — delta-pool candidate dedup; see
-    // graft.frontier.PoolIndex for the partition→bucket binding contract
-    reg.createOrReplaceTempFunction("pool_index_contains",
-      es => graft.frontier.PoolIndexContains(es(0),
-        es(1).eval(org.apache.spark.sql.catalyst.InternalRow.empty).toString,
-        es(2).eval(org.apache.spark.sql.catalyst.InternalRow.empty).asInstanceOf[Int]),
-      "scala_udf")
   }
 
   // Column-API wrappers (require register(spark) once per session)
@@ -980,10 +965,4 @@ object GraftExpressions {
   def seen_index_contains(url: Column, root: String, cutoff: Int): Column =
     call_function("seen_index_contains", url,
       org.apache.spark.sql.functions.lit(root), org.apache.spark.sql.functions.lit(cutoff))
-  def seen_index_contains_at(url: Column, bucket: Column, root: String, cutoff: Int): Column =
-    call_function("seen_index_contains_at", url, bucket,
-      org.apache.spark.sql.functions.lit(root), org.apache.spark.sql.functions.lit(cutoff))
-  def pool_index_contains(url: Column, root: String, snapRound: Int): Column =
-    call_function("pool_index_contains", url,
-      org.apache.spark.sql.functions.lit(root), org.apache.spark.sql.functions.lit(snapRound))
 }

@@ -394,19 +394,20 @@ object Similarity {
         col("s").getField("embedding").as("cell_emb"))
 
   /**
-   * Nearest-centroid assignment as ONE map-side-combinable aggregate: the
-   * broadcast cross join emits corpus×cells rows, but each vec_id's group
-   * completes inside its partition, so the partial HashAggregate collapses
-   * them BEFORE the exchange — one slim row per vector crosses the wire.
-   * The round-2 `row_number` Window shuffled all corpus×cells rows
-   * (embeddings included) just to pick a max. Argmax = `max` over ONE
-   * packed LONG — `round(d·10¹²)·2²¹ − cell_id` — because a fixed-width
-   * buffer is what keeps the agg a HashAggregate (a `max(struct)` buffer
-   * is var-width and silently planned SortAggregate, the [[graft.frontier
-   * .Frontier.packPrio]] lesson); lexicographically that is best-d, ties
-   * to the LOWEST cell_id — exactly the window's `ORDER BY d DESC,
-   * cell_id` rank-1 row. The embedding rides as a grouping KEY (var-width
-   * keys hash fine; only buffers must be fixed-width).
+   * Nearest-centroid assignment as a PER-ROW argmax over a literal
+   * centroid matrix: the (driver-resident) centroids are embedded in the
+   * projection, and each point row computes its cosine to every cell and
+   * keeps the best — no join, no exchange, one output row per input row.
+   * Argmax = `max` over ONE packed LONG per cell —
+   * `round(d·10¹²)·2²¹ − cell_id` — so lexicographically the winner is
+   * best-d, ties to the LOWEST cell_id (the rank-1 row of
+   * `ORDER BY d DESC, cell_id`).
+   *
+   * Precondition: (vec_id, embedding) rows are UNIQUE. The output keeps
+   * the input multiplicity, so an exact duplicate row yields a duplicate
+   * [[ivfAssign]] row and counts twice in the Lloyd means; every in-repo
+   * corpus has unique vec_ids.
+   *
    * `d` is rounded to 12 decimals on BOTH engines of the correctness gate
    * (Spark's avg() partial-sum order is not bit-deterministic, so ranking
    * full-precision doubles could flake across runs/engines — ADVICE r2);
@@ -446,7 +447,7 @@ object Similarity {
    * the IVF index (round 1 shipped a lowest-id stand-in). Everything stays
    * distributed DataFrame algebra: init = deterministic hash-order sample
    * ([[kmeansInit]] — distributed top-k, no global window); each iteration
-   * is one broadcast-assignment aggregate ([[nearestCell]]) + one
+   * is one assignment aggregate ([[nearestCell]]) + one
    * element-wise mean (posexplode → per-(cell, dim) avg → re-assembled
    * array). The CORPUS never touches the driver; the k·dim center set
    * does — the MLlib KMeans shape (see the in-body comment for why that
@@ -502,8 +503,9 @@ object Similarity {
 
   /**
    * IVF coarse index: assign every vector to its nearest k-means centroid
-   * ([[nearestCell]] — broadcast join + map-side-combined argmax; the
-   * corpus streams, one slim row per vector shuffles).
+   * ([[nearestCell]] — a per-row argmax over the centroids as a literal
+   * matrix; the corpus streams through one projection with no join and no
+   * exchange). Requires unique (vec_id, embedding) rows, see nearestCell.
    * Query: probe the `nprobe` nearest cells only, exact re-rank inside.
    */
   def ivfAssign(corpus: DataFrame, centroids: DataFrame): DataFrame = {
@@ -523,8 +525,8 @@ object Similarity {
    * the lower vec_id. Returns the REMOVED rows with evidence
    * `(vec_id, cell_id, max_cos, n_dups)`.
    *
-   * Scale shape: reuses [[kmeansCentroids]] (distributed init + broadcast-
-   * assignment Lloyd) and [[ivfAssign]] (map-side-combined packed argmax);
+   * Scale shape: reuses [[kmeansCentroids]] (distributed init + literal-
+   * matrix-assignment Lloyd) and [[ivfAssign]] (per-row argmax);
    * the centroid re-join broadcasts (≤ `cells` rows); the pairwise pass is
    * a self-equi-join on `cell_id` — one shuffle per side, quadratic only
    * inside a cell. At 100 TB `cells` grows with the corpus (the paper uses

@@ -99,32 +99,14 @@ class Crawler(
        else Map.empty),
     dropCols = Seq("host", "host_bucket", "last_visit"))
 
-  /** Delta-pool (LSM) mode: rounds append per-bucket delta files instead
-    * of rewriting the base, compacting every `poolDeltaRounds` rounds. Only
-    * meaningful for the unique-fifo regime (the steady-state crawl); other
-    * samplers need the visited rows in view and keep the classic rewrite. */
-  private val deltaModeActive = cfg.poolDeltaRounds > 1
-  if (deltaModeActive)
-    require(cfg.unique && cfg.sampler == "fifo" && !cfg.useSeenFilter,
-      s"poolDeltaRounds=${cfg.poolDeltaRounds} requires unique=true, sampler=fifo, " +
-        "useSeenFilter=false (classic rewrite covers the other regimes)")
+  require(cfg.poolDeltaRounds == 0 || cfg.poolDeltaRounds == 1,
+    s"poolDeltaRounds=${cfg.poolDeltaRounds}: the delta pool was removed; " +
+      "every round commits with the bucket-selective pool rewrite (use 0 or 1)")
 
   /** The pool with derived columns restored — every consumer of the
-    * frontier table reads THIS view. In delta mode, popped rows leave the
-    * pool LOGICALLY: their stale base-file rows are dropped here against
-    * the seen archive (Iceberg delete-file semantics) instead of via the
-    * per-round physical rewrite. */
-  private def poolView: DataFrame = {
-    val raw = Frontier.restorePool(frontierTable.read(spark), cfg.numBuckets)
-    // stale (popped-but-not-compacted) rows exist only when rounds have
-    // popped since the last full commit — right after a compaction the
-    // base files are stale-free and the per-row probe is skipped entirely
-    val stale = deltaModeActive &&
-      frontierTable.currentSnapshot().exists(s => s.compactRound < s.round)
-    if (!stale) raw
-    else raw.filter(!graft.functions.GraftExpressions.seen_index_contains_at(
-      col("url"), col("host_bucket"), seenDir, lastRound))
-  }
+    * frontier table reads THIS view. */
+  private def poolView: DataFrame =
+    Frontier.restorePool(frontierTable.read(spark), cfg.numBuckets)
   val seenFilters = new graft.frontier.SeenFilterStore(workDir)
 
   /** Politeness state past this many hosts falls back to the window form
@@ -212,18 +194,12 @@ class Crawler(
     // only the POOL is rewritten; archived rows never re-enter it
     val merged = pool.unionByName(fresh)
     val seedRound = math.max(lastRound, 0)
-    // a re-seed REWRITES the manifest at the same round (and compacts any
-    // live deltas) — drop the pool index's cached snapshot of that round
-    // (single-JVM; on a cluster the stale-base loud check in PoolIndex
-    // catches it)
-    if (deltaModeActive) graft.frontier.PoolIndex.invalidate()
     val rows = frontierTable.commit(merged, seedRound)
     if (cfg.useSeenFilter)
       seenFilters.updateAndSave(spark, seedRound, seedRound, cands, frontier())
     rows + seenRows
   }
 
-  private val timing = sys.env.contains("GRAFT_ROUND_TIMING")
   /** Recursive delete of an uncommitted round artifact (no-op if absent). */
   private def deleteDir(p: java.nio.file.Path): Unit = {
     if (Files.isDirectory(p)) {
@@ -237,16 +213,6 @@ class Crawler(
       } finally s.close()
     }
     Files.deleteIfExists(p): Unit
-  }
-
-  private def timed[T](label: String)(f: => T): T = {
-    if (!timing) f
-    else {
-      val t0 = System.nanoTime()
-      val v = f
-      System.err.println(f"[round-timing] $label%-12s ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      v
-    }
   }
 
   /** Run one fetch round; returns stats (popped==0 ⇒ frontier exhausted). */
@@ -299,42 +265,18 @@ class Crawler(
       if (!gated) None
       else cachedStateMap.orElse(
         graft.streaming.Politeness.stateMapOf(prevState, broadcastStateMax))
-    // Delta-pool pop: a bucket's live rows span SEVERAL sorted files (base
-    // + per-round deltas), so the pop is the two-stage form — per-file
-    // streaming prefixes, then ONE O(popped + delta) exchange onto the
-    // balanced bucket token and the same fused walker. Used for EVERY
-    // round in delta mode (deltas may be live even on compaction rounds).
     // per-host admitted counts ride the fused pop walker as an accumulator
     // side output (idempotent by partition), replacing the separate
-    // cache-scan + shuffle job the state write used to run — a 5-7 s/round
-    // fixed cost at local[32] once the delta commit stopped masking it
+    // cache-scan + shuffle job the state write used to run (a 5-7 s/round
+    // fixed cost at local[32])
     val admitAcc =
-      if (gated && stateMap.isDefined && (sortedFifo || deltaModeActive)) {
+      if (gated && stateMap.isDefined && sortedFifo) {
         val a = new graft.streaming.Politeness.AdmittedCountsAcc()
         spark.sparkContext.register(a, s"admitted-hosts-r$r")
         Some(a)
       } else None
-    def popDelta(st: Option[org.apache.spark.broadcast.Broadcast[
-        java.util.HashMap[String, (Double, Long)]]]) =
-      Frontier.popSortedFifoDeltaFlagged(
-        Frontier.popDeltaScan(popSource, cfg.perHostBudget),
-        cfg.numBuckets, cfg.perHostBudget, cfg.perBucketBudget,
-        st, r.toLong, cfg.politenessRate, cfg.politenessBurst, admitAcc)
-    // right after a compaction every bucket is ONE sorted file again — the
-    // classic single-pass fused pop applies and the two-stage form (extra
-    // exchange + sort) is skipped for that round
-    val deltasLive = frontierTable.currentSnapshot().exists(s => s.compactRound < s.round)
     val cached = (
-      if (deltaModeActive && deltasLive) {
-        if (!gated) popDelta(None).drop("admit")
-        else stateMap match {
-          case Some(m) => popDelta(Some(spark.sparkContext.broadcast(m)))
-          case None =>
-            graft.streaming.Politeness.flagAdmissionsWindow(
-              popDelta(None).drop("admit"), prevState, r.toLong,
-              cfg.politenessRate, cfg.politenessBurst)
-        }
-      } else if (!gated) popPlain()
+      if (!gated) popPlain()
       else stateMap match {
         case Some(m) if sortedFifo =>
           Frontier.popSortedFifoFlagged(popSource, cfg.perHostBudget,
@@ -433,12 +375,12 @@ class Crawler(
     //     ok/err outcome counters ride the SAME job as Observation metrics
     //     (round 1 paid a separate re-scan job for them).
     val obs = org.apache.spark.sql.Observation(s"round-$r-outcomes")
-    timed("fetch+docs")(out.drop("round")
+    out.drop("round")
       .observe(obs,
         sum(when(col("error") === "", 1L).otherwise(0L)).as("ok"),
         sum(when(col("error") =!= "", 1L).otherwise(0L)).as("err"))
       .write.mode(SaveMode.Overwrite).options(writerOptions)
-      .parquet(s"$docsDir/round=$r"))
+      .parquet(s"$docsDir/round=$r")
     val obsRow = obs.get
     def obsLong(k: String): Long =
       Option(obsRow.getOrElse(k, null)).map(_.asInstanceOf[Long]).getOrElse(0L)
@@ -542,14 +484,12 @@ class Crawler(
       return RoundStats(r, 0, 0, 0, 0, math.max(frontierRowsHint, 0L), 0)
     }
     if (poppedN == 0) {
-      // throttled to zero: commit an empty delta (every bucket clean) so
+      // throttled to zero: commit no bucket (every bucket clean) so
       // the snapshot round advances and per-host tokens accrue
       val empty = spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Frontier.schema)
-      val rows = (if (deltaModeActive)
-        frontierTable.appendDelta(empty, r, 0L, beforeRename = () => joinStateWrite())
-      else frontierTable.commit(empty, r, Some(Set.empty),
-        beforeRename = () => joinStateWrite())) + seenRows
+      val rows = frontierTable.commit(empty, r, Some(Set.empty),
+        beforeRename = () => joinStateWrite()) + seenRows
       writeLineage(r, Seq.empty, 0, 0, 0, 0, rows)
       cached.unpersist()
       return RoundStats(r, 0, 0, 0, 0, rows, offeredN)
@@ -621,14 +561,13 @@ class Crawler(
       // peek pre-filter: in a saturating crawl most links re-discover
       // already-seen pages, and each survivor costs exchange bytes + agg +
       // probe work downstream. The emission filter drops urls the
-      // ALREADY-RESIDENT SeenIndex/PoolIndex sets know are seen — exact
-      // (hits are real archive/pool members; misses just pass through to
-      // the authoritative partition-local probes), peek-only (never loads
+      // ALREADY-RESIDENT SeenIndex sets know are archived — exact (hits are
+      // real archive members; misses just pass through to the
+      // authoritative merge + partition-local probe), peek-only (never loads
       // a bucket — on a cluster an executor simply knows whatever its
       // tasks loaded), and race-free (the thinning job is ordered after
       // every load-triggering job of the round).
       val seenRootB = s"$workDir/seen"
-      val poolRootB = frontierTable.root
       val nbB = cfg.numBuckets
       rawNew.as[(String, Int, Long)].mapPartitions { it =>
         val best = new java.util.HashMap[String, java.lang.Long](thinCap)
@@ -639,50 +578,13 @@ class Crawler(
         }
         import scala.jdk.CollectionConverters._
         best.entrySet().iterator().asScala
-          .filter(e => !Crawler.peekEverSeen(e.getKey, seenRootB, poolRootB, nbB))
+          .filter(e => !Crawler.peekEverSeen(e.getKey, seenRootB, nbB))
           .map { e =>
             val k = e.getValue.longValue()
             (e.getKey, (k >> 47).toInt, k & ((1L << 47) - 1))
           }
       }.toDF("url", "depth", "discovered_at")
     }
-    // ---- DELTA ROUND (LSM pool): append only the round's NEW urls as
-    //      per-bucket sorted delta files; the base files are untouched and
-    //      popped rows leave the pool logically (seen-archive filter at
-    //      read). Commit I/O is O(delta + popped), never O(pool) — the
-    //      former pool rewrite was the round's largest and worst-scaling
-    //      stage (BENCH.md round-4 probe: ~half the round wall). Every
-    //      poolDeltaRounds-th round runs the classic full merge below as
-    //      the compaction. First-seen dedup against pool ∪ archive is two
-    //      exact partition-local probes on the candidates' token-
-    //      partitioned aggregation output (PoolIndex + SeenIndex).
-    val snapCompact = frontierTable.currentSnapshot().map(_.compactRound).getOrElse(r)
-    val deltaRound = deltaModeActive && (r - snapCompact) < cfg.poolDeltaRounds
-    if (deltaRound) {
-      val cands0 = Frontier.normalizeCandidates(thinned, cfg.numBuckets,
-        cfg.respectRobots, dedup = false)
-      val emptyF = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Frontier.schema)
-      // in-round dedup with the merge's exact min-pack rule (ONE exchange
-      // onto the balanced bucket token — also the layout the delta write
-      // needs), then drop everything ever seen: pool members (base+deltas,
-      // PoolIndex) and archived urls (SeenIndex) — together exactly the
-      // classic merge's first-seen semantics (existing row always wins)
-      val fresh = Frontier.mergeRound(emptyF, cands0, emptyF, r, cfg.numBuckets)
-        .filter(!graft.functions.GraftExpressions.pool_index_contains(
-          col("url"), frontierTable.root, r - 1))
-        .filter(!graft.functions.GraftExpressions.seen_index_contains(
-          col("url"), seenDir, r - 1))
-      val poolRows = timed("commit")(
-        frontierTable.appendDelta(fresh, r, -poppedN, beforeRename = joinOverlapped))
-      seenRows += poppedN
-      val frontierRows = poolRows + seenRows
-      val newN = math.max(0L, frontierRows - math.max(frontierRowsHint, 0L))
-      writeLineage(r, perBucketCounts, poppedN, fetchedOk, errs, newN, frontierRows)
-      cached.unpersist()
-      return RoundStats(r, poppedN, fetchedOk, errs, newN, frontierRows, offeredN)
-    }
-
     val cands0 = Frontier.normalizeCandidates(thinned, cfg.numBuckets,
       cfg.respectRobots, dedup = cfg.useSeenFilter)
     // dirty buckets = buckets with pops or new candidates; ONLY their
@@ -692,20 +594,16 @@ class Crawler(
     // bucket, everything is dirty — skip the candidate-bucket scan (it was
     // a near-serial extra pass; new buckets a candidate opens are adopted
     // by the commit regardless, they have no old rows to lose).
-    // Delta-mode COMPACTION rounds always rewrite the whole table (the
-    // live deltas must be absorbed into new base files): dirty = None.
     val allBuckets = frontierTable.currentSnapshot().map(_.buckets.keySet).getOrElse(Set.empty)
     val poppedBuckets = perBucketCounts.map(_._1).toSet
-    val dense = deltaModeActive ||
-      (allBuckets.nonEmpty && allBuckets.subsetOf(poppedBuckets))
+    val dense = allBuckets.nonEmpty && allBuckets.subsetOf(poppedBuckets)
     // persist only when consumed more than once (sparse path's distinct
     // job, or the seen-filter's split + update passes)
     val multiPass = !dense || cfg.useSeenFilter
     val cands = if (multiPass) cands0.persist() else cands0
     val dirty =
       if (dense) poppedBuckets
-      else timed("cand-buckets")(
-        cands.select("host_bucket").distinct().collect().map(_.getInt(0)).toSet) ++
+      else cands.select("host_bucket").distinct().collect().map(_.getInt(0)).toSet ++
         poppedBuckets
     // the merge's identity resolution (first-seen wins) must kill a
     // candidate re-discovering ANY ever-seen url. Live pool rows take part
@@ -737,11 +635,8 @@ class Crawler(
           .unionByName(provablyNew)
       } else dropArchived(Frontier.mergeRound(frontierDirty, cands, popped, r, cfg.numBuckets))
     val poolNext = merged.filter(col("last_visit") === 0L)
-    // delta-mode compaction is always a FULL commit (dirty = None): the
-    // live delta files must be absorbed into the new base files
-    val poolRows = timed("commit")(frontierTable.commit(poolNext, r,
-      if (deltaModeActive) None else Some(dirty),
-      preClustered = !cfg.useSeenFilter, beforeRename = joinOverlapped))
+    val poolRows = frontierTable.commit(poolNext, r, Some(dirty),
+      preClustered = !cfg.useSeenFilter, beforeRename = joinOverlapped)
     seenRows += poppedN
     val frontierRows = poolRows + seenRows
     if (cfg.useSeenFilter)
@@ -821,11 +716,10 @@ object Crawler {
   /** Advisory-exact ever-seen peek for the link-thinning emission filter:
     * derive the url's bucket exactly like [[Frontier.hostBucket]]
     * (xxhash64 seed 42 of the host, pmod numBuckets) and probe the
-    * resident [[graft.frontier.SeenIndex]]/[[graft.frontier.PoolIndex]]
-    * sets WITHOUT loading. False = unknown — the candidate proceeds to
-    * the authoritative partition-local probes. */
-  def peekEverSeen(url: String, seenRoot: String, poolRoot: String,
-      numBuckets: Int): Boolean = {
+    * resident [[graft.frontier.SeenIndex]] set WITHOUT loading. False =
+    * unknown — the candidate proceeds to the authoritative merge and
+    * partition-local probe. */
+  def peekEverSeen(url: String, seenRoot: String, numBuckets: Int): Boolean = {
     val host = graft.functions.UrlFns.hostOf(url)
     if (host == null) return false
     val hu = org.apache.spark.unsafe.types.UTF8String.fromString(host)
@@ -833,8 +727,7 @@ object Crawler {
       .hashUnsafeBytes(hu.getBaseObject, hu.getBaseOffset, hu.numBytes, 42L)
     val b = (((h % numBuckets) + numBuckets) % numBuckets).toInt
     val uu = org.apache.spark.unsafe.types.UTF8String.fromString(url)
-    graft.frontier.SeenIndex.peek(seenRoot, b, uu) ||
-      graft.frontier.PoolIndex.peek(poolRoot, b, uu)
+    graft.frontier.SeenIndex.peek(seenRoot, b, uu)
   }
 }
 
@@ -871,13 +764,9 @@ case class CrawlConfig(
       * different host regimes — the knob lets benches A/B zstd (fewest
       * bytes) against snappy/lz4 (least encode CPU). */
     frontierCodec: String = "",
-    /** Delta-pool (LSM) mode: K > 1 makes K−1 of every K rounds append
-      * only the round's NEW urls as per-bucket sorted delta files (commit
-      * I/O O(delta + popped), the Iceberg MERGE-INTO/positional-delete
-      * shape), with the K-th round running the classic full merge as the
-      * compaction. Popped rows leave the pool logically via the exact
-      * seen-archive filter at read. 0/1 = classic per-round rewrite.
-      * Requires unique=true, sampler=fifo, useSeenFilter=false. */
+    /** Kept only for the frozen `graft.Bench` driver contract, which
+      * passes it. The delta pool it once enabled was removed; 0 and 1 are
+      * the only accepted values (the constructor rejects anything larger). */
     poolDeltaRounds: Int = 1)
 
 case class RoundStats(

@@ -46,17 +46,11 @@ import scala.jdk.CollectionConverters._
  */
 object IcebergishTable {
 
-  /** One bucket's current BASE data file: the snapshot dir holding it +
+  /** One bucket's current data file: the snapshot dir holding it +
     * rows (manifest stats). */
   case class BucketEntry(dir: String, rows: Long)
 
-  /** @param compactRound the round whose commit last REWROTE the base
-    *   bucket files. Delta rounds `(compactRound, round]` may each hold an
-    *   appended per-bucket delta file under `delta/round=r/` — the live
-    *   pool is base ∪ live deltas (see [[IcebergishTable.appendDelta]]).
-    *   Classic full commits keep `compactRound == round` (no deltas). */
-  case class Snapshot(round: Int, rows: Long, buckets: Map[Int, BucketEntry],
-      compactRound: Int) {
+  case class Snapshot(round: Int, rows: Long, buckets: Map[Int, BucketEntry]) {
     def bucketPaths(rootDir: String): Seq[String] =
       buckets.toSeq.sortBy(_._1).map { case (b, e) => s"$rootDir/${e.dir}/hb=$b" }
   }
@@ -65,10 +59,11 @@ object IcebergishTable {
     val bs = s.buckets.toSeq.sortBy(_._1).map { case (b, e) =>
       s""""$b":{"dir":"${e.dir}","rows":${e.rows}}"""
     }.mkString(",")
-    s"""{"round":${s.round},"rows":${s.rows},"compact":${s.compactRound},"buckets":{$bs}}"""
+    s"""{"round":${s.round},"rows":${s.rows},"buckets":{$bs}}"""
   }
 
-  def parseManifest(txt: String): Snapshot = {
+  /** @param source names the manifest in error messages. */
+  def parseManifest(txt: String, source: String = "manifest"): Snapshot = {
     def topField(k: String): Option[String] =
       txt.split("\"" + k + "\":") match {
         case parts if parts.length > 1 => Some(parts(1).split("[,{}]")(0).trim)
@@ -76,15 +71,20 @@ object IcebergishTable {
       }
     val round = topField("round").get.toInt
     val rows = topField("rows").get.toLong
-    // back-compat: manifests written before delta support have no
-    // "compact" field — they never carry deltas, so compactRound = round
-    val compactRound = topField("compact").map(_.toInt).getOrElse(round)
+    // older builds wrote a "compact" round; compact < round means rounds
+    // (compact, round] live in delta files this build never reads — their
+    // rows would silently vanish from the pool, so refuse the snapshot
+    topField("compact").map(_.toInt).filter(_ < round).foreach { c =>
+      throw new IllegalStateException(
+        s"$source: snapshot round $round has uncompacted delta rounds ($c, $round] " +
+          "from the removed delta pool; finish it with the build that wrote it")
+    }
     val bucketsBody = txt.split("\"buckets\":\\{")(1).stripSuffix("}").stripSuffix("}")
     val entries = "\"(\\d+)\":\\{\"dir\":\"([^\"]+)\",\"rows\":(\\d+)\\}".r
       .findAllMatchIn(bucketsBody)
       .map(m => m.group(1).toInt -> BucketEntry(m.group(2), m.group(3).toLong))
       .toMap
-    Snapshot(round, rows, entries, compactRound)
+    Snapshot(round, rows, entries)
   }
 }
 
@@ -115,23 +115,9 @@ class IcebergishTable(val root: String, schema: StructType,
 
   def currentSnapshot(): Option[Snapshot] = {
     if (!Files.exists(manifestPath)) return None
-    Some(IcebergishTable.parseManifest(Files.readString(manifestPath)))
+    Some(IcebergishTable.parseManifest(Files.readString(manifestPath),
+      manifestPath.toString))
   }
-
-  /** Live delta bucket dirs for snapshot `s` — rounds
-    * `(compactRound, round]`, ascending, each `delta/round=r/<bucketCol>=b`
-    * (missing rounds/buckets are simply absent: a round with no new
-    * candidates for a bucket writes no file there). */
-  def liveDeltaDirs(s: Snapshot): Seq[String] =
-    (s.compactRound + 1 to s.round).flatMap { d =>
-      val dir = Paths.get(root, "delta", s"round=$d")
-      if (!Files.exists(dir)) Nil
-      else listDir(dir)
-        .filter(p => Files.isDirectory(p) &&
-          p.getFileName.toString.startsWith(s"$bucketCol="))
-        .sortBy(_.getFileName.toString.stripPrefix(s"$bucketCol=").toInt)
-        .map(_.toString)
-    }
 
   /**
    * Read the current snapshot (one multi-path FileScan over the bucket
@@ -151,7 +137,7 @@ class IcebergishTable(val root: String, schema: StructType,
   def read(spark: SparkSession): DataFrame =
     currentSnapshot() match {
       case Some(s) =>
-        val paths = s.bucketPaths(root) ++ liveDeltaDirs(s)
+        val paths = s.bucketPaths(root)
         if (paths.isEmpty)
           spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], fileSchema)
         else spark.read.schema(fileSchema).parquet(paths: _*)
@@ -178,18 +164,6 @@ class IcebergishTable(val root: String, schema: StructType,
   def commit(df: DataFrame, round: Int, dirtyBuckets: Option[Set[Int]] = None,
       preClustered: Boolean = false, beforeRename: () => Unit = () => ()): Long = {
     Files.createDirectories(Paths.get(root))
-    // a PARTIAL commit keeps clean buckets' base files from the previous
-    // snapshot — with live delta files that would silently drop the deltas
-    // (their rows are in no kept base file). Full commits (dirty = None)
-    // are the compaction path: `df` is the whole live pool, so absorbing
-    // the deltas is exactly what happens.
-    if (dirtyBuckets.isDefined)
-      currentSnapshot().foreach { p =>
-        if (p.compactRound != p.round)
-          throw new IllegalStateException(
-            s"partial commit at round $round but delta rounds " +
-              s"(${p.compactRound}, ${p.round}] are live — compact with dirtyBuckets=None")
-      }
     val spark = df.sparkSession
     val nonce = java.util.UUID.randomUUID().toString.take(8)
     val dataDir = s"data-r$round-$nonce"
@@ -209,26 +183,16 @@ class IcebergishTable(val root: String, schema: StructType,
     // a projection after the sort is narrow — file row order is preserved
     val clustered =
       if (dropCols.isEmpty) clustered1 else clustered1.drop(dropCols: _*)
-    val timing = sys.env.contains("GRAFT_ROUND_TIMING")
-    def timed[T](label: String)(f: => T): T = {
-      if (!timing) f
-      else {
-        val t0 = System.nanoTime()
-        val v = f
-        System.err.println(f"[commit-timing] $label%-10s ${(System.nanoTime() - t0) / 1e9}%.2fs")
-        v
-      }
-    }
-    timed("write")(clustered
+    clustered
       .write.mode("overwrite").options(writerOptions)
-      .partitionBy("hb").parquet(s"$root/$dataDir"))
+      .partitionBy("hb").parquet(s"$root/$dataDir")
 
     // bucket → rows from parquet footers (metadata only, no data re-scan;
     // footer opens parallelized — sequential opens were a measurable
     // driver-side serial floor at 64+ buckets/round)
     val conf = spark.sessionState.newHadoopConf()
     val maxSplit = spark.sessionState.conf.filesMaxPartitionBytes
-    val written: Map[Int, BucketEntry] = timed("footers")(
+    val written: Map[Int, BucketEntry] =
       listBucketDirs(s"$root/$dataDir").par(32) { case (bucket, dir) =>
         var rows = 0L
         var files = 0
@@ -253,7 +217,7 @@ class IcebergishTable(val root: String, schema: StructType,
             s"commit(preClustered=true) but bucket $bucket wrote $files files — " +
               s"input was not hash-partitioned by $bucketCol")
         bucket -> BucketEntry(dataDir, rows)
-      }.toMap)
+      }.toMap
 
     beforeRename()
     val prev = currentSnapshot()
@@ -263,68 +227,9 @@ class IcebergishTable(val root: String, schema: StructType,
     }
     val buckets = kept ++ written
     val rows = buckets.valuesIterator.map(_.rows).sum
-    // a full (base-rewriting) commit IS a compaction: every live row is in
-    // the new base files, so compactRound advances to this round and any
-    // delta dirs are garbage (deleted after the rename, like pruned bases)
-    renameManifest(Snapshot(round, rows, buckets, compactRound = round))
+    renameManifest(Snapshot(round, rows, buckets))
     prune(keep = buckets.valuesIterator.map(_.dir).toSet)
-    deleteRecursively(Paths.get(root, "delta"))
     rows
-  }
-
-  /**
-   * Delta commit (the Iceberg MERGE-INTO / positional-delete shape): append
-   * `df` — the round's NEW frontier rows only, already token-partitioned
-   * 1:1 bucket→partition ([[graft.frontier.Frontier.partitionTokens]]) —
-   * as per-bucket sorted delta files under `delta/round=<round>/`, leaving
-   * every base file untouched. Per-round write I/O is O(delta), never
-   * O(pool): the base rewrite (sort + encode + fresh-page commit of the
-   * WHOLE live pool — the round's largest and worst-scaling stage, see
-   * BENCH.md) is deferred to a periodic compaction ([[commit]] with
-   * `dirtyBuckets = None`).
-   *
-   * Popped rows "leave" the pool logically, not physically: readers drop
-   * them against the seen archive ([[graft.frontier.SeenIndex]]), exactly
-   * Iceberg's delete-file semantics. `rowsDelta` carries that adjustment
-   * (−popped) into the manifest's live-row stat.
-   *
-   * Torn-round replay: the delta dir is overwritten (`SaveMode.Overwrite`)
-   * with deterministic content before the manifest rename — identical
-   * replay discipline to the base commit.
-   */
-  def appendDelta(df: DataFrame, round: Int, rowsDelta: Long,
-      beforeRename: () => Unit = () => ()): Long = {
-    val prev = currentSnapshot().getOrElse(throw new IllegalStateException(
-      "appendDelta requires an existing snapshot (seed with a full commit first)"))
-    val deltaDir = s"$root/delta/round=$round"
-    // same write discipline as the base commit: sort leads with the
-    // partition key so FileFormatWriter never injects its own sort, data
-    // files carry only the non-derivable columns
-    val sorted =
-      if (sortCols.nonEmpty)
-        df.sortWithinPartitions((col(bucketCol) +: sortCols.map(col)): _*)
-      else df
-    val slim = sorted.select((bucketCol +: fileSchema.fieldNames.toSeq).map(col): _*)
-    slim.write.mode("overwrite").options(writerOptions)
-      .partitionBy(bucketCol).parquet(deltaDir)
-    val conf = df.sparkSession.sessionState.newHadoopConf()
-    var deltaRows = 0L
-    listBucketDirs(deltaDir, s"$bucketCol=").par(32) { case (bucket, dir) =>
-      var rows = 0L
-      var files = 0
-      listDir(dir).iterator
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-        .foreach { f => rows += parquetRowCount(conf, f.toString); files += 1 }
-      if (files > 1)
-        throw new IllegalStateException(
-          s"appendDelta: bucket $bucket wrote $files files — input was not " +
-            s"hash-partitioned by $bucketCol (token layout required)")
-      rows
-    }.foreach(deltaRows += _)
-    beforeRename()
-    renameManifest(Snapshot(round, prev.rows + deltaRows + rowsDelta,
-      prev.buckets, prev.compactRound))
-    prev.rows + deltaRows + rowsDelta
   }
 
   private def renameManifest(s: Snapshot): Unit = {
@@ -363,13 +268,12 @@ class IcebergishTable(val root: String, schema: StructType,
     }
   }
 
-  private def listBucketDirs(dataDir: String,
-      prefix: String = "hb="): Seq[(Int, java.nio.file.Path)] = {
+  private def listBucketDirs(dataDir: String): Seq[(Int, java.nio.file.Path)] = {
     val d = Paths.get(dataDir)
     if (!Files.exists(d)) return Seq.empty
     listDir(d)
-      .filter(p => Files.isDirectory(p) && p.getFileName.toString.startsWith(prefix))
-      .map(p => p.getFileName.toString.stripPrefix(prefix).toInt -> p)
+      .filter(p => Files.isDirectory(p) && p.getFileName.toString.startsWith("hb="))
+      .map(p => p.getFileName.toString.stripPrefix("hb=").toInt -> p)
   }
 
   /** Row count from the parquet footer (Iceberg-manifest-style stats). */

@@ -66,11 +66,10 @@ object Politeness {
    * walker (an accumulator keyed by partitionId), replacing the separate
    * `cached.groupBy(host).agg(...)` job the gated round used to pay at
    * the round head's shadow — a full scan of the popped cache plus a
-   * shuffle, measured 5-7 s/round at local[32] once the delta-pool commit
-   * stopped masking it. Keyed by partition so cache rebuilds, task
-   * retries, and speculative attempts stay idempotent: a partition's map
-   * is deterministic, and re-adding it OVERWRITES rather than
-   * double-counts. Every host with a heap-surviving row appears (count 0
+   * shuffle, measured 5-7 s/round at local[32]. Keyed by partition so
+   * cache rebuilds, task retries, and speculative attempts stay
+   * idempotent: a partition's map is deterministic, and re-adding it
+   * OVERWRITES rather than double-counts. Every host with a heap-surviving row appears (count 0
    * if all its offers were rejected) — exactly the host set the groupBy
    * produced, so the downstream refill algebra writes identical state.
    */

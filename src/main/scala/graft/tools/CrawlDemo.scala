@@ -47,9 +47,6 @@ object CrawlDemo {
     val maxRounds = flag("--rounds").map(_.toInt).getOrElse(5)
     val politenessRate = flag("--politeness-rate").map(_.toDouble).getOrElse(0.0)
     val politenessBurst = flag("--politeness-burst").map(_.toDouble).getOrElse(1.0)
-    // LSM delta pool: K>1 appends per-bucket delta files for K-1 of every
-    // K rounds (O(new urls + popped) commit I/O), compacting on the K-th
-    val poolDelta = flag("--pool-delta").map(_.toInt).getOrElse(1)
 
     val spark = SparkSession.builder()
       .master(s"local[$workers]")
@@ -64,8 +61,7 @@ object CrawlDemo {
     val crawler = new Crawler(spark, workDir, sim,
       CrawlConfig(numBuckets = 16, perHostBudget = 3, perBucketBudget = 200,
         sampler = sampler, unique = unique,
-        politenessRate = politenessRate, politenessBurst = politenessBurst,
-        poolDeltaRounds = poolDelta))
+        politenessRate = politenessRate, politenessBurst = politenessBurst))
 
     // seeds: domain files (https-preferred scan, S2/S3) else synthetic
     val domainFiles = args.sliding(2).collect {

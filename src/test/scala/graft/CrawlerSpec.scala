@@ -206,6 +206,37 @@ class CrawlerSpec extends AnyFunSuite {
     assert(c2.docs().count() == cu.docs().count())
   }
 
+  test("poolDeltaRounds > 1 is rejected at construction: the delta pool was removed") {
+    val sim = new FetchSim(numHosts = 4, pagesPerHost = 4)
+    val e = intercept[IllegalArgumentException] {
+      new Crawler(spark, tmpDir(), sim, CrawlConfig(poolDeltaRounds = 3))
+    }
+    assert(e.getMessage.contains("delta pool was removed"), e.getMessage)
+    // 0 and 1 both mean the one commit path (the frozen Bench passes 1)
+    Seq(0, 1).foreach(k => new Crawler(spark, tmpDir(), sim, CrawlConfig(poolDeltaRounds = k)))
+  }
+
+  test("manifest: a snapshot left mid-delta by an older build is refused, not truncated") {
+    import graft.sources.IcebergishTable
+    import java.nio.file.{Files, Paths}
+    val bucket = """"buckets":{"0":{"dir":"data-r1-x","rows":5}}}"""
+    // compact == round: an older build's full commit — no live deltas, reads fine
+    val full = IcebergishTable.parseManifest(s"""{"round":3,"rows":5,"compact":3,$bucket""")
+    assert(full.round == 3 && full.rows == 5 && full.buckets(0).dir == "data-r1-x")
+    // this build never writes the field
+    assert(!IcebergishTable.renderManifest(full).contains("compact"))
+    assert(IcebergishTable.parseManifest(IcebergishTable.renderManifest(full)) == full)
+    // compact < round: rounds (1, 3] live only in delta files this build
+    // cannot read — the snapshot must fail loudly, naming the manifest
+    val dir = tmpDir()
+    Files.writeString(Paths.get(dir, "manifest.json"),
+      s"""{"round":3,"rows":5,"compact":1,$bucket""")
+    val table = new IcebergishTable(dir, Frontier.schema)
+    val e = intercept[IllegalStateException](table.currentSnapshot())
+    assert(e.getMessage.contains(Paths.get(dir, "manifest.json").toString), e.getMessage)
+    assert(e.getMessage.contains("(1, 3]"), e.getMessage)
+  }
+
   test("synthetic web crawl: frontier grows, seen set exact (no dupes), lineage written") {
     val dir = tmpDir()
     val sim = new FetchSim(numHosts = 20, pagesPerHost = 10)

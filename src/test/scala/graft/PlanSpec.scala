@@ -163,47 +163,6 @@ class PlanSpec extends AnyFunSuite {
       windowed.collect().map(_.getString(0)).sorted.toSeq)
   }
 
-  test("delta pop: sort-free scan stage, exactly ONE exchange, one in-partition sort; ≡ window pop") {
-    import spark.implicits._
-    // the LSM pool's two-stage pop must cost exactly one O(popped+delta)
-    // exchange: stage 1 streams per-file prefixes with NO sort, stage 2
-    // repartitions once onto the bucket token and sorts in-partition
-    val dir = java.nio.file.Files.createTempDirectory("graft-delta-plan").toString
-    val table = new graft.sources.IcebergishTable(dir, Frontier.schema,
-      sortCols = Seq("host", "depth", "discovered_at", "url"),
-      dropCols = Seq("host", "host_bucket", "last_visit"))
-    def cands(urls: Seq[(String, Int, Long)]) = Frontier.normalizeCandidates(
-      urls.toDF("url", "depth", "discovered_at"), 8)
-    table.commit(cands((0 until 150).map(i => (s"http://h${i % 7}.test/p/$i", 0, i.toLong))), 0)
-    val emptyF = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Frontier.schema)
-    val delta = Frontier.mergeRound(emptyF,
-      cands((150 until 200).map(i => (s"http://h${i % 7}.test/p/$i", 1, i.toLong))),
-      emptyF, 1, 8)
-    table.appendDelta(delta, 1, 0L)
-    val pool = Frontier.restorePool(table.read(spark), 8)
-    val flagged = Frontier.popSortedFifoDeltaFlagged(
-      Frontier.popDeltaScan(pool, 2), 8, 2, 1000, None, 1L, 0.0, 1.0)
-    val plan = planOf(flagged)
-    val exchanges = "Exchange".r.findAllIn(plan).length
-    assert(exchanges == 1, s"delta pop must shuffle exactly once:\n$plan")
-    val sorts = plan.linesIterator.count(l =>
-      l.trim.startsWith("+- Sort") || l.trim.startsWith("Sort "))
-    assert(sorts == 1, s"delta pop must sort only in-partition after the exchange:\n$plan")
-    // the sort sits ABOVE nothing but the exchange (stage 1 is sort-free):
-    // in the formatted top-down plan the single Sort line must appear
-    // BEFORE the single Exchange line
-    val lines = plan.linesIterator.toSeq
-    val sortIdx = lines.indexWhere(l => l.contains("Sort "))
-    val exIdx = lines.indexWhere(l => l.contains("Exchange"))
-    assert(sortIdx >= 0 && exIdx > sortIdx,
-      s"the only Sort must be post-exchange (stage 2):\n$plan")
-    // and the popped set equals the classic window form over the same pool
-    val windowed = Frontier.pop(pool, "fifo", 42L, 2, 1000)
-    assert(flagged.select("url").collect().map(_.getString(0)).sorted.toSeq ==
-      windowed.select("url").collect().map(_.getString(0)).sorted.toSeq)
-  }
-
   test("frontier merge is a pure HashAggregate — no SortAggregate, no join, one bucket exchange") {
     import spark.implicits._
     // dedup=false inputs: no upstream aggregation, so every exchange in the
