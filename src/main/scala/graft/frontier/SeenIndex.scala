@@ -93,6 +93,11 @@ object SeenIndex {
     e != null && e.set.contains(url)
   }
 
+  /** The newest archive round resident for `bucket` under `root`; -1 when
+    * nothing is loaded. Loads only move it forward. */
+  def residentRound(root: String, bucket: Int): Int =
+    Option(cache.get((root, bucket))).map(_.maxRound).getOrElse(-1)
+
   private def entryFor(root: String, cutoff: Int, bucket: Int): Entry = {
     val cur = currentRoot.get()
     if (cur != root) synchronized {
@@ -118,15 +123,32 @@ object SeenIndex {
     loadUrlDir(
       java.nio.file.Paths.get(root, s"round=$r", s"host_bucket=$bucket").toString, into)
 
+  /** The one read conf every slice load shares: no defaults, only the
+    * `url` projection. A defaults-loading `new Configuration()` per
+    * (bucket, round) slice re-parsed the `*-default.xml` resources of the
+    * jars on every load — `ParquetReader.builder(readSupport, path)` builds
+    * one even when a conf is passed later, so slices open through
+    * [[UrlReader]] on a java.nio [[org.apache.parquet.io.LocalInputFile]]
+    * instead (no Hadoop FileSystem either). Readers only read the conf. */
+  private lazy val urlReadConf = {
+    val c = new org.apache.hadoop.conf.Configuration(false)
+    c.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA,
+      "message g { optional binary url (UTF8); }")
+    new org.apache.parquet.conf.HadoopParquetConfiguration(c)
+  }
+
+  private final class UrlReader(file: java.nio.file.Path)
+      extends org.apache.parquet.hadoop.ParquetReader.Builder[org.apache.parquet.example.data.Group](
+        new org.apache.parquet.io.LocalInputFile(file), urlReadConf) {
+    override protected def getReadSupport() = new org.apache.parquet.hadoop.example.GroupReadSupport()
+  }
+
   /** Load the `url` column of every parquet file under `dir` into `into`.
     * Missing dirs are a no-op. */
   private def loadUrlDir(dirPath: String,
       into: java.util.Set[UTF8String]): Unit = {
     val dir = java.nio.file.Paths.get(dirPath)
     if (!java.nio.file.Files.exists(dir)) return
-    val conf = new org.apache.hadoop.conf.Configuration()
-    conf.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA,
-      "message g { optional binary url (UTF8); }")
     // materialize + CLOSE the listing stream: an unclosed Files.list holds
     // the directory fd until GC — at one listing per (bucket, round) per
     // executor these leaks exhaust the fd limit mid-campaign (measured)
@@ -142,11 +164,7 @@ object SeenIndex {
     while (it.hasNext) {
       val f = it.next()
       if (f.getFileName.toString.endsWith(".parquet")) {
-        val reader = org.apache.parquet.hadoop.ParquetReader
-          .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
-            new org.apache.hadoop.fs.Path(f.toString))
-          .withConf(conf)
-          .build()
+        val reader = new UrlReader(f).build()
         try {
           var g = reader.read()
           while (g != null) {

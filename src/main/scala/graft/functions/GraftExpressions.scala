@@ -796,62 +796,6 @@ object GraftExpressions {
     override protected def withNewChildInternal(c: Expression): Expression = copy(vec = c)
   }
 
-  /**
-   * Per-bucket row counts as ONE aggregate value: `bucket_counts(b, n)`
-   * yields an `array<long>` of length `n` where slot `i` counts the rows
-   * with `b = i` (null and out-of-range inputs are skipped — so
-   * `bucket_counts(when(cond, b), n)` counts only the `cond` rows).
-   *
-   * Built for [[org.apache.spark.sql.Observation]]: the crawler's
-   * per-round, per-bucket lineage counts ride the docs-write job as an
-   * observed metric instead of a SEPARATE round-sized aggregation job —
-   * the pop pass that job paid is gone (a fixed, non-scaling cost per
-   * round; see Crawler.round). A map-typed groupBy would shuffle; this is
-   * a single O(numBuckets) buffer merged driver-side, the same shape as
-   * Spark's own CountMinSketchAgg.
-   */
-  case class BucketCounts(child: Expression, numBuckets: Int,
-      override val mutableAggBufferOffset: Int = 0,
-      override val inputAggBufferOffset: Int = 0)
-      extends org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate[Array[Long]]
-      with org.apache.spark.sql.catalyst.trees.UnaryLike[Expression] {
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def nullable: Boolean = false
-    override def prettyName: String = "bucket_counts"
-    override def createAggregationBuffer(): Array[Long] = new Array[Long](numBuckets)
-    override def update(buf: Array[Long], row: org.apache.spark.sql.catalyst.InternalRow): Array[Long] = {
-      val v = child.eval(row)
-      if (v != null) {
-        val b = v.asInstanceOf[Int]
-        if (b >= 0 && b < numBuckets) buf(b) += 1
-      }
-      buf
-    }
-    override def merge(a: Array[Long], b: Array[Long]): Array[Long] = {
-      var i = 0
-      while (i < a.length) { a(i) += b(i); i += 1 }
-      a
-    }
-    override def eval(buf: Array[Long]): Any =
-      new org.apache.spark.sql.catalyst.util.GenericArrayData(buf)
-    override def serialize(buf: Array[Long]): Array[Byte] = {
-      val bb = java.nio.ByteBuffer.allocate(8 * buf.length)
-      bb.asLongBuffer().put(buf)
-      bb.array()
-    }
-    override def deserialize(bytes: Array[Byte]): Array[Long] = {
-      val out = new Array[Long](bytes.length / 8)
-      java.nio.ByteBuffer.wrap(bytes).asLongBuffer().get(out)
-      out
-    }
-    override def withNewMutableAggBufferOffset(o: Int): BucketCounts =
-      copy(mutableAggBufferOffset = o)
-    override def withNewInputAggBufferOffset(o: Int): BucketCounts =
-      copy(inputAggBufferOffset = o)
-    override protected def withNewChildInternal(c: Expression): BucketCounts =
-      copy(child = c)
-  }
-
   /** Register all custom functions for SQL + `call_function` use. Idempotent. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
@@ -901,12 +845,6 @@ object GraftExpressions {
       es => SignBucketsMd5(es(0),
         es(1).eval(org.apache.spark.sql.catalyst.InternalRow.empty).asInstanceOf[Int],
         es(2).eval(org.apache.spark.sql.catalyst.InternalRow.empty).asInstanceOf[Int]),
-      "scala_udf")
-    // aggregate: the analyzer wraps a bare AggregateFunction builder in
-    // AggregateExpression; arg1 must be a foldable int literal
-    reg.createOrReplaceTempFunction("bucket_counts",
-      es => BucketCounts(es(0),
-        es(1).eval(org.apache.spark.sql.catalyst.InternalRow.empty).asInstanceOf[Int]),
       "scala_udf")
     // Spark's own codegen'd probe (BloomFilterMightContain — what a
     // runtime-filter join injects): arg0 = serialized sketch BloomFilter
@@ -960,8 +898,6 @@ object GraftExpressions {
     call_function("sign_buckets_md5", vec,
       org.apache.spark.sql.functions.lit(tables),
       org.apache.spark.sql.functions.lit(planesPerTable))
-  def bucket_counts(b: Column, n: Int): Column =
-    call_function("bucket_counts", b, org.apache.spark.sql.functions.lit(n))
   def seen_index_contains(url: Column, root: String, cutoff: Int): Column =
     call_function("seen_index_contains", url,
       org.apache.spark.sql.functions.lit(root), org.apache.spark.sql.functions.lit(cutoff))

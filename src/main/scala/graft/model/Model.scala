@@ -141,14 +141,14 @@ object Model {
       mime_determined: String,
       body_text: String) // decoded body when text/*, else ""
 
-  /** Fetch-stage output row: the Doc plus the scheduling metadata the
-    * frontier expansion needs (links, depth, error). */
+  /** Fetch-stage output row = one docs-file row: the Doc plus the
+    * scheduling metadata the frontier expansion needs (links, depth,
+    * error). The round is the docs partition dir, not a column. */
   case class CrawlOut(
       doc_id: String,
       url: String,
       host: String,
       depth: Int,
-      round: Int,
       spans: Seq[Span],
       links: Seq[String],
       error: String,

@@ -4,7 +4,7 @@ import graft.fetch.{Correlate, FetchSim}
 import graft.frontier.Frontier
 import graft.functions.UrlFns
 import graft.model.Model._
-import graft.sources.IcebergishTable
+import graft.sources.{DirectParquet, IcebergishTable}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
@@ -14,16 +14,30 @@ import java.nio.file.{Files, Paths}
  * (/root/reference/app/cmd/run.go:46-159 + worker.go:1224-1296) as a
  * sequence of deterministic micro-batch "fetch rounds":
  *
- *   pop(budget) → salted-shuffle fetch (mapPartitions) → correlate →
- *   docs append → frontier expand (dedup) + visit marks → atomic commit →
+ *   pop(budget) → fetch task (fetch → correlate → docs file + seen-archive
+ *   slices) → frontier expand (dedup) + visit marks → atomic commit →
  *   lineage metrics.
  *
  * One round = one micro-batch (the reference's analogue is the
  * 1-token-per-worker ready loop, worker.go:1238-1253; our budget is
- * per-host × per-bucket instead of per-worker). Everything is replayable:
- * a torn round leaves the frontier manifest un-bumped, and round N's docs
- * partition is overwritten when N is re-run (idempotent replay — the
- * SQLite-transaction analogue of store/store.go:69-105).
+ * per-host × per-bucket instead of per-worker): the fetch job, then the
+ * frontier commit's jobs (merge exchange + bucket-file write); a gated
+ * round's politeness state is written by the driver, not by a job.
+ *
+ * Write protocol: every file a round writes goes through
+ * [[graft.sources.DirectParquet]] (deterministic `part-<partition>`
+ * names, temp file + atomic rename, no Hadoop committer or FileSystem),
+ * and the round has exactly two commit points — the overwrite of the
+ * round directories (`docs/round=r` and `seen/round=r`, cleared before
+ * the fetch job) and the frontier manifest rename, which is what makes
+ * round r visible. Everything is replayable: a torn round leaves the
+ * manifest un-bumped, readers filter on the manifest round, the
+ * SeenIndex only loads rounds before the running one, and re-running
+ * round N overwrites its directories (idempotent replay — the
+ * SQLite-transaction analogue of store/store.go:69-105). The Hadoop
+ * committer was dropped because the checksummed local FileSystem forked
+ * a `chmod` per file and directory and every write task deserialized
+ * the whole session Hadoop conf — the round's largest waste.
  *
  * Scale design (10^10 frontier / 1000 executors):
  *  - the fetch shuffle keys on `host#salt` — host affinity for politeness
@@ -200,21 +214,6 @@ class Crawler(
     rows + seenRows
   }
 
-  /** Recursive delete of an uncommitted round artifact (no-op if absent). */
-  private def deleteDir(p: java.nio.file.Path): Unit = {
-    if (Files.isDirectory(p)) {
-      // close the listing stream eagerly — each Files.list holds an open
-      // directory fd until closed (GC-reliant release leaks fds across a
-      // deep recursive delete)
-      val s = Files.list(p)
-      try {
-        val it = s.iterator()
-        while (it.hasNext) deleteDir(it.next())
-      } finally s.close()
-    }
-    Files.deleteIfExists(p): Unit
-  }
-
   /** Run one fetch round; returns stats (popped==0 ⇒ frontier exhausted). */
   def round(): RoundStats = {
     val r = lastRound + 1
@@ -291,31 +290,12 @@ class Crawler(
       }).persist()
     val popped = if (gated) cached.filter(col("admit")).drop("admit") else cached
 
-    // --- per-bucket lineage counts RIDE the docs-write job ---
-    // The round-2 shape paid a SEPARATE round-sized aggregation job here
-    // just to collect per-bucket pop counts (and, gated, the offered/
-    // admitted split) before the fetch — a full pop pass per round of
-    // pure fixed cost, exactly the non-scaling term the N→4N metric
-    // punishes. The counts are now an Observation on the cached pop
-    // output inside the SAME job that fetches and writes docs
-    // (`bucket_counts` — a single O(numBuckets) typed aggregate, see
-    // GraftExpressions). The cache materializes during that job; the
-    // overlapped archive/state writes below start AFTER it, so nothing
-    // ever computes the pop twice.
-    graft.functions.GraftExpressions.register(spark)
-    val obsCounts = org.apache.spark.sql.Observation(s"round-$r-counts")
-    val nb = cfg.numBuckets
-    import graft.functions.GraftExpressions.bucket_counts
-    val observedPop =
-      if (gated)
-        cached.observe(obsCounts,
-          bucket_counts(col("host_bucket"), nb).as("offered_pb"),
-          bucket_counts(when(col("admit"), col("host_bucket")), nb).as("admitted_pb"))
-          .filter(col("admit")).drop("admit")
-      else
-        cached.observe(obsCounts, bucket_counts(col("host_bucket"), nb).as("offered_pb"))
-
-    // --- fetch stage: per-partition pure fetch, in place by default ---
+    // --- the fetch job: pop → fetch → correlate → docs + seen files ---
+    // ONE task per pop partition fetches its admitted rows and writes its
+    // docs file and its buckets' seen slices (see Crawler.fetchTask); its
+    // commit message carries the per-bucket offered/admitted and the ok/err
+    // counts, so the round needs no separate count or archive job.
+    //
     // The pop output is ALREADY host-clustered and balanced: bucket files
     // cluster by hash(host), and the per-host budget bounds any host at
     // `perHostBudget` rows/round, so the worst bucket partition is
@@ -324,90 +304,53 @@ class Crawler(
     // with ZERO shuffle. `saltFactor > 0` opts into the salted-key shuffle
     // for regimes where one host's round share is unbounded (huge per-host
     // budgets, unique=false re-pops — north rule: explicit skew handling);
-    // there `host#salt` splits a hot host across saltFactor partitions.
-    val simB = sim
-    val roundB = r
-    val storeRoot = if (cfg.storeFiles) s"$workDir/store" else null
-    val fetchInput =
-      if (cfg.saltFactor > 0)
-        observedPop
-          .withColumn("salt_key",
-            concat(col("host"), lit("#"), pmod(xxhash64(col("url")), lit(cfg.saltFactor))))
-          .repartition(spark.sparkContext.defaultParallelism * 2, col("salt_key"))
-      else observedPop
-    val out = fetchInput
-      .select(col("url"), col("depth"))
-      .as[(String, Int)]
-      .mapPartitions { it =>
-        // content-addressed side store (O9/O10): allowlisted bodies gzip'd
-        // under bodies/<2ch>/<sha>, screenshot bytes under their media_ref —
-        // written DURING the fetch pass like the reference's SaveSession
-        // (store/store.go:92-101); writes are idempotent so round replay
-        // after a torn commit just re-stores the same keys
-        val store = if (storeRoot != null) new graft.sources.FileStore(storeRoot) else null
-        // one render buffer per partition: docFromSession appends every
-        // span payload into it (JSON combinators measured ~10% of bench
-        // CPU / ~25% of allocation at local[32] — JFR, round 4)
-        val sb = new java.lang.StringBuilder(1 << 14)
-        it.map { case (url, depth) =>
-          val fr = simB.fetch(url)
-          val s = Correlate.sessionFromFetch(
-            "d" + UrlFns.sha256Hex(url).substring(0, 16), fr)
-          if (store != null) {
-            fr.bodies.foreach(b => store.storeBody(b.body))
-            fr.screenshots.zip(fr.screenshot_bytes).foreach {
-              case (ref, bytes) => store.storeScreenshot(ref, bytes)
-            }
-          }
-          val doc = Correlate.docFromSession(s, sb)
-          CrawlOut(doc.doc_id, url, s.host, depth, roundB,
-            doc.spans, s.links, s.error,
-            s.navigate_ts, s.loaded_ts, s.terminated_ts)
-        }
-      }
-
-    // --- sink: ONE wide round file (spans + session metadata + links).
-    //     The fetch output is written exactly once — no cache build, no
-    //     second pass over the fat spans column; downstream consumers
-    //     (session stats, frontier expansion) read back with column
-    //     pruning and never touch `spans`. `round` lives only in the
-    //     partition dir (dropped from data to avoid the dup-column clash).
-    //     ok/err outcome counters ride the SAME job as Observation metrics
-    //     (round 1 paid a separate re-scan job for them).
-    val obs = org.apache.spark.sql.Observation(s"round-$r-outcomes")
-    out.drop("round")
-      .observe(obs,
-        sum(when(col("error") === "", 1L).otherwise(0L)).as("ok"),
-        sum(when(col("error") =!= "", 1L).otherwise(0L)).as("err"))
-      .write.mode(SaveMode.Overwrite).options(writerOptions)
-      .parquet(s"$docsDir/round=$r")
-    val obsRow = obs.get
-    def obsLong(k: String): Long =
-      Option(obsRow.getOrElse(k, null)).map(_.asInstanceOf[Long]).getOrElse(0L)
-    val fetchedOk = obsLong("ok")
-    val errs = obsLong("err")
-
-    // --- counts from the ride-along observation (see above) ---
-    val countsRow = obsCounts.get
-    def pbArr(k: String): IndexedSeq[Long] =
-      countsRow.getOrElse(k, null) match {
-        case null => IndexedSeq.empty
-        case s: scala.collection.Seq[_] => s.map(_.asInstanceOf[Long]).toIndexedSeq
-        case a: Array[Long] => a.toIndexedSeq
-      }
-    val offeredPb = pbArr("offered_pb")
-    val admittedPb = if (gated) pbArr("admitted_pb") else offeredPb
+    // there `host#salt` splits a hot host across saltFactor partitions
+    // (a bucket's seen slice then holds one file per fetch task).
+    //
+    // Round-directory overwrite: both round-r dirs are cleared first, so a
+    // replayed (torn) round never mixes its files with a stray attempt's.
+    // They stay invisible until the manifest says r (reads filter on the
+    // manifest round; the SeenIndex loads only rounds < the running one).
+    val nb = cfg.numBuckets
+    val fetchInput = {
+      val flagged = cached.select(col("url"), col("host"), col("host_bucket"),
+        col("depth"), col("discovered_at"),
+        (if (gated) col("admit") else lit(true)).as("admit"))
+      val spread =
+        if (cfg.saltFactor > 0)
+          flagged
+            .withColumn("salt_key",
+              concat(col("host"), lit("#"), pmod(xxhash64(col("url")), lit(cfg.saltFactor))))
+            .repartition(spark.sparkContext.defaultParallelism * 2, col("salt_key"))
+        else flagged
+      spread.select("url", "host_bucket", "depth", "discovered_at", "admit")
+    }
+    DirectParquet.clearDir(Paths.get(s"$docsDir/round=$r"))
+    DirectParquet.clearDir(Paths.get(s"$seenDir/round=$r"))
+    val fetched = DirectParquet.runJob(fetchInput)(Crawler.fetchTask(sim,
+      if (cfg.storeFiles) s"$workDir/store" else null,
+      s"$docsDir/round=$r", s"$seenDir/round=$r", nb,
+      DirectParquet.Settings.resolve(spark, Crawler.docsSchema, writerOptions),
+      DirectParquet.Settings.resolve(spark,
+        org.apache.spark.sql.types.StructType(Seq(0, 2, 3).map(fetchInput.schema(_))),
+        writerOptions)))
+    def perBucket(f: Crawler.FetchCommit => Array[Long]): IndexedSeq[Long] =
+      (0 until nb).map(b => fetched.iterator.map(m => f(m)(b)).sum)
+    val offeredPb = perBucket(_.offered)
+    val admittedPb = perBucket(_.admitted)
+    val fetchedOk = fetched.iterator.map(_.ok).sum
+    val errs = fetched.iterator.map(_.err).sum
     val offeredN = offeredPb.sum
     val perBucketCounts: Seq[(Int, Long)] =
       admittedPb.zipWithIndex.collect { case (c, b) if c > 0 => (b, c) }
     val poppedN = perBucketCounts.map(_._2).sum
 
-    // overlapped driver-thread writes (politeness state + seen archive):
-    // started only now, AFTER the docs job materialized the pop cache (so
-    // they never recompute the pop in parallel); joined before the commit's
-    // manifest RENAME so a torn round still replays against round r-1's
-    // state (a stray round-r state/archive dir is harmless — replay
-    // overwrites it; the manifest round gates visibility).
+    // overlapped driver-thread write (politeness state): started only now,
+    // AFTER the fetch job materialized the pop cache (so it never
+    // recomputes the pop in parallel); joined before the commit's manifest
+    // RENAME so a torn round still replays against round r-1's state (a
+    // stray round-r state dir is harmless — replay overwrites it; the
+    // manifest round gates visibility).
     var stateWrite: Option[Thread] = None
     @volatile var stateWriteError: Throwable = null
     def joinStateWrite(): Unit = {
@@ -450,7 +393,7 @@ class Crawler(
                 .map(e => (e.getKey, e.getValue._1, e.getValue._2))
                 .toArray.sortBy(_._1)
             }
-            graft.streaming.Politeness.writeStateParquet(
+            graft.streaming.Politeness.writeStateParquet(spark,
               s"$workDir/politeness/round-$r", rows)
             politenessCache =
               if (merged.size > broadcastStateMax) None else Some((r, merged))
@@ -471,16 +414,12 @@ class Crawler(
     // offered = pool rows the pop stage produced BEFORE the politeness
     // throttle — it distinguishes "frontier exhausted" (stop) from
     // "everything throttled this round" (advance and let tokens refill).
-    // The docs job necessarily ran before `offered` was known (the counts
-    // ride it), so an exhausted-pool round has left an EMPTY, uncommitted
-    // docs/round=r dir. Delete it rather than leave it "invisible": how
-    // many post-exhaustion rounds fire depends on the caller's tick
-    // schedule (StreamingCrawler's processAllAvailable), and the
-    // torn-round byte-identity invariant compares on-disk trees — a
-    // schedule-dependent stray would flake it (StreamingSpec caught this).
+    // An exhausted-pool round wrote no file and left no round-r dir (the
+    // writers open lazily, and the round dirs were cleared before the
+    // job) — nothing schedule-dependent stays on disk for the torn-round
+    // byte-identity invariant to trip on (StreamingSpec).
     if (offeredN == 0) {
       cached.unpersist()
-      deleteDir(Paths.get(s"$docsDir/round=$r"))
       return RoundStats(r, 0, 0, 0, 0, math.max(frontierRowsHint, 0L), 0)
     }
     if (poppedN == 0) {
@@ -495,36 +434,7 @@ class Crawler(
       return RoundStats(r, 0, 0, 0, 0, rows, offeredN)
     }
 
-    // --- seen-archive append: the popped rows leave the pool this round.
-    //     Written straight from the popped CACHE (no shuffle, immutable
-    //     round dir — the docs pattern), on a driver thread overlapped
-    //     with the expansion + merge + commit-write jobs; joined before
-    //     the manifest rename so a torn round replays it idempotently
-    //     (the overwrite of round=r).
-    @volatile var seenWriteError: Throwable = null
-    // partitionBy(host_bucket): each archive round is laid out per bucket,
-    // so the SeenIndex (partition-local exact membership) can read ONLY
-    // its own bucket's slice, column-pruned to `url`. SLIM data files:
-    // host/last_visit are derivable (see seenWithRound) and never written.
-    val seenWrite = new Thread(() =>
-      try popped.select("url", "host_bucket", "depth", "discovered_at")
-        .write.mode(SaveMode.Overwrite).options(writerOptions)
-        .partitionBy("host_bucket")
-        .parquet(s"$seenDir/round=$r")
-      catch { case e: Throwable => seenWriteError = e })
-    seenWrite.setName(s"seen-archive-r$r")
-    seenWrite.start()
-    // the overlapped politeness-state and seen-archive writes must land
-    // BEFORE the atomic manifest rename (torn-round replay consistency) —
-    // the hook joins them as late as possible, after the commit's own
-    // write + footer jobs, maximizing the overlap window
-    val joinOverlapped = () => {
-      joinStateWrite()
-      seenWrite.join()
-      if (seenWriteError != null) throw seenWriteError
-    }
-
-    val written = spark.read.schema(out.drop("round").schema)
+    val written = spark.read.schema(Crawler.docsSchema)
       .parquet(s"$docsDir/round=$r")
 
     // --- frontier expansion (urlStore.Add of Page.DocumentURLs,
@@ -618,6 +528,7 @@ class Crawler(
     val frontierDirty =
       if (dense) pool
       else pool.filter(col("host_bucket").isin(dirty.toSeq.map(Int.box): _*))
+    graft.functions.GraftExpressions.register(spark)
     val dropArchived = (df: DataFrame) => df.filter(
       !graft.functions.GraftExpressions.seen_index_contains(col("url"), seenDir, r - 1))
     // optional per-partition cuckoo refinement (north rule): provably-new
@@ -636,7 +547,7 @@ class Crawler(
       } else dropArchived(Frontier.mergeRound(frontierDirty, cands, popped, r, cfg.numBuckets))
     val poolNext = merged.filter(col("last_visit") === 0L)
     val poolRows = frontierTable.commit(poolNext, r, Some(dirty),
-      preClustered = !cfg.useSeenFilter, beforeRename = joinOverlapped)
+      preClustered = !cfg.useSeenFilter, beforeRename = () => joinStateWrite())
     seenRows += poppedN
     val frontierRows = poolRows + seenRows
     if (cfg.useSeenFilter)
@@ -679,12 +590,15 @@ class Crawler(
   }
 
   /** All committed wide round rows (torn rounds excluded by the manifest
-    * round). */
+    * round). The explicit schema skips footer inference and reads a round
+    * that wrote no docs file (every offer throttled) as zero rows. */
   def docsWide(): DataFrame = {
     val r = lastRound
     if (r < 1 || !Files.exists(Paths.get(docsDir)))
       return spark.emptyDataFrame
-    spark.read.parquet(docsDir).filter(col("round") <= r)
+    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+    spark.read.schema(StructType(Crawler.docsSchema :+ StructField("round", IntegerType)))
+      .parquet(docsDir).filter(col("round") <= r)
   }
 
   /** The `input_hint`-shaped docs table (doc_id, spans [, round]). */
@@ -713,6 +627,97 @@ class Crawler(
 }
 
 object Crawler {
+  import DirectParquet.{PartWriter, Settings}
+  import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
+  import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+
+  private lazy val crawlOutEncoder = ExpressionEncoder[CrawlOut]()
+
+  /** Columns of a docs file (`round` is the partition dir). */
+  lazy val docsSchema: org.apache.spark.sql.types.StructType = crawlOutEncoder.schema
+
+  /** A fetch task's commit message: per-bucket offered and admitted pop
+    * rows and the fetch outcomes (its files are committed by then). */
+  final case class FetchCommit(offered: Array[Long], admitted: Array[Long],
+      ok: Long, err: Long)
+    extends org.apache.spark.sql.connector.write.WriterCommitMessage
+
+  /**
+   * The fetch task over rows (url, host_bucket, depth, discovered_at,
+   * admit): counts every offered row, and for each admitted one
+   *  - appends (url, depth, discovered_at) to its bucket's seen-archive
+   *    slice `seenDir/host_bucket=b/part-<p>.parquet` — the popped rows
+   *    leave the pool this round; SLIM files (see Crawler.seenWithRound),
+   *    laid out per bucket so the SeenIndex reads only its own bucket;
+   *  - fetches and correlates it, and appends the page to the task's ONE
+   *    wide docs file `docsDir/part-<p>.parquet` (spans + session metadata
+   *    + links, written exactly once; consumers read it back with column
+   *    pruning).
+   * Files commit only after the last row; a failure aborts them all (the
+   * retry rewrites the same names).
+   */
+  def fetchTask(sim: FetchSim, storeRoot: String, docsDir: String,
+      seenDir: String, numBuckets: Int, docs: Settings, seen: Settings)
+      : (Int, Iterator[InternalRow]) => FetchCommit = (_, rows) => {
+    // content-addressed side store (O9/O10): allowlisted bodies gzip'd
+    // under bodies/<2ch>/<sha>, screenshot bytes under their media_ref —
+    // written DURING the fetch pass like the reference's SaveSession
+    // (store/store.go:92-101); writes are idempotent so round replay
+    // after a torn commit just re-stores the same keys
+    val store = if (storeRoot != null) new graft.sources.FileStore(storeRoot) else null
+    // one render buffer per partition: docFromSession appends every span
+    // payload into it (JSON combinators measured ~10% of bench CPU / ~25%
+    // of allocation at local[32] — JFR, round 4)
+    val sb = new java.lang.StringBuilder(1 << 14)
+    val docRow = crawlOutEncoder.createSerializer()
+    val seenRow = ProjectingInternalRow(seen.schema, Seq(0, 2, 3))
+    val offered = new Array[Long](numBuckets)
+    val admitted = new Array[Long](numBuckets)
+    var ok = 0L
+    var err = 0L
+    var docsW: PartWriter = null
+    val seenW = new java.util.TreeMap[Integer, PartWriter]()
+    def writers: Seq[PartWriter] = {
+      import scala.jdk.CollectionConverters._
+      Option(docsW).toSeq ++ seenW.values.asScala
+    }
+    try {
+      while (rows.hasNext) {
+        val row = rows.next()
+        val b = row.getInt(1)
+        offered(b) += 1
+        if (row.getBoolean(4)) {
+          admitted(b) += 1
+          var sw = seenW.get(b)
+          if (sw == null) {
+            sw = DirectParquet.taskWriter(seen,
+              Paths.get(seenDir, s"host_bucket=$b"), b)
+            seenW.put(b, sw)
+          }
+          seenRow.project(row)
+          sw.write(seenRow)
+          val url = row.getUTF8String(0).toString
+          val fr = sim.fetch(url)
+          val s = Correlate.sessionFromFetch(
+            "d" + UrlFns.sha256Hex(url).substring(0, 16), fr)
+          if (store != null) {
+            fr.bodies.foreach(b => store.storeBody(b.body))
+            fr.screenshots.zip(fr.screenshot_bytes).foreach {
+              case (ref, bytes) => store.storeScreenshot(ref, bytes)
+            }
+          }
+          val doc = Correlate.docFromSession(s, sb)
+          if (s.error == "") ok += 1 else if (s.error != null) err += 1
+          if (docsW == null) docsW = DirectParquet.taskWriter(docs, Paths.get(docsDir))
+          docsW.write(docRow(CrawlOut(doc.doc_id, url, s.host, row.getInt(2),
+            doc.spans, s.links, s.error, s.navigate_ts, s.loaded_ts, s.terminated_ts)))
+        }
+      }
+      writers.foreach(_.commit())
+      FetchCommit(offered, admitted, ok, err)
+    } catch { case e: Throwable => DirectParquet.abortAll(writers, e) }
+  }
+
   /** Advisory-exact ever-seen peek for the link-thinning emission filter:
     * derive the url's bucket exactly like [[Frontier.hostBucket]]
     * (xxhash64 seed 42 of the host, pmod numBuckets) and probe the

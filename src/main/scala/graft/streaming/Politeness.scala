@@ -111,62 +111,37 @@ object Politeness {
     def flattened: java.util.HashMap[String, java.lang.Long] = v.flattened
   }
 
+  /** The politeness-state file schema (host, tokens, last_round). */
+  val stateSchema: org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(StructField("host", StringType, nullable = false),
+      StructField("tokens", DoubleType, nullable = false),
+      StructField("last_round", LongType, nullable = false)))
+  }
+
   /**
-   * Driver-side politeness-state parquet writer (schema host/tokens/
-   * last_round, one file, uncompressed, fixed name): the state table is
-   * O(hosts) rows the DRIVER already holds, and writing it through a
+   * Driver-side politeness-state parquet writer (one uncompressed file,
+   * fixed name, through [[graft.sources.DirectParquet]]): the state table
+   * is O(hosts) rows the DRIVER already holds, and writing it through a
    * 1-task Spark job queued the task behind whatever stage was running —
    * seconds of wall for ~2 MB of bytes. Deterministic bytes (host-sorted
    * input, fixed writer config) keep torn-round replay byte-identical.
-   *
-   * Filesystem note: the dir clear uses java.nio (local/NFS paths only —
-   * the same assumption IcebergishTable's manifest writes make), but the
-   * parquet writer resolves through the active session's Hadoop conf so
-   * spark.hadoop.* tuning applies like every other writer's.
+   * The previous content of `dir` (a torn round's) is replaced.
    */
-  def writeStateParquet(dir: String, rows: Array[(String, Double, Long)]): Unit = {
-    import org.apache.parquet.example.data.simple.SimpleGroupFactory
-    import org.apache.parquet.hadoop.example.ExampleParquetWriter
-    import org.apache.parquet.hadoop.metadata.CompressionCodecName
-    import org.apache.parquet.schema.MessageTypeParser
-    val d = java.nio.file.Paths.get(dir)
-    // overwrite semantics: clear any previous (possibly torn) round dir
-    if (java.nio.file.Files.exists(d)) {
-      val s = java.nio.file.Files.walk(d)
-      try {
-        val files = s.sorted(java.util.Comparator.reverseOrder())
-          .toArray(new Array[java.nio.file.Path](_))
-        files.foreach(java.nio.file.Files.deleteIfExists(_))
-      } finally s.close()
-    }
-    java.nio.file.Files.createDirectories(d)
-    val schema = MessageTypeParser.parseMessageType(
-      "message politeness { required binary host (UTF8); " +
-        "required double tokens; required int64 last_round; }")
-    val w = ExampleParquetWriter.builder(
-        new org.apache.hadoop.fs.Path(s"$dir/part-00000.parquet"))
-      .withConf(org.apache.spark.sql.SparkSession.getActiveSession
-        .map(_.sessionState.newHadoopConf())
-        .getOrElse(new org.apache.hadoop.conf.Configuration()))
-      .withType(schema)
-      .withCompressionCodec(CompressionCodecName.UNCOMPRESSED)
-      .build()
-    val f = new SimpleGroupFactory(schema)
-    try rows.foreach { case (h, t, lr) =>
-      val g = f.newGroup()
-      g.append("host", h); g.append("tokens", t); g.append("last_round", lr)
-      w.write(g)
-    } finally w.close()
+  def writeStateParquet(spark: org.apache.spark.sql.SparkSession, dir: String,
+      rows: Array[(String, Double, Long)]): Unit = {
+    import graft.sources.DirectParquet
+    val settings = DirectParquet.Settings.resolve(spark, stateSchema,
+      Map("compression" -> "uncompressed"))
+    DirectParquet.writeDriverFile(dir, settings, rows.iterator.map { case (h, t, lr) =>
+      org.apache.spark.sql.catalyst.InternalRow(
+        org.apache.spark.unsafe.types.UTF8String.fromString(h), t, lr)
+    })
   }
 
   /** Empty (host, tokens, last_round) state frame for [[throttleRound]]. */
-  def emptyState(spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.types._
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(StructField("host", StringType, nullable = false),
-        StructField("tokens", DoubleType, nullable = false),
-        StructField("last_round", LongType, nullable = false))))
-  }
+  def emptyState(spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], stateSchema)
 
   /**
    * The SAME token-bucket semantics as [[throttle]], for the micro-batch

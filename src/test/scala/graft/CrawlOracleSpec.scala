@@ -26,63 +26,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class CrawlOracleSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
-  case class Entry(url: String, host: String, depth: Int,
-      discoveredAt: Long, var lastVisit: Long)
-
-  /** Sequential reference implementation of seed→pop→fetch→visit→expand. */
-  class SequentialOracle(sim: FetchSim, perHostBudget: Int) {
-    val frontier = scala.collection.mutable.LinkedHashMap.empty[String, Entry]
-
-    private def normalize(url0: String): Option[(String, String)] = {
-      val url = url0.trim
-      if (url.startsWith("data:")) return None
-      Option(UrlFns.hostOf(url)).map(h => (url, h))
-    }
-
-    def addCandidates(cands: Seq[(String, Int, Long)]): Unit = {
-      // first-seen per url by min (depth, discovered_at) — mirrors
-      // Frontier.normalizeCandidates' min-struct dedup
-      val best = scala.collection.mutable.LinkedHashMap.empty[String, (String, Int, Long)]
-      cands.foreach { case (u0, d, t) =>
-        normalize(u0).foreach { case (u, h) =>
-          best.get(u) match {
-            case Some((_, d0, t0)) if d0 < d || (d0 == d && t0 <= t) => ()
-            case _ => best(u) = (h, d, t)
-          }
-        }
-      }
-      best.foreach { case (u, (h, d, t)) =>
-        if (!frontier.contains(u)) frontier(u) = Entry(u, h, d, t, 0L)
-      }
-    }
-
-    def addSeeds(urls: Seq[String]): Unit =
-      addCandidates(urls.zipWithIndex.map { case (u, i) => (u, 0, i.toLong) })
-
-    /** One round; returns popped urls in pop order. */
-    def round(r: Long): Seq[String] = {
-      val unvisited = frontier.values.filter(_.lastVisit == 0L).toSeq
-        .sortBy(e => (e.depth, e.discoveredAt, e.url))
-      val perHost = scala.collection.mutable.HashMap.empty[String, Int]
-      val popped = unvisited.filter { e =>
-        val n = perHost.getOrElse(e.host, 0)
-        if (n < perHostBudget) { perHost(e.host) = n + 1; true } else false
-      }
-      popped.foreach(_.lastVisit = r)
-      val cands = popped.flatMap { e =>
-        val s = Correlate.sessionFromFetch("d" + UrlFns.sha256Hex(e.url).take(16),
-          sim.fetch(e.url))
-        s.links.zipWithIndex.map { case (l, pos) =>
-          (l, e.depth + 1, r * 1000000L + pos)
-        }
-      }
-      addCandidates(cands)
-      popped.map(_.url)
-    }
-
-    def crawl(maxRounds: Int): Seq[Seq[String]] =
-      (1 to maxRounds).map(r => round(r.toLong)).takeWhile(_.nonEmpty)
-  }
+  import CrawlOracleSpec.SequentialOracle
 
   test("distributed crawl == sequential oracle: seen set, per-host order, span sequences") {
     val sim = new FetchSim(numHosts = 15, pagesPerHost = 8, linksPerPage = 3)
@@ -187,5 +131,65 @@ class CrawlOracleSpec extends AnyFunSuite {
     }
     assert(got == expected.toMap,
       s"token-bucket mismatch: got=$got expected=$expected")
+  }
+}
+
+object CrawlOracleSpec {
+  case class Entry(url: String, host: String, depth: Int,
+      discoveredAt: Long, var lastVisit: Long)
+
+  /** Sequential reference implementation of seed→pop→fetch→visit→expand. */
+  class SequentialOracle(sim: FetchSim, perHostBudget: Int) {
+    val frontier = scala.collection.mutable.LinkedHashMap.empty[String, Entry]
+
+    private def normalize(url0: String): Option[(String, String)] = {
+      val url = url0.trim
+      if (url.startsWith("data:")) return None
+      Option(UrlFns.hostOf(url)).map(h => (url, h))
+    }
+
+    def addCandidates(cands: Seq[(String, Int, Long)]): Unit = {
+      // first-seen per url by min (depth, discovered_at) — mirrors
+      // Frontier.normalizeCandidates' min-struct dedup
+      val best = scala.collection.mutable.LinkedHashMap.empty[String, (String, Int, Long)]
+      cands.foreach { case (u0, d, t) =>
+        normalize(u0).foreach { case (u, h) =>
+          best.get(u) match {
+            case Some((_, d0, t0)) if d0 < d || (d0 == d && t0 <= t) => ()
+            case _ => best(u) = (h, d, t)
+          }
+        }
+      }
+      best.foreach { case (u, (h, d, t)) =>
+        if (!frontier.contains(u)) frontier(u) = Entry(u, h, d, t, 0L)
+      }
+    }
+
+    def addSeeds(urls: Seq[String]): Unit =
+      addCandidates(urls.zipWithIndex.map { case (u, i) => (u, 0, i.toLong) })
+
+    /** One round; returns popped urls in pop order. */
+    def round(r: Long): Seq[String] = {
+      val unvisited = frontier.values.filter(_.lastVisit == 0L).toSeq
+        .sortBy(e => (e.depth, e.discoveredAt, e.url))
+      val perHost = scala.collection.mutable.HashMap.empty[String, Int]
+      val popped = unvisited.filter { e =>
+        val n = perHost.getOrElse(e.host, 0)
+        if (n < perHostBudget) { perHost(e.host) = n + 1; true } else false
+      }
+      popped.foreach(_.lastVisit = r)
+      val cands = popped.flatMap { e =>
+        val s = Correlate.sessionFromFetch("d" + UrlFns.sha256Hex(e.url).take(16),
+          sim.fetch(e.url))
+        s.links.zipWithIndex.map { case (l, pos) =>
+          (l, e.depth + 1, r * 1000000L + pos)
+        }
+      }
+      addCandidates(cands)
+      popped.map(_.url)
+    }
+
+    def crawl(maxRounds: Int): Seq[Seq[String]] =
+      (1 to maxRounds).map(r => round(r.toLong)).takeWhile(_.nonEmpty)
   }
 }

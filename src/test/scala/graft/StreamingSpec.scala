@@ -8,6 +8,7 @@ import graft.streaming.Politeness.Candidate
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Streaming semantics: per-host politeness token buckets
   * (flatMapGroupsWithState), robots filtering, and the micro-batch-per-round
@@ -149,30 +150,39 @@ class StreamingSpec extends AnyFunSuite {
     urls.foreach(u => assert(UrlFns.robotsAllowed(u), s"disallowed url in frontier: $u"))
   }
 
+  private def copyTree(from: String, to: String): Unit = {
+    import java.nio.file.{Files, Paths}
+    val src = Paths.get(from)
+    Files.walk(src).forEach { p =>
+      val dst = Paths.get(to, src.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(dst)
+      else { Files.createDirectories(dst.getParent); Files.copy(p, dst) }
+    }
+  }
+  private def sha(p: java.nio.file.Path): String =
+    UrlFns.sha256Hex(java.nio.file.Files.readAllBytes(p))
+  // bucket-dir → sorted content hashes of its parquet files (the data dir
+  // name carries a commit nonce — CONTENT must match)
+  private def bucketHashes(root: String): Map[String, Seq[String]] = {
+    val out = scala.collection.mutable.Map.empty[String, Seq[String]]
+    java.nio.file.Files.walk(java.nio.file.Paths.get(root)).forEach { p =>
+      if (p.getFileName.toString.endsWith(".parquet") &&
+          p.getParent.getFileName.toString.startsWith("hb="))
+        out(p.getParent.getFileName.toString) =
+          (out.getOrElse(p.getParent.getFileName.toString, Seq.empty) :+ sha(p)).sorted
+    }
+    out.toMap
+  }
+  private def treeHashes(root: String, sub: String): Seq[String] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[String]
+    java.nio.file.Files.walk(java.nio.file.Paths.get(root, sub)).forEach { p =>
+      if (p.getFileName.toString.endsWith(".parquet")) out += sha(p)
+    }
+    out.sorted.toSeq
+  }
+
   test("torn round: crash between docs write and manifest rename replays byte-identically") {
-    import java.nio.file.{Files, Paths, Path}
-    def copyTree(from: String, to: String): Unit = {
-      val src = Paths.get(from)
-      Files.walk(src).forEach { p =>
-        val dst = Paths.get(to, src.relativize(p).toString)
-        if (Files.isDirectory(p)) Files.createDirectories(dst)
-        else { Files.createDirectories(dst.getParent); Files.copy(p, dst) }
-      }
-    }
-    def sha(p: Path): String = UrlFns.sha256Hex(Files.readAllBytes(p))
-    // bucket-dir → sorted content hashes of its parquet files (names carry
-    // task UUIDs and the data dir a commit nonce — CONTENT must match)
-    def bucketHashes(root: String): Map[String, Seq[String]] = {
-      val r = Paths.get(root)
-      val out = scala.collection.mutable.Map.empty[String, Seq[String]]
-      Files.walk(r).forEach { p =>
-        if (p.getFileName.toString.endsWith(".parquet") &&
-            p.getParent.getFileName.toString.startsWith("hb="))
-          out(p.getParent.getFileName.toString) =
-            (out.getOrElse(p.getParent.getFileName.toString, Seq.empty) :+ sha(p)).sorted
-      }
-      out.toMap
-    }
+    import java.nio.file.{Files, Paths}
     val sim = new FetchSim(numHosts = 12, pagesPerHost = 8)
     val cfg = CrawlConfig(numBuckets = 4, perHostBudget = 3, perBucketBudget = 100)
     val dir = tmpDir()
@@ -216,13 +226,6 @@ class StreamingSpec extends AnyFunSuite {
     // byte-identical replay: every frontier bucket file and every docs
     // round file matches the uninterrupted run content-for-content
     assert(bucketHashes(s"$torn/frontier") == bucketHashes(s"$dir/frontier"))
-    def treeHashes(root: String, sub: String): Seq[String] = {
-      val out = scala.collection.mutable.ArrayBuffer.empty[String]
-      Files.walk(Paths.get(root, sub)).forEach { p =>
-        if (p.getFileName.toString.endsWith(".parquet")) out += sha(p)
-      }
-      out.sorted.toSeq
-    }
     if (treeHashes(torn, "docs") != treeHashes(dir, "docs")) {
       def dump(root: String): Unit =
         Files.walk(Paths.get(root, "docs")).forEach { p =>
@@ -241,6 +244,45 @@ class StreamingSpec extends AnyFunSuite {
     val names = scala.collection.mutable.ArrayBuffer.empty[String]
     while (staleDirs.hasNext) names += staleDirs.next().getFileName.toString
     assert(!names.contains(strayName), s"stray torn-round data dir not pruned: $names")
+  }
+
+  test("torn round: docs and seen slices on disk, commit job never ran — replay is byte-identical, seen index never reads round r early") {
+    import java.nio.file.{Files, Paths}
+    import graft.frontier.SeenIndex
+    // the fetch task writes docs/round=r AND the seen slices of round r, so
+    // a crash after the fetch job but before the commit job leaves both on
+    // disk with NO round-r frontier data dir (and no manifest rename)
+    val sim = new FetchSim(numHosts = 12, pagesPerHost = 8)
+    val cfg = CrawlConfig(numBuckets = 4, perHostBudget = 3, perBucketBudget = 100)
+    val dir = tmpDir()
+    val c = new Crawler(spark, dir, sim, cfg)
+    c.addSeeds(sim.seedUrls(10))
+    c.round()
+    val torn = tmpDir()
+    copyTree(dir, torn)
+    val ref = c.round()
+    assert(ref.popped > 0)
+    copyTree(s"$dir/docs/round=2", s"$torn/docs/round=2")
+    copyTree(s"$dir/seen/round=2", s"$torn/seen/round=2")
+    assert(!Files.list(Paths.get(s"$torn/frontier")).iterator().asScala
+      .exists(_.getFileName.toString.startsWith("data-r2-")))
+    val seenRoot = s"$torn/seen"
+    def resident: Seq[Int] = (0 until cfg.numBuckets).map(SeenIndex.residentRound(seenRoot, _))
+    // resume: nothing of round 2 is visible, and nothing loads it
+    val c2 = new Crawler(spark, torn, sim, cfg)
+    assert(c2.lastRound == 1)
+    assert(c2.seen().filter(col("last_visit") === 2L).count() == 0)
+    assert(c2.docs().filter(col("round") === 2).count() == 0)
+    assert(resident.forall(_ < 2), s"resident rounds before replay: $resident")
+    // replay round 2: its merge probes the archive up to round 1 only —
+    // the manifest says 1 until the replay's own rename
+    val replayed = c2.round()
+    assert(c2.lastRound == 2 && replayed == ref)
+    assert(resident.forall(_ <= 1), s"round 2 was loaded before it committed: $resident")
+    assert(resident.exists(_ == 1), "the replay's merge never probed the archive")
+    assert(bucketHashes(s"$torn/frontier") == bucketHashes(s"$dir/frontier"))
+    assert(treeHashes(torn, "docs") == treeHashes(dir, "docs"))
+    assert(treeHashes(torn, "seen") == treeHashes(dir, "seen"))
   }
 
   test("streaming crawler: micro-batch rounds crawl the chain to closure, then resume-noop") {
