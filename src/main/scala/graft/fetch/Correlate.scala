@@ -256,8 +256,8 @@ object Correlate {
 
   /** The combinator-form specification of [[docFromSession]] — retained
     * verbatim as the byte-level reference the hot renderer is
-    * property-tested against (same pattern as the window-form politeness
-    * fallback and the column-algebra expression twins). */
+    * property-tested against (same pattern as the column-algebra
+    * expression twins). */
   private[graft] def docFromSessionSpec(s: Session): Doc = {
     val spans = scala.collection.mutable.ArrayBuffer.empty[Span]
     def add(kind: String, text: String, mediaRef: String = ""): Unit =

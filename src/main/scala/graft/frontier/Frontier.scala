@@ -102,10 +102,11 @@ object Frontier {
    * no parseable host; lowercases/trims like ReadDomainsFromFile
    * (kraaler.go:38-48). In-batch dedup keeps the first-seen (min depth,
    * then min discovered_at) occurrence.
+   *
+   * @param dedup when false, skips the in-batch groupBy — callers feeding
+   *   [[mergeRound]] leave dedup to ITS single aggregation (min-struct
+   *   semantics are identical), saving one full candidate shuffle/round.
    */
-  /** @param dedup when false, skips the in-batch groupBy — callers feeding
-    *   [[mergeRound]] leave dedup to ITS single aggregation (min-struct
-    *   semantics are identical), saving one full candidate shuffle/round. */
   def normalizeCandidates(raw: DataFrame, numBuckets: Int,
       respectRobots: Boolean = false, dedup: Boolean = true): DataFrame = {
     graft.functions.GraftExpressions.register(raw.sparkSession)
@@ -138,11 +139,12 @@ object Frontier {
    * URL-seen dedup (urlStore.Add, store/url.go:155-220): return only the
    * candidates NOT already in the frontier. Bloom pre-filter + exact
    * anti-join on bloom-positives; never drops on a Bloom hit alone.
+   *
+   * @param expectedRows frontier cardinality hint (e.g. from the table
+   *   manifest) — avoids a count scan; pass -1 to count here.
+   * @param bloomMinRows below this the Bloom pre-filter is skipped (one
+   *   anti-join beats building+broadcasting a filter for small tables).
    */
-  /** @param expectedRows frontier cardinality hint (e.g. from the table
-    *   manifest) — avoids a count scan; pass -1 to count here.
-    * @param bloomMinRows below this the Bloom pre-filter is skipped (one
-    *   anti-join beats building+broadcasting a filter for small tables). */
   def newOnly(frontier: DataFrame, candidates: DataFrame,
       expectedRows: Long = -1L, bloomMinRows: Long = 4000000L): DataFrame = {
     val n = if (expectedRows >= 0) expectedRows else frontier.count()
@@ -283,24 +285,25 @@ object Frontier {
    */
   def popSortedFifo(frontier: DataFrame, perHostBudget: Int,
       perBucketBudget: Int): DataFrame =
-    popSortedFifoImpl(frontier, perHostBudget, perBucketBudget, None, 0L, 0.0, 0.0)
+    popSortedFifoImpl(frontier, perHostBudget, perBucketBudget, None, 0L, 0.0, 0.0, None)
       .select("url", "host", "host_bucket", "depth", "discovered_at")
 
   /**
    * The sorted fifo pop WITH the per-host politeness token-bucket verdict
    * fused into its streaming pass — one column (`admit`) on top of
-   * [[popSortedFifo]]'s output, at zero extra passes. The gated crawler
-   * round used to run a SEPARATE partition-local flagging pass over the
-   * pop output ([[graft.streaming.Politeness.flagAdmissions]] — a
-   * hashmap regroup + per-host sort of every offered row); but the pop
-   * already walks each host's rows contiguously IN priority order, so the
-   * token check is one comparison against a per-host counter the pass
-   * maintains anyway.
+   * [[popSortedFifo]]'s output, at zero extra passes. Other samplers
+   * flag in a SEPARATE partition-local pass over the pop output
+   * ([[graft.streaming.Politeness.flagAdmissionsWithMap]] — a hashmap
+   * regroup + per-host sort of every offered row); this pop already walks
+   * each host's rows contiguously IN priority order, so the token check
+   * is one comparison against a per-host counter the pass maintains
+   * anyway. Per-host admitted counts over the heap survivors go to
+   * `admitAcc` (see [[graft.streaming.Politeness.AdmittedCounts]]).
    *
-   * Verdicts are IDENTICAL to pop → flagAdmissions: a host's bucket-heap
-   * survivors are always a PREFIX of its priority-ordered offer (any
-   * top-K set under a total order is downward closed within one host's
-   * chain), so flagging the first `admitLimit` offered rows before heap
+   * Verdicts are IDENTICAL to pop → flagAdmissionsWithMap: a host's
+   * bucket-heap survivors are always a PREFIX of its priority-ordered
+   * offer (any top-K set under a total order is downward closed within
+   * one host's chain), so flagging the first `admitLimit` offered rows before heap
    * truncation equals flagging the first `admitLimit` survivors after it
    * (equivalence-tested in StreamingSpec, heap eviction included).
    */
@@ -308,15 +311,15 @@ object Frontier {
       perBucketBudget: Int,
       state: org.apache.spark.broadcast.Broadcast[java.util.HashMap[String, (Double, Long)]],
       roundId: Long, ratePerRound: Double, burst: Double,
-      admitAcc: Option[graft.streaming.Politeness.AdmittedCountsAcc] = None): DataFrame =
+      admitAcc: graft.streaming.Politeness.AdmittedCountsAcc): DataFrame =
     popSortedFifoImpl(frontier, perHostBudget, perBucketBudget, Some(state),
-      roundId, ratePerRound, burst, admitAcc)
+      roundId, ratePerRound, burst, Some(admitAcc))
 
   private def popSortedFifoImpl(frontier: DataFrame, perHostBudget: Int,
       perBucketBudget: Int,
       state: Option[org.apache.spark.broadcast.Broadcast[java.util.HashMap[String, (Double, Long)]]],
       roundId: Long, ratePerRound: Double, burst: Double,
-      admitAcc: Option[graft.streaming.Politeness.AdmittedCountsAcc] = None): DataFrame = {
+      admitAcc: Option[graft.streaming.Politeness.AdmittedCountsAcc]): DataFrame = {
     import graft.model.Model.FrontierEntry
     import graft.streaming.Politeness
     import graft.streaming.Politeness.FlaggedEntry
@@ -367,8 +370,8 @@ object Frontier {
           prev = e
         }
         // side output: per-host admitted counts over the heap SURVIVORS
-        // (the exact host set + adm_n the former groupBy job computed),
-        // keyed by partitionId so re-execution overwrites idempotently
+        // (every offered host, 0 if all its offers were rejected), keyed
+        // by partitionId so re-execution overwrites idempotently
         admitAcc.foreach { acc =>
           val counts = new java.util.HashMap[String, java.lang.Long]()
           heaps.valuesIterator.foreach(_.foreach { fe =>

@@ -349,8 +349,9 @@ object UrlFns {
   /** Deterministic synthetic robots.txt rules per host: a host disallows
     * the path prefix `/p/<d>` for d = hash(host)%10 when its hash selects
     * it (~50% of hosts), plus `/private` everywhere. The reference has no
-    * robots handling; these rules feed the engine's own politeness stage
-    * (north rule) and are stable across runs/executors. */
+    * robots handling; these rules feed the engine's own candidate filter
+    * (`robots_allowed` in `Frontier.normalizeCandidates`, north rule) and
+    * are stable across runs/executors. */
   def robotsDisallow(host: String): Seq[String] = {
     if (host == null) return Seq("/")
     val h = graft.fetch.FetchSim.fnv1a("robots|" + host)

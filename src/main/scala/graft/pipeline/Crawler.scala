@@ -5,7 +5,8 @@ import graft.frontier.Frontier
 import graft.functions.UrlFns
 import graft.model.Model._
 import graft.sources.{DirectParquet, IcebergishTable}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import graft.streaming.Politeness
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
@@ -40,9 +41,11 @@ import java.nio.file.{Files, Paths}
  * the whole session Hadoop conf — the round's largest waste.
  *
  * Scale design (10^10 frontier / 1000 executors):
- *  - the fetch shuffle keys on `host#salt` — host affinity for politeness
- *    and DNS-cache locality (worker.go:117) but hot hosts split across
- *    `saltFactor` partitions (north rule: explicit skew handling);
+ *  - the fetch runs in place on the host-clustered pop output (host
+ *    affinity for politeness and DNS-cache locality, worker.go:117);
+ *    only with `saltFactor > 0` does it shuffle on `host#salt`, splitting
+ *    hot hosts across `saltFactor` partitions (north rule: explicit skew
+ *    handling);
  *  - docs are append-only round-partitioned parquet — never rewritten;
  *  - the frontier is SPLIT: the live pool (unvisited queue) is the only
  *    table rewritten per round, and popped rows leave it for an
@@ -54,7 +57,17 @@ import java.nio.file.{Files, Paths}
  *    partition-local membership probe over the bucket's own archive
  *    slice ([[graft.frontier.SeenIndex]]) — per-round shuffle volume is
  *    likewise O(pool + delta), never O(ever-seen);
- *  - nothing collects rows to the driver except ≤P lineage counters.
+ *  - nothing collects rows to the driver except ≤P lineage counters and,
+ *    on a gated round, the politeness token map.
+ *
+ * Precondition of politeness-gated rounds (`politenessRate > 0`): the
+ * per-host token map is driver-resident and broadcast every gated round,
+ * so it costs O(hosts ever popped) of driver memory (~32 B per host plus
+ * map overhead). Every gated round takes the same steps: load the map
+ * (the resident one, or `politeness/round-(r-1)` on a miss), flag the
+ * pop against it while counting admitted rows per host in an
+ * accumulator, then merge the counts into the map and write its durable
+ * copy (see [[graft.streaming.Politeness]]).
  */
 class Crawler(
     spark: SparkSession,
@@ -122,10 +135,6 @@ class Crawler(
   private def poolView: DataFrame =
     Frontier.restorePool(frontierTable.read(spark), cfg.numBuckets)
   val seenFilters = new graft.frontier.SeenFilterStore(workDir)
-
-  /** Politeness state past this many hosts falls back to the window form
-    * (the broadcast map and the driver-resident cache share the bound). */
-  private val broadcastStateMax = 20000000
 
   /** Driver-resident politeness state (r4): the map round r needs is the
     * one round r-1 just computed — re-reading the state parquet and
@@ -229,65 +238,49 @@ class Crawler(
       else pool.unionByName(seen())
     // optional per-host token-bucket throttle (worker.go:1238-1253 ready
     // token generalized; north rule): rejected rows stay unvisited in the
-    // frontier and are re-offered next round. State is a tiny per-round
-    // parquet table — replaying a torn round rereads round r-1's state.
-    // ONE round-sized cache either way: ungated rounds cache the pop
-    // output; gated rounds cache the pop output WITH its admission flag
-    // and treat `popped` as a filter view over that cache.
+    // frontier and are re-offered next round. ONE round-sized cache either
+    // way: ungated rounds cache the pop output; gated rounds cache the pop
+    // output WITH its admission flag and treat `popped` as a filter view
+    // over that cache.
     val gated = cfg.politenessRate > 0
-    // driver-resident fast path: the cache holds exactly what round r-1's
-    // state write produced; when it misses (fresh instance, resume, an
-    // exhausted round that wrote no state) the parquet path below is the
-    // fallback — identical content by construction.
-    val cachedStateMap =
-      if (gated) politenessCache.collect { case (pr, m) if pr == r - 1 => m }
-      else None
-    val prevState =
-      if (!gated || cachedStateMap.isDefined) null
+    // the token map round r needs: the resident one round r-1's state
+    // write merged, or — on a miss (fresh instance, resume, an exhausted
+    // round that wrote no state) — round r-1's durable copy, identical
+    // content by construction (replaying a torn round rereads it too)
+    val stateMap =
+      if (!gated) null
+      else politenessCache.collect { case (pr, m) if pr == r - 1 => m }.getOrElse(
+        Politeness.readStateMap(spark, s"$workDir/politeness/round-${r - 1}"))
+    // per-host admitted counts ride the flagging pass as an accumulator
+    // side output (idempotent by partition) — no cache-scan + shuffle job
+    // for the state write (a 5-7 s/round fixed cost at local[32])
+    val admitAcc =
+      if (!gated) null
       else {
-        val p = Paths.get(s"$workDir/politeness/round-${r - 1}")
-        if (Files.exists(p)) spark.read.parquet(p.toString)
-        else graft.streaming.Politeness.emptyState(spark)
+        val a = new Politeness.AdmittedCountsAcc()
+        spark.sparkContext.register(a, s"admitted-hosts-r$r")
+        a
       }
     // sorted=true: the committed bucket files are (host, prio)-sorted, so
     // the fifo pop is a streaming take — no Sort node, no exchange. The
     // GATED fifo round fuses the token-bucket verdict INTO that same
     // streaming pass (popSortedFifoFlagged): zero extra passes over the
-    // offer, identical verdicts (see its scaladoc). Non-fifo samplers
-    // flag in a separate partition-local pass; past `broadcastStateMax`
-    // hosts both fall back to the window form.
+    // offer, identical verdicts (see its scaladoc). Other samplers flag
+    // in a separate partition-local pass.
     val sortedFifo = cfg.unique && cfg.sampler == "fifo"
     def popPlain() = Frontier.pop(popSource, cfg.sampler, cfg.seed,
       cfg.perHostBudget, cfg.perBucketBudget, cfg.unique, cfg.boost,
       sorted = true)
-    val stateMap =
-      if (!gated) None
-      else cachedStateMap.orElse(
-        graft.streaming.Politeness.stateMapOf(prevState, broadcastStateMax))
-    // per-host admitted counts ride the fused pop walker as an accumulator
-    // side output (idempotent by partition), replacing the separate
-    // cache-scan + shuffle job the state write used to run (a 5-7 s/round
-    // fixed cost at local[32])
-    val admitAcc =
-      if (gated && stateMap.isDefined && sortedFifo) {
-        val a = new graft.streaming.Politeness.AdmittedCountsAcc()
-        spark.sparkContext.register(a, s"admitted-hosts-r$r")
-        Some(a)
-      } else None
     val cached = (
       if (!gated) popPlain()
-      else stateMap match {
-        case Some(m) if sortedFifo =>
-          Frontier.popSortedFifoFlagged(popSource, cfg.perHostBudget,
-            cfg.perBucketBudget, spark.sparkContext.broadcast(m), r.toLong,
-            cfg.politenessRate, cfg.politenessBurst, admitAcc)
-        case Some(m) =>
-          graft.streaming.Politeness.flagAdmissionsWithMap(
-            popPlain(), m, r.toLong, cfg.politenessRate, cfg.politenessBurst)
-        case None =>
-          graft.streaming.Politeness.flagAdmissionsWindow(
-            popPlain(), prevState, r.toLong, cfg.politenessRate, cfg.politenessBurst)
-      }).persist()
+      else if (sortedFifo)
+        Frontier.popSortedFifoFlagged(popSource, cfg.perHostBudget,
+          cfg.perBucketBudget, spark.sparkContext.broadcast(stateMap), r.toLong,
+          cfg.politenessRate, cfg.politenessBurst, admitAcc)
+      else
+        Politeness.flagAdmissionsWithMap(popPlain(), stateMap, r.toLong,
+          cfg.politenessRate, cfg.politenessBurst, admitAcc)
+      ).persist()
     val popped = if (gated) cached.filter(col("admit")).drop("admit") else cached
 
     // --- the fetch job: pop → fetch → correlate → docs + seen files ---
@@ -359,52 +352,16 @@ class Crawler(
     }
     if (gated && offeredN > 0) {
       val t = new Thread(() =>
-        try stateMap match {
-          case Some(m) =>
-            // driver-resident path: admitted counts come from the pop
-            // walker's accumulator side output (zero extra jobs — the
-            // former cache-scan aggregate is the fallback for pop forms
-            // that don't carry the accumulator), merged into the resident
-            // map with the same refill algebra as the column form. The
-            // table is written host-sorted DIRECTLY from the driver
-            // (canonical bytes; a 1-task Spark job queued seconds behind
-            // running stages for ~2 MB), and the merged map seeds round
-            // r+1, whose state read + collect jobs disappear entirely.
-            val counts: java.util.HashMap[String, java.lang.Long] = admitAcc match {
-              case Some(a) => a.flattened
-              case None =>
-                val perHost = cached.groupBy(col("host"))
-                  .agg(sum(when(col("admit"), 1L).otherwise(0L)).as("adm_n"))
-                  .collect()
-                val mm = new java.util.HashMap[String, java.lang.Long](perHost.length * 2)
-                perHost.foreach(row => mm.put(row.getString(0),
-                  java.lang.Long.valueOf(row.getLong(1))))
-                mm
-            }
-            val merged = new java.util.HashMap[String, (Double, Long)](m)
-            counts.forEach { (h, adm) =>
-              val refilled = graft.streaming.Politeness.refillAmount(
-                merged.get(h), r.toLong, cfg.politenessRate, cfg.politenessBurst)
-              merged.put(h, (refilled - adm.longValue(), r.toLong))
-            }
-            val rows = {
-              import scala.jdk.CollectionConverters._
-              merged.entrySet().iterator().asScala
-                .map(e => (e.getKey, e.getValue._1, e.getValue._2))
-                .toArray.sortBy(_._1)
-            }
-            graft.streaming.Politeness.writeStateParquet(spark,
-              s"$workDir/politeness/round-$r", rows)
-            politenessCache =
-              if (merged.size > broadcastStateMax) None else Some((r, merged))
-          case None =>
-            // window-form regime (> broadcastStateMax hosts): keep the
-            // distributed aggregate + joins; no resident map at that scale
-            graft.streaming.Politeness.nextState(
-              cached, prevState, r.toLong, cfg.politenessRate, cfg.politenessBurst)
-              .write.mode(SaveMode.Overwrite)
-              .parquet(s"$workDir/politeness/round-$r")
-            politenessCache = None
+        try {
+          // the flagging pass's accumulator counts (zero extra jobs),
+          // merged into the resident map; the table is written host-sorted
+          // DIRECTLY from the driver (canonical bytes; a 1-task Spark job
+          // queued seconds behind running stages for ~2 MB), and the merged
+          // map seeds round r+1, which then reads no state file
+          val merged = Politeness.mergeAdmitted(stateMap, admitAcc.flattened,
+            r.toLong, cfg.politenessRate, cfg.politenessBurst)
+          Politeness.writeStateParquet(spark, s"$workDir/politeness/round-$r", merged)
+          politenessCache = Some((r, merged))
         } catch { case e: Throwable => stateWriteError = e })
       t.setName(s"politeness-state-r$r")
       t.start()

@@ -86,30 +86,17 @@ object Providers {
   /**
    * S4 streaming form: watch a feed directory (the stand-in for the 20-min
    * HTTP poll tick, provider.go:179-181; file-arrival = Etag change,
-   * provider.go:201-206), decode each snapshot, and dedup re-announced ids
-   * across polls — Structured Streaming `dropDuplicates` carries the
-   * seen-id state that the reference keeps as `newestId`.
-   */
-  def feedStream(spark: SparkSession, feedDir: String): DataFrame =
-    spark.readStream
-      .schema(StructType(Seq(StructField("payload", StringType))))
-      .json(feedDir)
-      .select(explode(from_json(col("payload"), ArrayType(feedSchema))).as("e"))
-      .select(col("e.phish_id").cast("long").as("id"), col("e.url").as("url"))
-      .filter(col("id").isNotNull)
-      .dropDuplicates("id")
-
-  /**
-   * S4 streaming form with the reference's TRUE high-watermark state: ONE
-   * monotone `newestId` long (provider.go:243-266) held in
-   * `flatMapGroupsWithState`, instead of [[feedStream]]'s dropDuplicates
-   * (whose seen-id set grows without bound — fine for tests, wrong at
-   * scale). Each micro-batch emits only ids above the watermark, sorted by
-   * id like the reference's `sort.Sort` (provider.go:231), then advances
-   * it. Gzip'd snapshots (`*.json.gz`) decode transparently — Spark's file
-   * source gunzips by extension, standing in for provider.go:213; drive
-   * the query with `Trigger.ProcessingTime` for the 20-min poll tick
-   * (provider.go:179-181; ProvidersSpec demonstrates both).
+   * provider.go:201-206), decode each snapshot, and drop re-announced ids
+   * across polls with the reference's high-watermark state: ONE monotone
+   * `newestId` long (provider.go:243-266) held in
+   * `flatMapGroupsWithState` — not a `dropDuplicates("id")`, whose seen-id
+   * set grows without bound. Each micro-batch emits only ids above the
+   * watermark, sorted by id like the reference's `sort.Sort`
+   * (provider.go:231), then advances it. Gzip'd snapshots (`*.json.gz`)
+   * decode transparently — Spark's file source gunzips by extension,
+   * standing in for provider.go:213; drive the query with
+   * `Trigger.ProcessingTime` for the poll tick (ProvidersSpec
+   * demonstrates both).
    */
   def feedStreamHwm(spark: SparkSession, feedDir: String): DataFrame = {
     import spark.implicits._

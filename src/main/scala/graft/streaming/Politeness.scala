@@ -1,22 +1,36 @@
 package graft.streaming
 
-import graft.functions.UrlFns
 import org.apache.spark.sql.{Dataset, Encoders}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /**
- * Per-host politeness token buckets + robots allow-list, as a stateful
- * streaming stage (`groupByKey(host).flatMapGroupsWithState`) — the north
- * rule's generalization of kraaler's 1-in-flight ready-token loop
- * (/root/reference/worker.go:1238-1253). kraaler has no robots.txt handling
- * (the Chromium fetch just navigates, worker.go:580-584); the rule set here
- * is the engine's own, fed by the deterministic synthetic web.
+ * Per-host politeness token buckets — the north rule's generalization of
+ * kraaler's 1-in-flight ready-token loop
+ * (/root/reference/worker.go:1238-1253), in two forms with one
+ * semantics:
  *
- * State is keyed by HOST (not host-bucket) because a token bucket is a
- * per-host invariant; memory stays bounded because only hosts seen in the
- * current stream epoch hold state, and [[PolitenessState]] is ~32 bytes.
- * At 10^8 hosts, key-state shards across executors by the groupByKey
- * shuffle — the same exchange the frontier already pays.
+ *  - [[throttle]], a stateful streaming stage
+ *    (`groupByKey(host).flatMapGroupsWithState`). State is keyed by HOST
+ *    (a token bucket is a per-host invariant); only hosts seen in the
+ *    current stream epoch hold state, [[PolitenessState]] is ~32 bytes,
+ *    and at 10^8 hosts the key-state shards across executors by the
+ *    groupByKey shuffle.
+ *  - the crawl round's gate: [[flagAdmissionsWithMap]] (or the fused
+ *    [[graft.frontier.Frontier.popSortedFifoFlagged]]) flags the pop
+ *    against a token map, counts admitted rows per host through
+ *    [[AdmittedCountsAcc]], and [[mergeAdmitted]] +
+ *    [[writeStateParquet]] produce the next round's map and its durable
+ *    copy `politeness/round-r`.
+ *
+ * Precondition of the round gate: the token map is driver-resident and
+ * broadcast every gated round, so it costs O(hosts ever popped) of
+ * driver memory (~32 B per host plus map overhead).
+ *
+ * Robots rules are not applied here: candidates are filtered by
+ * `robots_allowed` in [[graft.frontier.Frontier.normalizeCandidates]]
+ * (kraaler has no robots.txt handling — the Chromium fetch just
+ * navigates, worker.go:580-584 — so the rule set is the engine's own,
+ * fed by the deterministic synthetic web).
  */
 object Politeness {
 
@@ -55,29 +69,24 @@ object Politeness {
       }
   }
 
-  /** Robots pre-filter: drop candidates whose path matches a disallowed
-    * prefix for their host (rules from [[UrlFns.robotsDisallow]]). Pure
-    * narrow filter — composes before the throttle. */
-  def robotsFilter(ds: Dataset[Candidate]): Dataset[Candidate] =
-    ds.filter((c: Candidate) => UrlFns.robotsAllowed(c.url))
-
   /**
-   * Per-host admitted counts collected AS A SIDE OUTPUT of the fused pop
-   * walker (an accumulator keyed by partitionId), replacing the separate
-   * `cached.groupBy(host).agg(...)` job the gated round used to pay at
-   * the round head's shadow — a full scan of the popped cache plus a
-   * shuffle, measured 5-7 s/round at local[32]. Keyed by partition so
-   * cache rebuilds, task retries, and speculative attempts stay
-   * idempotent: a partition's map is deterministic, and re-adding it
-   * OVERWRITES rather than double-counts. Every host with a heap-surviving row appears (count 0
-   * if all its offers were rejected) — exactly the host set the groupBy
-   * produced, so the downstream refill algebra writes identical state.
+   * Per-host admitted counts collected AS A SIDE OUTPUT of the pass that
+   * flags the pop ([[graft.frontier.Frontier.popSortedFifoFlagged]] or
+   * [[flagAdmissionsWithMap]]), an accumulator keyed by partitionId — the
+   * gated round needs no `groupBy(host)` job over the popped cache (a
+   * full scan plus a shuffle, measured 5-7 s/round at local[32]). Keyed
+   * by partition so cache rebuilds, task retries, and speculative
+   * attempts stay idempotent: a partition's map is deterministic, and
+   * re-adding it OVERWRITES rather than double-counts. Every offered
+   * host appears (count 0 if all its offers were rejected), so
+   * [[mergeAdmitted]] stamps `last_round` on exactly the hosts the round
+   * offered.
+   *
+   * The cheap [[toString]] is LOAD-BEARING: Spark's AppStatusListener
+   * stringifies every named accumulator's merged value ON EVERY TASK END
+   * and retains the string per task — a raw 60k-host map of maps OOM'd
+   * the driver through `LiveEntityHelpers.accuValuetoString` (measured).
    */
-  /** The accumulator's value holder. The cheap [[toString]] is
-    * LOAD-BEARING: Spark's AppStatusListener stringifies every named
-    * accumulator's merged value ON EVERY TASK END and retains the string
-    * per task — a raw 60k-host map of maps OOM'd the driver through
-    * `LiveEntityHelpers.accuValuetoString` (measured). */
   final class AdmittedCounts extends Serializable {
     val byPartition =
       new java.util.HashMap[Integer, java.util.HashMap[String, java.lang.Long]]()
@@ -124,92 +133,63 @@ object Politeness {
    * fixed name, through [[graft.sources.DirectParquet]]): the state table
    * is O(hosts) rows the DRIVER already holds, and writing it through a
    * 1-task Spark job queued the task behind whatever stage was running —
-   * seconds of wall for ~2 MB of bytes. Deterministic bytes (host-sorted
-   * input, fixed writer config) keep torn-round replay byte-identical.
+   * seconds of wall for ~2 MB of bytes. Deterministic bytes (rows sorted
+   * by host, fixed writer config) keep torn-round replay byte-identical.
    * The previous content of `dir` (a torn round's) is replaced.
    */
   def writeStateParquet(spark: org.apache.spark.sql.SparkSession, dir: String,
-      rows: Array[(String, Double, Long)]): Unit = {
+      m: java.util.HashMap[String, (Double, Long)]): Unit = {
     import graft.sources.DirectParquet
+    import scala.jdk.CollectionConverters._
     val settings = DirectParquet.Settings.resolve(spark, stateSchema,
       Map("compression" -> "uncompressed"))
-    DirectParquet.writeDriverFile(dir, settings, rows.iterator.map { case (h, t, lr) =>
+    val hosts = m.keySet().asScala.toArray.sorted
+    DirectParquet.writeDriverFile(dir, settings, hosts.iterator.map { h =>
+      val (t, lr) = m.get(h)
       org.apache.spark.sql.catalyst.InternalRow(
         org.apache.spark.unsafe.types.UTF8String.fromString(h), t, lr)
     })
   }
 
-  /** Empty (host, tokens, last_round) state frame for [[throttleRound]]. */
-  def emptyState(spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], stateSchema)
+  /** Read a state table written by [[writeStateParquet]] into the
+    * driver-resident token map; an absent `dir` (no gated round wrote
+    * it yet) is the empty map. */
+  def readStateMap(spark: org.apache.spark.sql.SparkSession,
+      dir: String): java.util.HashMap[String, (Double, Long)] = {
+    val m = new java.util.HashMap[String, (Double, Long)]()
+    if (java.nio.file.Files.exists(java.nio.file.Paths.get(dir)))
+      spark.read.schema(stateSchema).parquet(dir).collect()
+        .foreach(r => m.put(r.getString(0), (r.getDouble(1), r.getLong(2))))
+    m
+  }
 
-  /**
-   * The SAME token-bucket semantics as [[throttle]], for the micro-batch
-   * crawler: state rides a tiny `(host, tokens, last_round)` table instead
-   * of GroupState (so it survives round replay and resume — the batch
-   * analogue of a streaming checkpoint). Per round each host refills
-   * `ratePerRound` (capped at `burst`) lazily since its last appearance,
-   * admits `floor(tokens)` of its popped rows in deterministic
-   * (depth, discovered_at, url) priority order, and keeps the remainder
-   * queued in the frontier (they were never marked visited).
-   *
-   * Scale: `popped` is budget-bounded (O(round), not O(frontier)) and the
-   * state table holds only hosts ever popped — both shuffle on `host`, the
-   * key the pop stage already clustered by.
-   *
-   * @return (admitted rows of `popped`, next round's full state table)
-   */
+  /** Next round's token map: every host in `counts` refills to
+    * `roundId` and spends its admitted count; every other host carries
+    * its entry unchanged and refills lazily on its next appearance
+    * (rate × rounds-since-last is exactly the missed refill). `m` is not
+    * modified. */
+  def mergeAdmitted(m: java.util.HashMap[String, (Double, Long)],
+      counts: java.util.HashMap[String, java.lang.Long], roundId: Long,
+      ratePerRound: Double, burst: Double): java.util.HashMap[String, (Double, Long)] = {
+    val merged = new java.util.HashMap[String, (Double, Long)](m)
+    counts.forEach { (h, adm) =>
+      merged.put(h,
+        (refillAmount(merged.get(h), roundId, ratePerRound, burst) - adm.longValue(), roundId))
+    }
+    merged
+  }
+
   /** A popped row entering the batch throttle (the pop stage's schema). */
   case class PopEntry(url: String, host: String, host_bucket: Int,
       depth: Int, discovered_at: Long)
 
-  /** [[PopEntry]] plus its admission verdict — the one-pass flag form. */
+  /** [[PopEntry]] plus its admission verdict. */
   case class FlaggedEntry(url: String, host: String, host_bucket: Int,
       depth: Int, discovered_at: Long, admit: Boolean)
 
-  /**
-   * Flag every popped row with its admission verdict — ONE pass, no row
-   * dropped. The caller caches THIS frame once and derives everything
-   * from it: `admitted = flagged.filter('admit)`, offered/admitted counts
-   * in one aggregate job, and [[nextState]]. (The round-2 tuple form made
-   * the crawler materialize popped AND admitted as two ~round-sized
-   * caches plus a separate offered-count job.)
-   *
-   * Admission is a PER-HOST decision and the pop output is already
-   * host-clustered (bucket files cluster by hash(host)) — so the verdict
-   * is computed PARTITION-LOCALLY against a broadcast state map instead
-   * of the round-2 window form, which shuffled and sorted the ENTIRE
-   * popped set on host every round (measured: the window + its
-   * re-execution by the state-write job added ~+75% round wall at
-   * local[32], collapsing the politeness-gated scaling pairs to
-   * 0.27-0.41 vs 0.51-0.61 ungated). The state is O(hosts-ever-popped)
-   * (~32 B/host); beyond `broadcastStateMax` hosts it falls back to
-   * [[flagAdmissionsWindow]] — at that scale the popped set is enormous
-   * too and the relative window cost shrinks.
-   */
-  /** Collect the per-host state table into a driver map, or None past
-    * `max` hosts (callers fall back to [[flagAdmissionsWindow]] — at that
-    * scale the popped set is enormous too and the window's relative cost
-    * shrinks). Shared by [[flagAdmissions]] and the fused sorted-pop path
-    * ([[graft.frontier.Frontier.popSortedFifoFlagged]]) so the state
-    * parquet is read and collected exactly once per round. */
-  def stateMapOf(state: org.apache.spark.sql.DataFrame,
-      max: Int): Option[java.util.HashMap[String, (Double, Long)]] = {
-    val stateRows = state.select("host", "tokens", "last_round")
-      .limit(max + 1).collect()
-    if (stateRows.length > max) None
-    else {
-      val m = new java.util.HashMap[String, (Double, Long)](stateRows.length * 2)
-      stateRows.foreach(r => m.put(r.getString(0), (r.getDouble(1), r.getLong(2))))
-      Some(m)
-    }
-  }
-
   /** The refilled token balance for one host at `roundId` — the ONE
-    * refill formula every politeness form shares. Bit-identical to the
-    * column form in [[nextState]] (same IEEE op order: long round gap ×
-    * rate, + tokens, min against burst), so the driver-resident state
-    * path writes byte-equal tables to the distributed one. */
+    * refill formula [[admitLimit]] and [[mergeAdmitted]] share (a host
+    * with no entry starts full at `burst`). */
   def refillAmount(st: (Double, Long), roundId: Long,
       ratePerRound: Double, burst: Double): Double = {
     val (tok, last) = if (st == null) (burst, roundId - 1) else st
@@ -221,21 +201,32 @@ object Politeness {
       ratePerRound: Double, burst: Double): Int =
     math.floor(refillAmount(st, roundId, ratePerRound, burst)).toInt
 
-  def flagAdmissions(popped: org.apache.spark.sql.DataFrame,
-      state: org.apache.spark.sql.DataFrame, roundId: Long,
-      ratePerRound: Double, burst: Double,
-      broadcastStateMax: Int = 20000000): org.apache.spark.sql.DataFrame = {
-    val m = stateMapOf(state, broadcastStateMax).getOrElse(
-      return flagAdmissionsWindow(popped, state, roundId, ratePerRound, burst))
-    flagAdmissionsWithMap(popped, m, roundId, ratePerRound, burst)
-  }
-
-  /** [[flagAdmissions]] over an ALREADY-collected state map (the crawler
-    * collects once per round and feeds either this or the fused sorted
-    * pop). */
+  /**
+   * The SAME token-bucket semantics as [[throttle]], for a micro-batch
+   * crawl round whose pop is not the fused sorted fifo walker: flag every
+   * popped row with its admission verdict in ONE pass, no row dropped.
+   * Per round each host refills `ratePerRound` (capped at `burst`) lazily
+   * since its last appearance and admits `floor(tokens)` of its popped
+   * rows in deterministic (depth, discovered_at, url) priority order; the
+   * rest stay queued in the frontier (they were never marked visited).
+   * The per-host admitted counts go to `admitAcc` (see
+   * [[AdmittedCounts]]); [[mergeAdmitted]] turns them into the next
+   * token map.
+   *
+   * Admission is a PER-HOST decision and the pop output is already
+   * host-clustered (bucket files cluster by hash(host)), so the verdict
+   * is computed PARTITION-LOCALLY against the broadcast token map, with
+   * no shuffle or sort of the popped set on host (a window over host
+   * measured ~+75 % round wall at local[32]).
+   *
+   * Precondition: `m` holds every host ever popped (~32 B per host) on
+   * the driver and is broadcast once per round — O(hosts ever popped)
+   * driver memory.
+   */
   def flagAdmissionsWithMap(popped: org.apache.spark.sql.DataFrame,
       m: java.util.HashMap[String, (Double, Long)], roundId: Long,
-      ratePerRound: Double, burst: Double): org.apache.spark.sql.DataFrame = {
+      ratePerRound: Double, burst: Double,
+      admitAcc: AdmittedCountsAcc): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.col
     val bc = popped.sparkSession.sparkContext.broadcast(m)
     implicit val enc = Encoders.product[FlaggedEntry]
@@ -245,17 +236,22 @@ object Politeness {
       .as[PopEntry]
       .mapPartitions { it =>
         // rows of a host live in ONE partition; group, then admit the
-        // per-host floor(tokens) in (depth, discovered_at, url) priority
-        // order — identical verdicts to the window form's rn <= floor(...)
+        // per-host floor(tokens) in (depth, discovered_at, url) order
         val byHost = new java.util.HashMap[String, scala.collection.mutable.ArrayBuffer[PopEntry]]()
         it.foreach { e =>
           var b = byHost.get(e.host)
           if (b == null) { b = new scala.collection.mutable.ArrayBuffer[PopEntry](); byHost.put(e.host, b) }
           b += e
         }
+        val counts = new java.util.HashMap[String, java.lang.Long](byHost.size * 2)
+        byHost.forEach { (h, buf) =>
+          counts.put(h, math.max(0, math.min(buf.length,
+            admitLimit(bc.value.get(h), roundId, ratePerRound, burst))).toLong)
+        }
+        admitAcc.add((org.apache.spark.TaskContext.getPartitionId(), counts))
         import scala.jdk.CollectionConverters._
         byHost.entrySet().iterator().asScala.flatMap { en =>
-          val admit = admitLimit(bc.value.get(en.getKey), roundId, ratePerRound, burst)
+          val admit = counts.get(en.getKey).intValue()
           val buf = en.getValue
           val flags: Iterator[(PopEntry, Boolean)] =
             if (admit >= buf.length) buf.iterator.map(_ -> true)
@@ -269,78 +265,5 @@ object Politeness {
       }
       .toDF()
       .select((popped.columns.toIndexedSeq :+ "admit").map(col): _*)
-  }
-
-  /** The round-2 window formulation of the verdicts — the fallback when
-    * the state exceeds the broadcast budget, and the equivalence reference
-    * for the partition-local form (StreamingSpec). Shuffles + sorts the
-    * whole popped set on host; correct at any state size, ~2× round cost
-    * at local[32]. */
-  def flagAdmissionsWindow(popped: org.apache.spark.sql.DataFrame,
-      state: org.apache.spark.sql.DataFrame, roundId: Long,
-      ratePerRound: Double, burst: Double): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions._
-    popped
-      .join(state, Seq("host"), "left")
-      .withColumn("refilled", least(lit(burst),
-        coalesce(col("tokens"), lit(burst)) +
-          greatest(lit(0L), lit(roundId) - coalesce(col("last_round"), lit(roundId - 1)))
-            * ratePerRound))
-      .withColumn("rn", row_number().over(Window.partitionBy(col("host"))
-        .orderBy(col("depth"), col("discovered_at"), col("url"))))
-      .withColumn("admit", col("rn") <= floor(col("refilled")))
-      .select((popped.columns.toIndexedSeq :+ "admit").map(col): _*)
-  }
-
-  /** Next round's full state table from a [[flagAdmissions]] frame: one
-    * TINY per-host aggregate (map-side combined over the caller's cache —
-    * never a second row-data pass) joined against the previous state.
-    * Hosts not popped this round carry their state; they refill lazily on
-    * next appearance (rate × rounds-since-last is exactly the missed
-    * refill). */
-  def nextState(flagged: org.apache.spark.sql.DataFrame,
-      state: org.apache.spark.sql.DataFrame, roundId: Long,
-      ratePerRound: Double, burst: Double): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
-    val perHost = flagged.groupBy(col("host")).agg(
-      sum(when(col("admit"), 1L).otherwise(0L)).as("adm_n"))
-    val touched = perHost
-      .join(state, Seq("host"), "left")
-      .withColumn("refilled", least(lit(burst),
-        coalesce(col("tokens"), lit(burst)) +
-          greatest(lit(0L), lit(roundId) - coalesce(col("last_round"), lit(roundId - 1)))
-            * ratePerRound))
-      .select(col("host"),
-        (col("refilled") - col("adm_n")).as("tokens"),
-        lit(roundId).as("last_round"))
-    val carried = state.join(perHost.select("host"), Seq("host"), "left_anti")
-    touched.unionByName(carried)
-  }
-
-  /** Tuple-form compatibility wrapper over [[flagAdmissions]] +
-    * [[nextState]] (the crawler uses the flag form directly so ONE cache
-    * serves admitted rows, counts, and the state update). */
-  def throttleRound(popped: org.apache.spark.sql.DataFrame,
-      state: org.apache.spark.sql.DataFrame, roundId: Long,
-      ratePerRound: Double, burst: Double,
-      broadcastStateMax: Int = 20000000):
-      (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    import org.apache.spark.sql.functions.col
-    val flagged = flagAdmissions(popped, state, roundId, ratePerRound, burst,
-      broadcastStateMax)
-    (flagged.filter(col("admit")).drop("admit"),
-      nextState(flagged, state, roundId, ratePerRound, burst))
-  }
-
-  /** Window-form tuple wrapper — the StreamingSpec equivalence reference. */
-  def throttleRoundWindow(popped: org.apache.spark.sql.DataFrame,
-      state: org.apache.spark.sql.DataFrame, roundId: Long,
-      ratePerRound: Double, burst: Double):
-      (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    import org.apache.spark.sql.functions.col
-    val flagged = flagAdmissionsWindow(popped, state, roundId, ratePerRound, burst)
-    (flagged.filter(col("admit")).drop("admit"),
-      nextState(flagged, state, roundId, ratePerRound, burst))
   }
 }

@@ -58,23 +58,6 @@ class ProvidersSpec extends AnyFunSuite {
     assert(gated.toSeq == Seq(7L, 9L))
   }
 
-  test("feedStream: streaming decode dedups re-announced ids across polls") {
-    val dir = tmpDir()
-    Providers.writeFeedSnapshot(dir, firstId = 1, count = 3)   // ids 1..3
-    val q = Providers.feedStream(spark, dir)
-      .writeStream.format("memory").queryName("feed_out")
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      assert(spark.table("feed_out").count() == 3)
-      // second poll re-announces 2..3 and adds 4..5
-      Providers.writeFeedSnapshot(dir, firstId = 2, count = 4) // ids 2..5
-      q.processAllAvailable()
-      val ids = spark.table("feed_out").collect().map(_.getAs[Long]("id")).sorted
-      assert(ids.toSeq == Seq(1L, 2L, 3L, 4L, 5L), s"got ${ids.toSeq}")
-    } finally q.stop()
-  }
-
   test("feedStreamHwm: O(1) high-watermark gate, gzip'd poll, ProcessingTime trigger") {
     val dir = tmpDir()
     // poll 1: plain json, ids 1..3

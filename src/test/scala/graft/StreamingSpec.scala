@@ -54,42 +54,49 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("partition-local throttleRound ≡ window form (admitted set + next state)") {
+  test("partition-local flagAdmissionsWithMap ≡ window form (admitted set + next state)") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
+    import StreamingSpec.{mapOf, mergedRows, nextStateWindow, flagAdmissionsWindow}
     // popped rows across several hosts incl. one with existing state, one
-    // unseen, one starved (0 tokens, refill below 1): both forms must
-    // admit the SAME set and produce the SAME next-state table
+    // unseen, one starved (0 tokens, refill below 1): the crawler's path
+    // (flag against the token map, count through the accumulator, merge)
+    // and the window reference must admit the SAME set and produce the
+    // SAME next-state table
     val popped = Seq(
       ("http://a.test/1", "a.test", 0, 1, 10L), ("http://a.test/2", "a.test", 0, 0, 11L),
       ("http://a.test/3", "a.test", 0, 1, 9L), ("http://b.test/1", "b.test", 1, 2, 5L),
       ("http://b.test/2", "b.test", 1, 2, 4L), ("http://c.test/1", "c.test", 2, 0, 1L))
       .toDF("url", "host", "host_bucket", "depth", "discovered_at")
       .repartition(3, col("host_bucket"))
-    val state = Seq(("a.test", 1.2, 6L), ("c.test", 0.1, 6L), ("idle.test", 0.7, 2L))
-      .toDF("host", "tokens", "last_round")
-    val (admP, stP) = Politeness.throttleRound(popped, state, 7L, 0.5, 2.0)
-    val (admW, stW) = Politeness.throttleRoundWindow(popped, state, 7L, 0.5, 2.0)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toSeq).toSet
-    assert(rows(admP) == rows(admW), "admitted sets differ")
-    assert(rows(stP.select("host", "tokens", "last_round")) ==
-      rows(stW.select("host", "tokens", "last_round")), "state tables differ")
+    val stateSeq = Seq(("a.test", 1.2, 6L), ("c.test", 0.1, 6L), ("idle.test", 0.7, 2L))
+    val state = stateSeq.toDF("host", "tokens", "last_round")
+    val acc = new Politeness.AdmittedCountsAcc()
+    spark.sparkContext.register(acc)
+    val flagged = Politeness.flagAdmissionsWithMap(popped, mapOf(stateSeq), 7L, 0.5, 2.0, acc)
+      .collect()
+    val window = flagAdmissionsWindow(popped, state, 7L, 0.5, 2.0)
+    def admitted(rows: Array[org.apache.spark.sql.Row]) =
+      rows.filter(_.getAs[Boolean]("admit")).map(_.toSeq.dropRight(1)).toSet
+    assert(admitted(flagged) == admitted(window.collect()), "admitted sets differ")
+    val stP = mergedRows(mapOf(stateSeq), acc, 7L, 0.5, 2.0)
+    assert(stP == nextStateWindow(window, state, 7L, 0.5, 2.0), "state tables differ")
     // sanity on the semantics themselves: a refills to 1.7 → admits 1
     // (min depth, then discovered_at), c refills to 0.6 → admits 0,
     // idle carries untouched
-    val admByHost = admP.collect().groupBy(_.getString(1)).view.mapValues(_.map(_.getString(0)).toSet).toMap
+    val admByHost = flagged.filter(_.getAs[Boolean]("admit"))
+      .groupBy(_.getString(1)).view.mapValues(_.map(_.getString(0)).toSet).toMap
     assert(admByHost.getOrElse("a.test", Set()) == Set("http://a.test/2"))
     assert(!admByHost.contains("c.test"))
-    val st = stP.collect().map(r => r.getString(0) -> (r.getDouble(1), r.getLong(2))).toMap
+    val st = stP.map(r => r._1 -> (r._2, r._3)).toMap
     assert(st("idle.test") == ((0.7, 2L)))
     assert(st("c.test") == ((0.6, 7L)))
   }
 
   test("fused sorted-pop admission ≡ pop → window flagging (heap eviction included)") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     import graft.frontier.Frontier
+    import StreamingSpec.{mapOf, mergedRows, nextStateWindow, flagAdmissionsWindow}
     // commit a frontier through the real table so the fused pass sees the
     // sorted bucket files it requires; perBucketBudget=3 forces the
     // per-bucket heap to EVICT (7 hosts × budget 2 >> 3 per bucket) — the
@@ -102,13 +109,14 @@ class StreamingSpec extends AnyFunSuite {
       (0 until 200).map(i => (s"http://h${i % 7}.test/p/$i", i % 3, i.toLong))
         .toDF("url", "depth", "discovered_at"), 4)
     table.commit(f, 0)
-    val state = Seq(("h0.test", 1.2, 6L), ("h3.test", 0.1, 6L))
-      .toDF("host", "tokens", "last_round")
+    val stateSeq = Seq(("h0.test", 1.2, 6L), ("h3.test", 0.1, 6L))
+    val state = stateSeq.toDF("host", "tokens", "last_round")
     val (roundId, rate, burst) = (7L, 0.5, 2.0)
-    val m = Politeness.stateMapOf(state, 1000000).get
+    val acc = new Politeness.AdmittedCountsAcc()
+    spark.sparkContext.register(acc)
     val fused = Frontier.popSortedFifoFlagged(table.read(spark), 2, 3,
-      spark.sparkContext.broadcast(m), roundId, rate, burst)
-    val reference = Politeness.flagAdmissionsWindow(
+      spark.sparkContext.broadcast(mapOf(stateSeq)), roundId, rate, burst, acc)
+    val reference = flagAdmissionsWindow(
       Frontier.pop(table.read(spark), "fifo", 42L, 2, 3, sorted = true),
       state, roundId, rate, burst)
     def verdicts(df: org.apache.spark.sql.DataFrame) =
@@ -117,11 +125,10 @@ class StreamingSpec extends AnyFunSuite {
     // heap eviction really happened: 7 hosts × budget 2 = 14 offered, and
     // pigeonhole puts ≥2 hosts (≥4 offers > cap 3) in some bucket
     assert(fused.count() < 14)
-    // and the next-state tables agree too
-    def stRows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toSeq).toSet
-    assert(stRows(Politeness.nextState(fused, state, roundId, rate, burst)) ==
-      stRows(Politeness.nextState(reference, state, roundId, rate, burst)))
+    // and the next-state tables agree too: the accumulator counts the
+    // fused pass produced, merged into the map, ≡ the window aggregate
+    assert(mergedRows(mapOf(stateSeq), acc, roundId, rate, burst) ==
+      nextStateWindow(reference, state, roundId, rate, burst))
   }
 
   test("robots rules are deterministic; filter drops disallowed paths") {
@@ -375,4 +382,63 @@ class StreamingSpec extends AnyFunSuite {
       assert(fps.distinct.size == 3)
     } finally q.stop()
   }
+}
+
+object StreamingSpec {
+  import org.apache.spark.sql.DataFrame
+  import org.apache.spark.sql.functions._
+
+  def mapOf(rows: Seq[(String, Double, Long)]): java.util.HashMap[String, (Double, Long)] = {
+    val m = new java.util.HashMap[String, (Double, Long)]()
+    rows.foreach { case (h, t, lr) => m.put(h, (t, lr)) }
+    m
+  }
+
+  /** The crawler's next-state rows, host-sorted: the accumulator's counts
+    * merged into the token map. */
+  def mergedRows(m: java.util.HashMap[String, (Double, Long)],
+      acc: Politeness.AdmittedCountsAcc, roundId: Long, rate: Double,
+      burst: Double): Seq[(String, Double, Long)] =
+    Politeness.mergeAdmitted(m, acc.flattened, roundId, rate, burst).asScala
+      .map { case (h, (t, lr)) => (h, t, lr) }.toSeq.sortBy(_._1)
+
+  /** Window-form reference for the admission verdicts: join the state,
+    * refill in columns, rank each host's popped rows by (depth,
+    * discovered_at, url) and admit rank ≤ floor(tokens). Shuffles and
+    * sorts the whole popped set on host. */
+  def flagAdmissionsWindow(popped: DataFrame, state: DataFrame, roundId: Long,
+      ratePerRound: Double, burst: Double): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    popped
+      .join(state, Seq("host"), "left")
+      .withColumn("refilled", refilled(roundId, ratePerRound, burst))
+      .withColumn("rn", row_number().over(Window.partitionBy(col("host"))
+        .orderBy(col("depth"), col("discovered_at"), col("url"))))
+      .withColumn("admit", col("rn") <= floor(col("refilled")))
+      .select((popped.columns.toIndexedSeq :+ "admit").map(col): _*)
+  }
+
+  /** Window-form reference for the next state table, as host-sorted rows:
+    * a per-host admitted aggregate over the flagged rows joined against
+    * the previous state; hosts not popped carry their state. */
+  def nextStateWindow(flagged: DataFrame, state: DataFrame, roundId: Long,
+      ratePerRound: Double, burst: Double): Seq[(String, Double, Long)] = {
+    val perHost = flagged.groupBy(col("host")).agg(
+      sum(when(col("admit"), 1L).otherwise(0L)).as("adm_n"))
+    val touched = perHost
+      .join(state, Seq("host"), "left")
+      .withColumn("refilled", refilled(roundId, ratePerRound, burst))
+      .select(col("host"),
+        (col("refilled") - col("adm_n")).as("tokens"),
+        lit(roundId).as("last_round"))
+    val carried = state.join(perHost.select("host"), Seq("host"), "left_anti")
+    touched.unionByName(carried).collect()
+      .map(r => (r.getString(0), r.getDouble(1), r.getLong(2))).sortBy(_._1).toSeq
+  }
+
+  private def refilled(roundId: Long, ratePerRound: Double, burst: Double) =
+    least(lit(burst),
+      coalesce(col("tokens"), lit(burst)) +
+        greatest(lit(0L), lit(roundId) - coalesce(col("last_round"), lit(roundId - 1)))
+          * ratePerRound)
 }
