@@ -127,108 +127,6 @@ object Parsing {
     c == lower || c == (lower - 32)
   }
 
-  /**
-   * TOLERANT anchor-href extraction — HTML5-tokenizer attribute rules, for
-   * the malformed-HTML tail the reference's own fixtures never exercise
-   * (its goquery parser is a full HTML5 implementation; the fast path above
-   * mirrors only the TESTED fixture semantics). Handles, per the HTML5
-   * tag-tokenizer states:
-   *
-   *  - unquoted attribute values (`href=/x` — value ends at whitespace/'>');
-   *  - single/double-quoted values with '>' INSIDE the quotes
-   *    (`title="a>b" href=...` — the fast path's '>'-free-run spec stops
-   *    at the embedded '>' and misses the anchor);
-   *  - attribute names case-insensitively, valueless attributes, stray '/'
-   *    (self-closing-start state) between attributes;
-   *  - duplicate href: FIRST wins (HTML5 duplicate-attribute error drops
-   *    later ones);
-   *  - eof-in-tag: an anchor still open at EOF emits nothing (net/html
-   *    drops the partial token the same way).
-   *
-   * Remaining divergence from a FULL parser (documented, inherent to
-   * tag-level tokenization): anchors inside comments/script/rawtext are
-   * still extracted — goquery's tree builder would skip them; none of the
-   * reference's fixtures contain such bodies. Filter/resolve/dedup are
-   * exactly [[retrieveLinks]]'s. Fast path stays the default; this is the
-   * opt-in deep-tolerance variant (swap at Correlate.sessionFromFetch's
-   * single call site). ParsingSpec runs a differential corpus: parity with
-   * the fast path on well-formed soups, recovery of planted hrefs under
-   * malformed wrapping.
-   */
-  def retrieveLinksTolerant(baseUrl: String, body: String): Seq[String] = {
-    if (!looksLikeHtml(body)) return Seq.empty
-    val out = new java.util.LinkedHashSet[String]()
-    var origin: String = null
-    var originComputed = false
-    tolerantHrefs(body).foreach { href =>
-      if (UrlFns.isKeepableHref(href)) {
-        if (href.startsWith("http://") || href.startsWith("https://")) { out.add(href): Unit }
-        else {
-          if (!originComputed) { origin = UrlFns.originOf(baseUrl); originComputed = true }
-          if (origin != null) out.add(origin + href): Unit
-        }
-      }
-    }
-    import scala.jdk.CollectionConverters._
-    out.asScala.toSeq
-  }
-
-  /** Every closed `<a>` tag's FIRST href value, document order, by the
-    * HTML5 tag-tokenizer attribute states (see [[retrieveLinksTolerant]]). */
-  private[graft] def tolerantHrefs(body: String): Seq[String] = {
-    val out = Vector.newBuilder[String]
-    val n = body.length
-    var i = 0
-    while (i < n - 1) {
-      if (body.charAt(i) == '<' && isA(body.charAt(i + 1)) &&
-          (i + 2 >= n || !isWordChar(body.charAt(i + 2)))) {
-        var j = i + 2
-        var href: String = null
-        var closed = false
-        while (!closed && j < n) {
-          val c = body.charAt(j)
-          if (c == '>') { closed = true; j += 1 }
-          else if (isRegexWs(c) || c == '/') j += 1
-          else {
-            // attribute-name state: runs to ws / '=' / '>' / '/'
-            val ns = j
-            while (j < n && !isRegexWs(body.charAt(j)) && body.charAt(j) != '=' &&
-                body.charAt(j) != '>' && body.charAt(j) != '/') j += 1
-            val isHref = j - ns == 4 &&
-              isCi(body, ns, 'h') && isCi(body, ns + 1, 'r') &&
-              isCi(body, ns + 2, 'e') && isCi(body, ns + 3, 'f')
-            var k = j
-            while (k < n && isRegexWs(body.charAt(k))) k += 1
-            if (k < n && body.charAt(k) == '=') {
-              k += 1
-              while (k < n && isRegexWs(body.charAt(k))) k += 1
-              if (k < n && (body.charAt(k) == '"' || body.charAt(k) == '\'')) {
-                val q = body.charAt(k)
-                val vs = k + 1
-                k += 1
-                while (k < n && body.charAt(k) != q) k += 1
-                if (k < n) { // closing quote found; EOF-in-value drops the tag
-                  if (isHref && href == null) href = body.substring(vs, k)
-                  k += 1
-                }
-                j = k
-              } else {
-                val vs = k
-                while (k < n && !isRegexWs(body.charAt(k)) && body.charAt(k) != '>') k += 1
-                if (isHref && href == null) href = body.substring(vs, k)
-                j = k
-              }
-            }
-            // no '=': valueless attribute — j already past the name
-          }
-        }
-        if (closed && href != null) out += href
-        i = if (closed) j else n
-      } else i += 1
-    }
-    out.result()
-  }
-
   /** Regex reference implementation — the specification [[retrieveLinks]]'
     * scanner is property-tested against (not used on the hot path). */
   private[graft] def retrieveLinksRegex(baseUrl: String, body: String): Seq[String] = {

@@ -11,17 +11,24 @@ import org.apache.spark.sql.types._
  * transformations over a host-bucketed partitioned priority queue.
  *
  * Design for 10^10 URLs (north rule):
- *  - one row per ever-seen URL (like `url_visits`, store/init.go:220-225);
- *    `last_visit` = 0 until visited — visited rows stay, because the
- *    seen-set check is against ALL ever-seen URLs (store/url.go:168-170);
+ *  - one row per URL, `last_visit` = 0 until visited. The crawler's
+ *    frontier table holds only the unvisited pool; a popped row leaves it
+ *    for the append-only seen archive the round it is fetched
+ *    ([[graft.pipeline.Crawler]]). The seen-set check is still against ALL
+ *    ever-seen URLs (store/url.go:168-170): pool rows take part in
+ *    [[mergeRound]]'s aggregation and archived ones are dropped after it
+ *    by the exact per-bucket [[SeenIndex]] probe;
  *  - rows are partitioned by `host_bucket = pmod(xxhash64(host), P)` so
  *    pop/visit/dedup all shuffle on the same key → co-partitioned joins;
- *  - membership: broadcast Bloom filter as an ADVISORY pre-filter only —
- *    bloom-negative candidates are provably new and skip the join; only
- *    bloom-positives pay the exact left-anti join (false positives never
- *    drop a URL — SURVEY.md §7.3 hard part 2);
- *  - politeness: per-host row_number cap per round (the 1-in-flight ready
- *    token of worker.go:1238-1253, generalized to a budget);
+ *  - membership when seeding: broadcast Bloom filter as an ADVISORY
+ *    pre-filter only — bloom-negative candidates are provably new and
+ *    skip the join; only bloom-positives pay the exact left-anti join
+ *    (false positives never drop a URL — SURVEY.md §7.3 hard part 2);
+ *  - politeness: a per-host cap per round (the 1-in-flight ready token of
+ *    worker.go:1238-1253, generalized to a budget). The crawler's fifo
+ *    pop is a streaming per-host counter over the host-sorted bucket
+ *    files ([[popSortedFifo]]); the other samplers rank with row_number
+ *    windows ([[pop]]);
  *  - priority: (depth, discovered_at, url) — crawl-depth then discovery
  *    time, ties broken deterministically.
  */
@@ -181,18 +188,6 @@ object Frontier {
     df.select(col("url"), host.as("host"),
       hostBucket(host, numBuckets).as("host_bucket"),
       col("depth"), col("discovered_at"), lit(0L).as("last_visit"))
-  }
-
-  /** Stream anti-join of domains vs seen URLs in both schemes
-    * (urlStore.FilterKnown, store/url.go:251-276). */
-  def filterKnown(domains: DataFrame, frontier: DataFrame): DataFrame = {
-    val withUrls = domains
-      .withColumn("http_url", concat(lit("http://"), col("domain")))
-      .withColumn("https_url", concat(lit("https://"), col("domain")))
-    withUrls
-      .join(frontier.select(col("url").as("http_url")), Seq("http_url"), "left_anti")
-      .join(frontier.select(col("url").as("https_url")), Seq("https_url"), "left_anti")
-      .select(col("domain"))
   }
 
   /** Sampler priority key (lower = popped first).
@@ -454,19 +449,5 @@ object Frontier {
         bucketOfUrl.as("host_bucket"),
         unpackDepth(col("k")).as("depth"),
         unpackDiscoveredAt(col("k")).as("discovered_at"), col("last_visit"))
-  }
-
-  /** Mark popped URLs visited at `round` (urlStore.Visit,
-    * store/url.go:222-249). Rows are retained — the seen-set must keep
-    * them (resume + dedup correctness). Standalone form: a plain left
-    * join on `url` (the hot path never calls this — [[mergeRound]] fuses
-    * the visit marks into its single bucket-local aggregation). */
-  def markVisited(frontier: DataFrame, popped: DataFrame, round: Long): DataFrame = {
-    val marks = popped.select(col("url"), lit(round).as("new_visit"))
-    frontier
-      .join(marks, Seq("url"), "left")
-      .withColumn("last_visit",
-        when(col("new_visit").isNotNull, col("new_visit")).otherwise(col("last_visit")))
-      .drop("new_visit")
   }
 }

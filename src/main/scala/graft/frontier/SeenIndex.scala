@@ -35,8 +35,9 @@ import org.apache.spark.unsafe.types.UTF8String
  *
  * Exactness: membership is over the full URL strings (UTF8String equality)
  * — not a sketch — so the filter is exactly the archive anti-join it
- * replaces. The cuckoo/Bloom layers ([[SeenFilterStore]], [[Frontier
- * .newOnly]]) remain advisory volume reducers; this index is load-bearing.
+ * replaces. This index IS the north rule's per-partition refinement; the
+ * broadcast Bloom pre-filter of [[Frontier.newOnly]] is the seeding
+ * path's advisory volume reducer.
  *
  * Memory & cluster notes: one JVM holds the buckets it executes —
  * local-mode = all of them (bench: ~6 M URLs/round × rounds ≈ 1 GB of a
@@ -73,8 +74,9 @@ object SeenIndex {
   def contains(root: String, cutoff: Int, bucket: Int, url: UTF8String): Boolean =
     entryFor(root, cutoff, bucket).set.contains(url)
 
-  /** The bucket's loaded set (for callers probing many rows of one
-    * bucket — resolve once, probe a plain HashSet per row). */
+  /** Load (or catch up) the bucket's set and return it — the cold-load
+    * entry point perfbench's `frontier.seen_load_s` times; the crawl
+    * itself probes through [[contains]]. */
   def setFor(root: String, cutoff: Int, bucket: Int): java.util.Set[UTF8String] =
     entryFor(root, cutoff, bucket).set
 

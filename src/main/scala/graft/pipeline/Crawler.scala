@@ -16,8 +16,8 @@ import java.nio.file.{Files, Paths}
  * sequence of deterministic micro-batch "fetch rounds":
  *
  *   pop(budget) → fetch task (fetch → correlate → docs file + seen-archive
- *   slices) → frontier expand (dedup) + visit marks → atomic commit →
- *   lineage metrics.
+ *   slices) → frontier expand (dedup) + visit marks → bucket-file write →
+ *   lineage metrics → atomic commit.
  *
  * One round = one micro-batch (the reference's analogue is the
  * 1-token-per-worker ready loop, worker.go:1238-1253; our budget is
@@ -31,7 +31,10 @@ import java.nio.file.{Files, Paths}
  * and the round has exactly two commit points — the overwrite of the
  * round directories (`docs/round=r` and `seen/round=r`, cleared before
  * the fetch job) and the frontier manifest rename, which is what makes
- * round r visible. Everything is replayable: a torn round leaves the
+ * round r visible. Every file of the round is written before that rename
+ * (the politeness state and the lineage record are written inside the
+ * commit's barrier); only the prune of unreferenced frontier data dirs
+ * follows it. Everything is replayable: a torn round leaves the
  * manifest un-bumped, readers filter on the manifest round, the
  * SeenIndex only loads rounds before the running one, and re-running
  * round N overwrites its directories (idempotent replay — the
@@ -134,7 +137,6 @@ class Crawler(
     * frontier table reads THIS view. */
   private def poolView: DataFrame =
     Frontier.restorePool(frontierTable.read(spark), cfg.numBuckets)
-  val seenFilters = new graft.frontier.SeenFilterStore(workDir)
 
   /** Driver-resident politeness state (r4): the map round r needs is the
     * one round r-1 just computed — re-reading the state parquet and
@@ -195,8 +197,6 @@ class Crawler(
     seenWithRound.drop("round")
       .select(Frontier.schema.fieldNames.map(col).toIndexedSeq: _*)
 
-  def docIdOf(url: String): String = "d" + UrlFns.sha256Hex(url).substring(0, 16)
-
   /** Seed the frontier (round 0 commit). Seeds are depth 0, discovery order
     * = list order (ReadDomainsFromFile semantics, kraaler.go:29-57). */
   def addSeeds(urls: Seq[String]): Long =
@@ -215,12 +215,7 @@ class Crawler(
       expectedRows =
         frontierTable.currentSnapshot().map(_.rows).getOrElse(0L) + seenRows)
     // only the POOL is rewritten; archived rows never re-enter it
-    val merged = pool.unionByName(fresh)
-    val seedRound = math.max(lastRound, 0)
-    val rows = frontierTable.commit(merged, seedRound)
-    if (cfg.useSeenFilter)
-      seenFilters.updateAndSave(spark, seedRound, seedRound, cands, frontier())
-    rows + seenRows
+    frontierTable.commit(pool.unionByName(fresh), math.max(lastRound, 0)) + seenRows
   }
 
   /** Run one fetch round; returns stats (popped==0 ⇒ frontier exhausted). */
@@ -368,6 +363,26 @@ class Crawler(
       stateWrite = Some(t)
     }
 
+    // the round's one frontier commit. Its barrier joins the politeness
+    // state write and then writes the lineage record, so both are on disk
+    // before the manifest rename makes round r visible: a replay never
+    // reruns a committed round, so a record written after the rename
+    // could be lost for good. `seenRows` moves only once the rename is
+    // done (a torn round leaves it at round r-1's count).
+    def commitRound(poolNext: DataFrame, dirty: Set[Int]): RoundStats = {
+      var stats: RoundStats = null
+      frontierTable.commit(poolNext, r, Some(dirty), preClustered = true,
+        beforeRename = poolRows => {
+          joinStateWrite()
+          val rows = poolRows + seenRows + poppedN
+          stats = RoundStats(r, poppedN, fetchedOk, errs,
+            math.max(0L, rows - math.max(frontierRowsHint, 0L)), rows, offeredN)
+          writeLineage(stats, perBucketCounts)
+        })
+      seenRows += poppedN
+      stats
+    }
+
     // offered = pool rows the pop stage produced BEFORE the politeness
     // throttle — it distinguishes "frontier exhausted" (stop) from
     // "everything throttled this round" (advance and let tokens refill).
@@ -382,13 +397,10 @@ class Crawler(
     if (poppedN == 0) {
       // throttled to zero: commit no bucket (every bucket clean) so
       // the snapshot round advances and per-host tokens accrue
-      val empty = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Frontier.schema)
-      val rows = frontierTable.commit(empty, r, Some(Set.empty),
-        beforeRename = () => joinStateWrite()) + seenRows
-      writeLineage(r, Seq.empty, 0, 0, 0, 0, rows)
+      val stats = commitRound(spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Frontier.schema), Set.empty)
       cached.unpersist()
-      return RoundStats(r, 0, 0, 0, 0, rows, offeredN)
+      return stats
     }
 
     val written = spark.read.schema(Crawler.docsSchema)
@@ -453,7 +465,7 @@ class Crawler(
       }.toDF("url", "depth", "discovered_at")
     }
     val cands0 = Frontier.normalizeCandidates(thinned, cfg.numBuckets,
-      cfg.respectRobots, dedup = cfg.useSeenFilter)
+      cfg.respectRobots, dedup = false)
     // dirty buckets = buckets with pops or new candidates; ONLY their
     // frontier rows enter the merge shuffle and ONLY their files are
     // rewritten — per-round frontier I/O is O(touched), not O(pool).
@@ -464,10 +476,8 @@ class Crawler(
     val allBuckets = frontierTable.currentSnapshot().map(_.buckets.keySet).getOrElse(Set.empty)
     val poppedBuckets = perBucketCounts.map(_._1).toSet
     val dense = allBuckets.nonEmpty && allBuckets.subsetOf(poppedBuckets)
-    // persist only when consumed more than once (sparse path's distinct
-    // job, or the seen-filter's split + update passes)
-    val multiPass = !dense || cfg.useSeenFilter
-    val cands = if (multiPass) cands0.persist() else cands0
+    // persist only when consumed twice (the sparse path's distinct job)
+    val cands = if (dense) cands0 else cands0.persist()
     val dirty =
       if (dense) poppedBuckets
       else cands.select("host_bucket").distinct().collect().map(_.getInt(0)).toSet ++
@@ -486,47 +496,29 @@ class Crawler(
       if (dense) pool
       else pool.filter(col("host_bucket").isin(dirty.toSeq.map(Int.box): _*))
     graft.functions.GraftExpressions.register(spark)
-    val dropArchived = (df: DataFrame) => df.filter(
-      !graft.functions.GraftExpressions.seen_index_contains(col("url"), seenDir, r - 1))
-    // optional per-partition cuckoo refinement (north rule): provably-new
-    // candidates bypass the exact merge aggregation; correctness never
-    // depends on it (advisory only — see SeenFilterStore)
-    // mergeRound's output is already bucket-hash-partitioned — the commit
-    // reuses that exchange (preClustered) unless the seen-filter union
-    // broke it; the pool filter below preserves it. dropArchived applies
-    // BEFORE that union (the union would break the partition→bucket
-    // binding the index depends on; provably-new rows can't be archived).
-    val merged =
-      if (cfg.useSeenFilter) {
-        val (provablyNew, maybeSeen) = seenFilters.split(spark, r - 1, cands)
-        dropArchived(Frontier.mergeRound(frontierDirty, maybeSeen, popped, r, cfg.numBuckets))
-          .unionByName(provablyNew)
-      } else dropArchived(Frontier.mergeRound(frontierDirty, cands, popped, r, cfg.numBuckets))
-    val poolNext = merged.filter(col("last_visit") === 0L)
-    val poolRows = frontierTable.commit(poolNext, r, Some(dirty),
-      preClustered = !cfg.useSeenFilter, beforeRename = () => joinStateWrite())
-    seenRows += poppedN
-    val frontierRows = poolRows + seenRows
-    if (cfg.useSeenFilter)
-      seenFilters.updateAndSave(spark, r, r - 1, cands, frontier())
-    if (multiPass) cands.unpersist()
-    val newN = math.max(0L, frontierRows - math.max(frontierRowsHint, 0L))
-
-    writeLineage(r, perBucketCounts, poppedN, fetchedOk, errs, newN, frontierRows)
+    // mergeRound's output is bucket-hash-partitioned (partition i holds
+    // bucket i), which both the archive probe below and the commit rely
+    // on: the commit reuses that exchange (preClustered), so the merge and
+    // the sorted bucket-file write share ONE shuffle. Both filters are
+    // narrow and keep the partitioning.
+    val poolNext = Frontier.mergeRound(frontierDirty, cands, popped, r, cfg.numBuckets)
+      .filter(!graft.functions.GraftExpressions.seen_index_contains(col("url"), seenDir, r - 1))
+      .filter(col("last_visit") === 0L)
+    val stats = commitRound(poolNext, dirty)
+    if (!dense) cands.unpersist()
     cached.unpersist()
-    RoundStats(r, poppedN, fetchedOk, errs, newN, frontierRows, offeredN)
+    stats
   }
 
   /** Per-round, per-partition lineage metrics (north rule: "checkpoints
     * frontier + seen-set state per partition with lineage metrics"). */
-  private def writeLineage(r: Int, perBucketCounts: Seq[(Int, Long)], poppedN: Long,
-      ok: Long, errs: Long, newN: Long, frontierRows: Long): Unit = {
+  private def writeLineage(s: RoundStats, perBucketCounts: Seq[(Int, Long)]): Unit = {
     val perBucket = perBucketCounts
       .map { case (b, c) => s""""$b":$c""" }.mkString("{", ",", "}")
     Files.createDirectories(Paths.get(s"$workDir/lineage"))
-    Files.writeString(Paths.get(s"$workDir/lineage/round-$r.json"),
-      s"""{"round":$r,"popped":$poppedN,"fetched_ok":$ok,"errors":$errs,""" +
-        s""""new_urls":$newN,"frontier_rows":$frontierRows,""" +
+    Files.writeString(Paths.get(s"$workDir/lineage/round-${s.round}.json"),
+      s"""{"round":${s.round},"popped":${s.popped},"fetched_ok":${s.fetchedOk},""" +
+        s""""errors":${s.errors},"new_urls":${s.newUrls},"frontier_rows":${s.frontierRows},""" +
         s""""popped_per_bucket":$perBucket}""")
   }
 
@@ -593,6 +585,10 @@ object Crawler {
   /** Columns of a docs file (`round` is the partition dir). */
   lazy val docsSchema: org.apache.spark.sql.types.StructType = crawlOutEncoder.schema
 
+  /** A fetched page's doc id: "d" + the first 16 hex digits of the url's
+    * SHA-256. */
+  def docIdOf(url: String): String = "d" + UrlFns.sha256Hex(url).substring(0, 16)
+
   /** A fetch task's commit message: per-bucket offered and admitted pop
     * rows and the fetch outcomes (its files are committed by then). */
   final case class FetchCommit(offered: Array[Long], admitted: Array[Long],
@@ -655,8 +651,7 @@ object Crawler {
           sw.write(seenRow)
           val url = row.getUTF8String(0).toString
           val fr = sim.fetch(url)
-          val s = Correlate.sessionFromFetch(
-            "d" + UrlFns.sha256Hex(url).substring(0, 16), fr)
+          val s = Correlate.sessionFromFetch(docIdOf(url), fr)
           if (store != null) {
             fr.bodies.foreach(b => store.storeBody(b.body))
             fr.screenshots.zip(fr.screenshot_bytes).foreach {
@@ -707,7 +702,6 @@ case class CrawlConfig(
     saltFactor: Int = 0,
     boost: Double = 2000.0,
     respectRobots: Boolean = false,
-    useSeenFilter: Boolean = false,
     /** Per-host token-bucket throttle (fetch slots earned per round /
       * bucket cap); 0 disables. Rejected pops stay queued. */
     politenessRate: Double = 0.0,

@@ -162,13 +162,13 @@ class IcebergishTable(val root: String, schema: StructType,
     *   partitioned by `bucketCol` (e.g. straight out of
     *   [[graft.frontier.Frontier.mergeRound]]) — the commit skips its own
     *   repartition, so merge + sorted write share ONE exchange.
-    * @param beforeRename invoked after the data write but
-    *   BEFORE the atomic manifest rename — the caller's barrier for
-    *   overlapped side writes (the politeness state) that must
-    *   be durable before this snapshot becomes visible. A throw aborts
-    *   the commit with the manifest un-bumped (torn round). */
+    * @param beforeRename invoked with the new snapshot's total rows after
+    *   the data write but BEFORE the atomic manifest rename — the caller's
+    *   barrier for side writes (the politeness state, the round's lineage
+    *   record) that must be durable before this snapshot becomes visible.
+    *   A throw aborts the commit with the manifest un-bumped (torn round). */
   def commit(df: DataFrame, round: Int, dirtyBuckets: Option[Set[Int]] = None,
-      preClustered: Boolean = false, beforeRename: () => Unit = () => ()): Long = {
+      preClustered: Boolean = false, beforeRename: Long => Unit = _ => ()): Long = {
     Files.createDirectories(Paths.get(root))
     val spark = df.sparkSession
     val nonce = java.util.UUID.randomUUID().toString.take(8)
@@ -214,7 +214,6 @@ class IcebergishTable(val root: String, schema: StructType,
     val written: Map[Int, BucketEntry] =
       files.map(f => f.bucket -> BucketEntry(dataDir, f.rows)).toMap
 
-    beforeRename()
     val prev = currentSnapshot()
     val kept: Map[Int, BucketEntry] = (prev, dirtyBuckets) match {
       case (Some(p), Some(dirty)) => p.buckets -- dirty
@@ -222,6 +221,7 @@ class IcebergishTable(val root: String, schema: StructType,
     }
     val buckets = kept ++ written
     val rows = buckets.valuesIterator.map(_.rows).sum
+    beforeRename(rows)
     renameManifest(Snapshot(round, rows, buckets))
     prune(keep = buckets.valuesIterator.map(_.dir).toSet)
     rows

@@ -108,6 +108,10 @@ class CrawlOracleSpec extends AnyFunSuite {
     tokenBucketMatchesOracle("uniform")
   }
 
+  test("token-bucket politeness, pair sampler: rate-limited crawl equals the sequential bucket oracle") {
+    tokenBucketMatchesOracle("pair")
+  }
+
   private def tokenBucketMatchesOracle(sampler: String): Unit = {
     val sim = new FetchSim(numHosts = 2, pagesPerHost = 12, linksPerPage = 2)
     val dir = java.nio.file.Files.createTempDirectory(s"graft-polite-$sampler").toString

@@ -104,22 +104,6 @@ class FrontierSpec extends AnyFunSuite {
       assert(top.toSeq == Seq("http://a1.test/new"), s"seed $seed")
     }
   }
-
-  test("markVisited sets last_visit, keeps rows (seen-set retention)") {
-    val f = cands(("http://a.test/1", 0, 0L), ("http://a.test/2", 0, 1L))
-    val popped = Frontier.pop(f, "fifo", 42L, 1, 10)
-    val marked = Frontier.markVisited(f, popped, round = 3L)
-    assert(marked.count() == 2)
-    assert(marked.filter(col("last_visit") === 3L).count() == 1)
-  }
-
-  test("filterKnown passes only domains with both schemes unseen (store/url.go:251-276)") {
-    val f = cands(("http://seen.test/", 0, 0L))
-      .withColumn("url", lit("http://seen.test")) // exact string match form
-    val domains = Seq("seen.test", "fresh.test").toDF("domain")
-    val out = Frontier.filterKnown(domains, f).collect().map(_.getString(0))
-    assert(out.toSeq == Seq("fresh.test"))
-  }
 }
 
 /** End-to-end crawl semantics — TestWorkerController closure
@@ -323,7 +307,7 @@ class CrawlerSpec extends AnyFunSuite {
         .collect().map(r => (r.getString(0), r.getString(1), r.getString(2)))
       assert(spans.exists { case (_, k, t) => k == "body" && t.contains("leaf content here") })
       assert(spans.exists { case (_, k, t) => k == "response" && t.contains("text/html") })
-      val bId = c.docIdOf(s"$base/b")
+      val bId = Crawler.docIdOf(s"$base/b")
       val bReqs = spans.filter { case (d, k, _) => d == bId && k == "request" }
       assert(bReqs.length == 2, s"redirect chain not two hops: $bReqs")
       assert(bReqs.exists(_._3.contains("/c")), "hop request to /c missing")

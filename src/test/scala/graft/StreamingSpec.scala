@@ -292,6 +292,40 @@ class StreamingSpec extends AnyFunSuite {
     assert(treeHashes(torn, "seen") == treeHashes(dir, "seen"))
   }
 
+  test("torn round: the lineage record is written before the manifest rename — a failed write leaves the round uncommitted, replay restores it") {
+    import java.nio.file.{Files, Paths}
+    val sim = new FetchSim(numHosts = 12, pagesPerHost = 8)
+    val cfg = CrawlConfig(numBuckets = 4, perHostBudget = 3, perBucketBudget = 100)
+    val ref = tmpDir()
+    val c0 = new Crawler(spark, ref, sim, cfg)
+    c0.addSeeds(sim.seedUrls(10))
+    c0.round()
+    val want = c0.round()
+    // the same crawl, with lineage/ replaced by a plain file after round 1:
+    // round 2's lineage write fails, which must abort its commit
+    val dir = tmpDir()
+    val c = new Crawler(spark, dir, sim, cfg)
+    c.addSeeds(sim.seedUrls(10))
+    c.round()
+    val lineage = Paths.get(dir, "lineage")
+    val round1 = Files.readAllBytes(lineage.resolve("round-1.json"))
+    Files.delete(lineage.resolve("round-1.json"))
+    Files.delete(lineage)
+    Files.writeString(lineage, "not a directory")
+    intercept[java.io.IOException](c.round())
+    assert(c.lastRound == 1, "a round without its lineage record must not commit")
+    // restore the directory; a fresh crawler replays round 2
+    Files.delete(lineage)
+    Files.createDirectories(lineage)
+    Files.write(lineage.resolve("round-1.json"), round1)
+    val c2 = new Crawler(spark, dir, sim, cfg)
+    assert(c2.lastRound == 1)
+    assert(c2.round() == want)
+    assert(c2.lastRound == 2)
+    assert(Files.readAllBytes(lineage.resolve("round-2.json")).sameElements(
+      Files.readAllBytes(Paths.get(ref, "lineage", "round-2.json"))))
+  }
+
   test("streaming crawler: micro-batch rounds crawl the chain to closure, then resume-noop") {
     val n = 12
     val dir = tmpDir()
