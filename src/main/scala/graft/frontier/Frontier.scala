@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+import scala.jdk.CollectionConverters._
 
 /**
  * The distributed URL frontier — kraaler's `urlStore` (seen-set + pool +
@@ -15,9 +17,10 @@ import org.apache.spark.sql.types._
  *    frontier table holds only the unvisited pool; a popped row leaves it
  *    for the append-only seen archive the round it is fetched
  *    ([[graft.pipeline.Crawler]]). The seen-set check is still against ALL
- *    ever-seen URLs (store/url.go:168-170): pool rows take part in
- *    [[mergeRound]]'s aggregation and archived ones are dropped after it
- *    by the exact per-bucket [[SeenIndex]] probe;
+ *    ever-seen URLs (store/url.go:168-170): each bucket's round merge
+ *    ([[mergeBucket]]) drops a candidate that is still in the bucket's
+ *    pool, visited this round, or archived (the exact per-bucket
+ *    [[SeenIndex]] probe), and only the candidates are shuffled;
  *  - rows are partitioned by `host_bucket = pmod(xxhash64(host), P)` so
  *    pop/visit/dedup all shuffle on the same key → co-partitioned joins;
  *  - membership when seeding: broadcast Bloom filter as an ADVISORY
@@ -50,19 +53,17 @@ object Frontier {
    * a row by `pmod(murmur3(col), P)` — murmur-hashing the `numBuckets`
    * distinct bucket ids into `numBuckets` partitions is a birthday draw
    * that lands 3-4 buckets in one partition while leaving others empty, a
-   * 3-4× straggler on every post-shuffle stage keyed by bucket (merge
-   * aggregate, per-bucket sort, bucket-file write). At 32 cores the merge
-   * is only ~4 task waves deep, so the straggler IS the stage wall.
+   * 3-4× straggler on every post-shuffle stage keyed by bucket (the
+   * round's bucket merge and bucket-file write). At 32 cores the merge is
+   * only ~4 task waves deep, so the straggler IS the stage wall.
    *
    * Fix: a driver-computed token array where `token(b)` is the smallest
    * int whose Murmur3_x86_32(seed 42) — exactly the hash family
    * `HashPartitioning.partitionIdExpression` applies to an int column —
-   * lands in partition b. Repartitioning AND grouping on
-   * `element_at(tokens, bucket+1)` keeps the one-exchange plan (the token
-   * is a function of the bucket, hence of the url: groups are unchanged
-   * and the aggregate's ClusteredDistribution is satisfied by the same
-   * canonicalized expression) while giving bucket i partition i,
-   * exactly one bucket per task. Deterministic: depends only on n.
+   * lands in partition b. Repartitioning on `element_at(tokens, bucket+1)`
+   * gives bucket i partition i, exactly one bucket per task, so the merge
+   * task of partition i IS bucket i's task ([[roundMerge]]).
+   * Deterministic: depends only on n.
    */
   private val tokenCache = new java.util.concurrent.ConcurrentHashMap[Int, Array[Int]]()
   def partitionTokens(n: Int): Array[Int] =
@@ -86,12 +87,11 @@ object Frontier {
 
   /**
    * First-seen priority packed into ONE non-negative BIGINT —
-   * `src(1b) | depth(15b) | discovered_at(47b)` — so the frontier's dedup
-   * aggregations are `min(long)`: a fixed-width buffer Spark executes as a
-   * pure HashAggregate. A `min(struct(...))` buffer is var-width, which
-   * silently planned as SortAggregate and re-sorted the whole merge input
-   * every round (found via stage metrics, round 2). Bounds asserted:
-   * depth < 2^15, discovered_at < 2^47 (10^10-scale discovery stamps fit).
+   * `src(1b) | depth(15b) | discovered_at(47b)` — so a dedup aggregation
+   * is `min(long)`, a fixed-width buffer Spark runs as a pure
+   * HashAggregate (a var-width `min(struct(...))` buffer plans as a
+   * SortAggregate), and the round's delta ships one long per candidate.
+   * Bounds: depth < 2^15, discovered_at < 2^47.
    */
   def packPrio(src: Column, depth: Column, discoveredAt: Column): Column =
     src.cast(LongType) * lit(1L << 62) +
@@ -111,8 +111,8 @@ object Frontier {
    * then min discovered_at) occurrence.
    *
    * @param dedup when false, skips the in-batch groupBy — callers feeding
-   *   [[mergeRound]] leave dedup to ITS single aggregation (min-struct
-   *   semantics are identical), saving one full candidate shuffle/round.
+   *   the round's bucket merge leave dedup to [[mergeBucket]] (same
+   *   first-seen rule), saving one full candidate shuffle/round.
    */
   def normalizeCandidates(raw: DataFrame, numBuckets: Int,
       respectRobots: Boolean = false, dedup: Boolean = true): DataFrame = {
@@ -177,7 +177,7 @@ object Frontier {
   /** Restore the derivable columns a SLIM pool file drops
     * ([[graft.sources.IcebergishTable]] `dropCols`): `host` and
     * `host_bucket` are pure functions of `url` (the same expressions
-    * [[normalizeCandidates]] and [[mergeRound]] derive them with, so the
+    * [[normalizeCandidates]] and [[roundMerge]] derive them with, so the
     * restored values — and the file sort order that was computed on the
     * materialized column — are identical), and `last_visit` is constant 0
     * for every pool row since the pool/seen split. Dropping them cut ~25 %
@@ -381,73 +381,121 @@ object Frontier {
       .select("url", "host", "host_bucket", "depth", "discovered_at", "admit")
   }
 
+  /** One frontier row as the bucket merge sees it (`host` = `url_host`). */
+  final case class BucketRow(url: UTF8String, host: UTF8String, depth: Int,
+      discoveredAt: Long)
+
+  /** The bucket-file order (host, depth, discovered_at, url), strings as
+    * UTF8String bytes: the order `sortWithinPartitions` gives these
+    * columns, so a merged bucket file is byte-identical to a re-sorted one. */
+  val fileOrder: Ordering[BucketRow] = new Ordering[BucketRow] {
+    def compare(a: BucketRow, b: BucketRow): Int = {
+      var c = a.host.binaryCompare(b.host)
+      if (c == 0) c = Integer.compare(a.depth, b.depth)
+      if (c == 0) c = java.lang.Long.compare(a.discoveredAt, b.discoveredAt)
+      if (c == 0) c = a.url.binaryCompare(b.url)
+      c
+    }
+  }
+
+  /** [[hostBucket]] of one host: xxhash64 (seed 42) pmod `numBuckets`. */
+  def bucketOf(host: UTF8String, numBuckets: Int): Int = {
+    val h = org.apache.spark.sql.catalyst.expressions.XXH64
+      .hashUnsafeBytes(host.getBaseObject, host.getBaseOffset, host.numBytes, 42L)
+    (((h % numBuckets) + numBuckets) % numBuckets).toInt
+  }
+
   /**
-   * One-pass round merge — the MERGE INTO formulation of
-   * (Add new candidates ⊕ Visit popped, store/url.go:155-249) as a SINGLE
-   * hash aggregation: union the frontier rows, the candidate rows, and the
-   * visit marks (popped rows re-tagged with `last_visit = round`), then
-   * one groupBy(url) resolving
-   *
-   *  - identity: `min(packPrio(src, depth, discovered_at))` with src=0 for
-   *    existing rows and src=1 for candidates — an existing row ALWAYS wins
-   *    (first-seen dedup, store/url.go:168-170), and among new candidates
-   *    the (min depth, min discovered_at) occurrence wins, exactly the
-   *    normalizeCandidates in-batch rule (so callers skip that groupBy);
-   *  - `last_visit = max(...)` — popped rows mark this round, others keep
-   *    their old mark.
-   *
-   * ONE exchange total, pure HashAggregate (fixed-width LONG buffers — see
-   * [[packPrio]]; NO sort anywhere: the round-1 full outer join sorted BOTH
-   * sides). The exchange hashes on `host_bucket`, NOT on the group key:
-   * host_bucket is a function of url, so bucket-clustering already
-   * co-locates every url's rows, and Catalyst accepts it for the groupBy's
-   * ClusteredDistribution (subset rule) — the aggregate runs bucket-local
-   * with no second exchange, AND the output is exactly the partitioning the
-   * table commit needs, so the commit's own repartition disappears too
-   * (round 2 paid exchange-on-url + exchange-on-bucket = two full passes of
-   * the pool over the wire per round). Pass only the DIRTY buckets'
-   * frontier rows — clean buckets never enter the shuffle, making
-   * per-round cost O(touched data), the real MERGE INTO shape.
+   * One bucket's round merge — Add ⊕ Visit (store/url.go:155-249) over
+   * the bucket's sorted pool stream. A pool row visited this round leaves
+   * the pool; among one url's candidates the minimum (depth,
+   * discovered_at) wins; a candidate dies when its url is visited,
+   * `archived`, or still in the pool (the existing row always wins,
+   * store/url.go:168-170). Output is in [[fileOrder]], as `pool` must be.
+   * Only the surviving candidates are sorted; the pool streams through
+   * one host at a time (a url's duplicates share its host), so memory is
+   * O(candidates + the largest host's pool rows). Pool rows are never
+   * archived: a pop leaves the pool the round it is archived.
    */
-  def mergeRound(frontier: DataFrame, cands: DataFrame, popped: DataFrame,
-      round: Long, numBuckets: Int): DataFrame = {
-    // `host` AND `host_bucket` are pure functions of url (url_host — the
-    // same expression normalizeCandidates derived them with) — DON'T ship
-    // them through the exchange: at 8 B each of a ~64 B UnsafeRow that's
-    // ~30% of the round's shuffle bytes (which cost fixed ~200 MB/s kernel
-    // time on this VM, and network at the 10^10 design point). The
-    // exchange hashes on the recomputed bucket EXPRESSION; both are
-    // rematerialized post-agg, codegen'd, on the already-deduped rows.
-    def slim(df: DataFrame, src: Int, visit: Column): DataFrame =
-      df.select(col("url"),
-        packPrio(lit(src), col("depth"), col("discovered_at")).as("k"),
-        visit.as("last_visit"))
-    val f = slim(frontier, 0, col("last_visit"))
-    val c = slim(cands, 1, lit(0L))
-    // popped ⊆ frontier: full identity is already on the row
-    val m = slim(popped, 0, lit(round))
-    // the bucket EXPRESSION is also a grouping key (groups unchanged —
-    // it's a function of url): Catalyst's alias-aware partitioning then
-    // recognizes the repartition-on-expression as satisfying the
-    // aggregate's clustering, keeping the plan at ONE exchange
+  def mergeBucket(pool: Iterator[BucketRow], cands: Iterator[BucketRow],
+      visited: UTF8String => Boolean, archived: UTF8String => Boolean): Iterator[BucketRow] = {
+    val best = new java.util.HashMap[UTF8String, BucketRow]()
+    cands.foreach { c =>
+      val b = best.get(c.url)
+      if (b == null || c.depth < b.depth || (c.depth == b.depth && c.discoveredAt < b.discoveredAt))
+        best.put(c.url, c)
+    }
+    val fresh = best.values.iterator.asScala
+      .filterNot(c => visited(c.url) || archived(c.url)).toArray.sorted(fileOrder)
+    val kept = pool.filterNot(p => visited(p.url)).buffered
+    var ci = 0
+    def hostRun(): Iterator[BucketRow] = {
+      val host =
+        if (!kept.hasNext || (ci < fresh.length &&
+            fresh(ci).host.binaryCompare(kept.head.host) < 0)) fresh(ci).host
+        else kept.head.host
+      val rows = scala.collection.mutable.ArrayBuffer.empty[BucketRow]
+      while (kept.hasNext && kept.head.host == host) rows += kept.next()
+      val poolRows = rows.length
+      val known = if (ci < fresh.length && fresh(ci).host == host) rows.map(_.url).toSet
+        else Set.empty[UTF8String]
+      while (ci < fresh.length && fresh(ci).host == host) {
+        if (!known(fresh(ci).url)) rows += fresh(ci)
+        ci += 1
+      }
+      // two sorted runs: TimSort merges them in one linear pass
+      if (poolRows == 0 || poolRows == rows.length) rows.iterator
+      else rows.sorted(fileOrder).iterator
+    }
+    Iterator.continually(()).takeWhile(_ => kept.hasNext || ci < fresh.length)
+      .flatMap(_ => hostRun())
+  }
+
+  /** The round's candidate delta: (url, packed priority) rows shuffled on
+    * the bucket token, so partition i holds exactly bucket i's candidates
+    * ([[partitionTokens]]; REPARTITION_BY_NUM, which AQE never
+    * coalesces). `host` and `host_bucket` are recomputed from url, not
+    * shuffled. */
+  def roundDelta(cands: DataFrame, numBuckets: Int): DataFrame = {
     val bucketOfUrl =
       hostBucket(graft.functions.GraftExpressions.url_host(col("url")), numBuckets)
-    // exchange + group on the balanced TOKEN of the bucket (still a pure
-    // function of url — groups unchanged, one exchange, see partitionTokens):
-    // bucket i lands alone in shuffle partition i, so the aggregate, the
-    // per-bucket sort, and the bucket-file write all run skew-free. The
-    // explicit partition count pins the 1:1 layout (and marks the shuffle
-    // REPARTITION_BY_NUM, which AQE never coalesces — a coalesce would
-    // re-merge buckets into shared tasks).
-    val tokenOfUrl = bucketToken(bucketOfUrl, numBuckets)
-    f.unionByName(c).unionByName(m)
-      .repartition(numBuckets, tokenOfUrl)
-      .groupBy(col("url"), tokenOfUrl.as("pt"))
-      .agg(min(col("k")).as("k"), max(col("last_visit")).as("last_visit"))
-      .select(col("url"),
-        graft.functions.GraftExpressions.url_host(col("url")).as("host"),
-        bucketOfUrl.as("host_bucket"),
-        unpackDepth(col("k")).as("depth"),
-        unpackDiscoveredAt(col("k")).as("discovered_at"), col("last_visit"))
+    cands.select(col("url"), packPrio(lit(0), col("depth"), col("discovered_at")).as("k"))
+      .repartition(numBuckets, bucketToken(bucketOfUrl, numBuckets))
+  }
+
+  /**
+   * The round's bucket merge, one task per bucket in
+   * [[graft.sources.IcebergishTable.commitMerge]]: bucket b's
+   * [[roundDelta]] rows, its visit marks (the `seen/round=r/host_bucket=b`
+   * slice the fetch task wrote) and its pool file go through
+   * [[mergeBucket]], with the [[SeenIndex]] of rounds ≤ r-1 as the
+   * archive. A bucket with neither candidates nor visits stays clean and
+   * its file is not read. A delta row of another bucket fails the task.
+   */
+  def roundMerge(seenRoot: String, round: Int, numBuckets: Int)
+      : graft.sources.IcebergishTable.BucketMerge = (bucket, delta, pool) => {
+    val visited = SeenIndex.roundSlice(seenRoot, round, bucket)
+    if (!delta.hasNext && visited.isEmpty) None
+    else {
+      def row(url: UTF8String, depth: Int, discoveredAt: Long): BucketRow =
+        BucketRow(url, UTF8String.fromString(graft.functions.UrlFns.hostOf(url.toString)),
+          depth, discoveredAt)
+      val cands = delta.map { r =>
+        val k = r.getLong(1)
+        val c = row(r.getUTF8String(0).copy(), (k >>> 47).toInt, k & ((1L << 47) - 1))
+        if (c.host == null || bucketOf(c.host, numBuckets) != bucket)
+          throw new IllegalStateException(s"delta row ${c.url} reached the merge task of " +
+            s"bucket $bucket: the delta is not partitioned by bucket token")
+        c
+      }
+      val merged = mergeBucket(
+        pool().map(r => row(r.getUTF8String(0).copy(), r.getInt(1), r.getLong(2))),
+        cands, visited.contains, SeenIndex.contains(seenRoot, round - 1, bucket, _))
+      val out = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(3)
+      Some(merged.map { e =>
+        out.update(0, e.url); out.setInt(1, e.depth); out.setLong(2, e.discoveredAt)
+        out
+      })
+    }
   }
 }

@@ -1,9 +1,5 @@
 package graft.frontier
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, Nondeterministic, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.types.{BooleanType, DataType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
@@ -11,27 +7,21 @@ import org.apache.spark.unsafe.types.UTF8String
  * archive — the north rule's "per-partition … refinement for the 10^10-URL
  * seen-set", hardened from probabilistic to exact.
  *
- * Why it exists (round 3, found by the scaling decomposition): the round
- * merge previously unioned the FULL ever-seen archive into its shuffle so
- * that a candidate re-discovering an already-visited URL dies against the
- * archived row (first-seen dedup, reference store/url.go:168-170). That
- * made per-round shuffle volume O(pool + ever-seen + candidates) — the
- * ever-seen term grows without bound with crawl age, exactly the unbounded
- * cost the pool/archive split removed from the WRITE path. At 10^10 URLs
- * the archive dwarfs the live pool and re-shuffling it every round is the
- * whole round.
+ * Why: a candidate re-discovering an already-visited URL must die
+ * against the archive (first-seen dedup, reference store/url.go:168-170),
+ * and shuffling the archive every round costs O(ever-seen), which grows
+ * without bound with crawl age — at 10^10 URLs it would be the whole round.
  *
  * Design: the archive is written partitioned by `host_bucket`
  * (`seen/round=r/host_bucket=b/…`), so bucket b's ever-visited URLs live
- * in a column-prunable file set no other bucket ever reads. The merge
- * output is hash-partitioned 1:1 bucket→partition (see
- * [[Frontier.partitionTokens]]), so the task holding partition b IS the
- * task responsible for bucket b: [[SeenIndexContains]] (a nondeterministic
- * — i.e. partition-initialized — predicate) loads bucket b's URL set once
- * per JVM, maintains it INCREMENTALLY (each later round appends one small
+ * in a column-prunable file set no other bucket ever reads. The round's
+ * bucket merge runs one task per bucket ([[Frontier.roundMerge]]), and
+ * that task probes the index directly with [[contains]] for its own
+ * bucket: the first probe loads bucket b's URL set once per JVM, later
+ * rounds maintain it INCREMENTALLY (each appends one small
  * `round=r/host_bucket=b` slice; rounds already loaded are never re-read),
- * and drops re-discovered candidates with a per-row hash probe. No shuffle,
- * no broadcast, O(delta) maintenance per round.
+ * and each candidate costs one hash probe. No shuffle, no broadcast, no
+ * expression bound to a partition id, O(delta) maintenance per round.
  *
  * Exactness: membership is over the full URL strings (UTF8String equality)
  * — not a sketch — so the filter is exactly the archive anti-join it
@@ -49,10 +39,10 @@ import org.apache.spark.unsafe.types.UTF8String
  * sessions share one JVM across work dirs).
  *
  * Replay safety: callers pass `cutoff = round - 1`, and rounds ≤ cutoff are
- * immutable (the round-r archive dir may be mid-write or torn — it is
- * never read here; the round's own popped rows reach the merge as visit
- * marks through the shuffle instead). A replayed round therefore sees
- * exactly the state the torn run saw.
+ * immutable (the round-r archive dir may be mid-write or torn — it never
+ * enters the cache; the merge task reads its bucket's round-r slice, the
+ * round's visit marks, through [[roundSlice]] into a set of its own). A
+ * replayed round therefore sees exactly the state the torn run saw.
  */
 object SeenIndex {
 
@@ -73,6 +63,16 @@ object SeenIndex {
 
   def contains(root: String, cutoff: Int, bucket: Int, url: UTF8String): Boolean =
     entryFor(root, cutoff, bucket).set.contains(url)
+
+  /** Round `r`'s slice of `bucket` alone (the urls that round visited),
+    * loaded into a fresh set and never cached: the round's own slice is
+    * not committed until its manifest rename. Empty when the round wrote
+    * no slice for the bucket. */
+  def roundSlice(root: String, r: Int, bucket: Int): java.util.Set[UTF8String] = {
+    val s = new java.util.HashSet[UTF8String]()
+    loadRoundSlice(root, r, bucket, s)
+    s
+  }
 
   /** Load (or catch up) the bucket's set and return it — the cold-load
     * entry point perfbench's `frontier.seen_load_s` times; the crawl
@@ -151,20 +151,7 @@ object SeenIndex {
       into: java.util.Set[UTF8String]): Unit = {
     val dir = java.nio.file.Paths.get(dirPath)
     if (!java.nio.file.Files.exists(dir)) return
-    // materialize + CLOSE the listing stream: an unclosed Files.list holds
-    // the directory fd until GC — at one listing per (bucket, round) per
-    // executor these leaks exhaust the fd limit mid-campaign (measured)
-    val files = {
-      val s = java.nio.file.Files.list(dir)
-      try {
-        val b = Vector.newBuilder[java.nio.file.Path]
-        s.forEach(p => b += p)
-        b.result()
-      } finally s.close()
-    }
-    val it = files.iterator
-    while (it.hasNext) {
-      val f = it.next()
+    graft.sources.DirectParquet.listDir(dir).foreach { f =>
       if (f.getFileName.toString.endsWith(".parquet")) {
         val reader = new UrlReader(f).build()
         try {
@@ -179,35 +166,3 @@ object SeenIndex {
   }
 }
 
-/**
- * `seen_index_contains(url)` — true iff `url` is in the seen archive at
- * `root` for rounds ≤ `cutoff`, for THIS task's bucket.
- *
- * Nondeterministic so (a) `initialize(partitionIndex)` binds the task's
- * partition id — which IS the host bucket, because the only valid call
- * site is the 1:1 token-partitioned output of [[Frontier.mergeRound]] —
- * and (b) Catalyst will not push/reorder the filter away from that
- * partitioning (a pushdown through the merge's exchange would change the
- * partition→bucket binding and be semantically wrong).
- */
-case class SeenIndexContains(child: Expression, root: String, cutoff: Int)
-  extends UnaryExpression with Nondeterministic with CodegenFallback {
-
-  override def dataType: DataType = BooleanType
-  override def nullable: Boolean = false
-  override def prettyName: String = "seen_index_contains"
-
-  @transient private var bucket: Int = _
-
-  override protected def initializeInternal(partitionIndex: Int): Unit =
-    bucket = partitionIndex
-
-  override protected def evalInternal(input: InternalRow): Any = {
-    val u = child.eval(input)
-    if (u == null) false
-    else SeenIndex.contains(root, cutoff, bucket, u.asInstanceOf[UTF8String])
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): SeenIndexContains =
-    copy(child = newChild)
-}

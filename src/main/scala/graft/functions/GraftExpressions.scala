@@ -854,14 +854,6 @@ object GraftExpressions {
     reg.createOrReplaceTempFunction("bloom_might_contain",
       es => org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
         es(0), es(1)), "scala_udf")
-    // partition-local exact seen-set probe (args: url, archive-root
-    // literal, cutoff-round literal) — see graft.frontier.SeenIndex for
-    // the design and the partition→bucket binding contract
-    reg.createOrReplaceTempFunction("seen_index_contains",
-      es => graft.frontier.SeenIndexContains(es(0),
-        es(1).eval(org.apache.spark.sql.catalyst.InternalRow.empty).toString,
-        es(2).eval(org.apache.spark.sql.catalyst.InternalRow.empty).asInstanceOf[Int]),
-      "scala_udf")
   }
 
   // Column-API wrappers (require register(spark) once per session)
@@ -898,7 +890,4 @@ object GraftExpressions {
     call_function("sign_buckets_md5", vec,
       org.apache.spark.sql.functions.lit(tables),
       org.apache.spark.sql.functions.lit(planesPerTable))
-  def seen_index_contains(url: Column, root: String, cutoff: Int): Column =
-    call_function("seen_index_contains", url,
-      org.apache.spark.sql.functions.lit(root), org.apache.spark.sql.functions.lit(cutoff))
 }

@@ -9,6 +9,8 @@ import graft.streaming.Politeness
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
+import scala.concurrent.{Await, Future}
+import scala.concurrent.duration.Duration
 
 /**
  * The crawl pipeline — kraaler's `krl run` steady state
@@ -16,14 +18,16 @@ import java.nio.file.{Files, Paths}
  * sequence of deterministic micro-batch "fetch rounds":
  *
  *   pop(budget) → fetch task (fetch → correlate → docs file + seen-archive
- *   slices) → frontier expand (dedup) + visit marks → bucket-file write →
- *   lineage metrics → atomic commit.
+ *   slices) → link thinning → candidate exchange → per-bucket merge of the
+ *   candidates and the visit marks into the sorted bucket file → lineage
+ *   metrics → atomic commit.
  *
  * One round = one micro-batch (the reference's analogue is the
  * 1-token-per-worker ready loop, worker.go:1238-1253; our budget is
  * per-host × per-bucket instead of per-worker): the fetch job, then the
- * frontier commit's jobs (merge exchange + bucket-file write); a gated
- * round's politeness state is written by the driver, not by a job.
+ * frontier commit's job (docs read-back + thinning, the candidate
+ * exchange, one merge task per bucket); a gated round's politeness state
+ * is written on the driver, not by a job.
  *
  * Write protocol: every file a round writes goes through
  * [[graft.sources.DirectParquet]] (deterministic `part-<partition>`
@@ -38,10 +42,8 @@ import java.nio.file.{Files, Paths}
  * manifest un-bumped, readers filter on the manifest round, the
  * SeenIndex only loads rounds before the running one, and re-running
  * round N overwrites its directories (idempotent replay — the
- * SQLite-transaction analogue of store/store.go:69-105). The Hadoop
- * committer was dropped because the checksummed local FileSystem forked
- * a `chmod` per file and directory and every write task deserialized
- * the whole session Hadoop conf — the round's largest waste.
+ * SQLite-transaction analogue of store/store.go:69-105). Why no Hadoop
+ * committer runs: see [[graft.sources.DirectParquet]].
  *
  * Scale design (10^10 frontier / 1000 executors):
  *  - the fetch runs in place on the host-clustered pop output (host
@@ -55,11 +57,12 @@ import java.nio.file.{Files, Paths}
  *    append-only seen archive the round they are fetched — per-round
  *    write I/O is O(pool + delta), never O(ever-seen) (at 10^10 the
  *    ever-seen set dwarfs the live pool); see [[IcebergishTable]] for
- *    the MERGE-INTO swap point. The archive never re-enters the merge
- *    SHUFFLE either: re-discovered archived urls are dropped by an exact
- *    partition-local membership probe over the bucket's own archive
- *    slice ([[graft.frontier.SeenIndex]]) — per-round shuffle volume is
- *    likewise O(pool + delta), never O(ever-seen);
+ *    the MERGE-INTO swap point. Only the round's candidates are
+ *    shuffled: each bucket's merge task streams its pool file, reads its
+ *    visit marks from its own seen slice, and drops re-discovered
+ *    archived urls with an exact membership probe over the bucket's own
+ *    archive ([[graft.frontier.SeenIndex]]) — per-round shuffle volume is
+ *    O(candidates), never O(pool) or O(ever-seen);
  *  - nothing collects rows to the driver except ≤P lineage counters and,
  *    on a gated round, the politeness token map.
  *
@@ -143,8 +146,9 @@ class Crawler(
     * re-collecting it every round cost two driver-latency jobs at the
     * round HEAD, a fixed per-round cost the N→4N gate punishes on the
     * fast side. Keyed by the round that wrote it; parquet stays the
-    * durable copy (resume and torn-round replay read it — Thread.join
-    * before the manifest rename orders the write before any reader). */
+    * durable copy (resume and torn-round replay read it — the commit's
+    * barrier joins the write before the manifest rename, ahead of any
+    * reader). */
   private var politenessCache: Option[(Int, java.util.HashMap[String, (Double, Long)])] = None
   private def docsDir = s"$workDir/docs"
   private def seenDir = s"$workDir/seen"
@@ -191,7 +195,7 @@ class Crawler(
 
   /** The ever-visited archive (url, host, host_bucket, depth,
     * discovered_at, last_visit) — one immutable round dir per round,
-    * written straight from the popped cache (no shuffle), never rewritten.
+    * written by the fetch tasks (no shuffle), never rewritten.
     * Torn rounds are excluded by the manifest round, like docs. */
   def seen(): DataFrame =
     seenWithRound.drop("round")
@@ -221,22 +225,19 @@ class Crawler(
   /** Run one fetch round; returns stats (popped==0 ⇒ frontier exhausted). */
   def round(): RoundStats = {
     val r = lastRound + 1
-    val poolRowsHint = frontierTable.currentSnapshot().map(_.rows).getOrElse(0L)
-    val frontierRowsHint = poolRowsHint + seenRows
-    val pool = poolView
+    val frontierRowsHint = frontierTable.currentSnapshot().map(_.rows).getOrElse(0L) + seenRows
     // the POOL is exactly the unvisited queue — fifo/uniform pops read it
     // alone (the seen archive never re-enters the pop path); only the
     // pair sampler (visit-count weights) and unique=false re-pops need
     // archived rows in view
     val popSource =
-      if (cfg.unique && cfg.sampler != "pair") pool
-      else pool.unionByName(seen())
+      if (cfg.unique && cfg.sampler != "pair") poolView
+      else poolView.unionByName(seen())
     // optional per-host token-bucket throttle (worker.go:1238-1253 ready
     // token generalized; north rule): rejected rows stay unvisited in the
-    // frontier and are re-offered next round. ONE round-sized cache either
-    // way: ungated rounds cache the pop output; gated rounds cache the pop
-    // output WITH its admission flag and treat `popped` as a filter view
-    // over that cache.
+    // frontier and are re-offered next round. The pop is not cached: the
+    // fetch job is its only consumer (the merge reads the round's visit
+    // marks back from the seen slices that job writes).
     val gated = cfg.politenessRate > 0
     // the token map round r needs: the resident one round r-1's state
     // write merged, or — on a miss (fresh instance, resume, an exhausted
@@ -266,7 +267,7 @@ class Crawler(
     def popPlain() = Frontier.pop(popSource, cfg.sampler, cfg.seed,
       cfg.perHostBudget, cfg.perBucketBudget, cfg.unique, cfg.boost,
       sorted = true)
-    val cached = (
+    val offer =
       if (!gated) popPlain()
       else if (sortedFifo)
         Frontier.popSortedFifoFlagged(popSource, cfg.perHostBudget,
@@ -275,8 +276,6 @@ class Crawler(
       else
         Politeness.flagAdmissionsWithMap(popPlain(), stateMap, r.toLong,
           cfg.politenessRate, cfg.politenessBurst, admitAcc)
-      ).persist()
-    val popped = if (gated) cached.filter(col("admit")).drop("admit") else cached
 
     // --- the fetch job: pop → fetch → correlate → docs + seen files ---
     // ONE task per pop partition fetches its admitted rows and writes its
@@ -301,7 +300,7 @@ class Crawler(
     // manifest round; the SeenIndex loads only rounds < the running one).
     val nb = cfg.numBuckets
     val fetchInput = {
-      val flagged = cached.select(col("url"), col("host"), col("host_bucket"),
+      val flagged = offer.select(col("url"), col("host"), col("host_bucket"),
         col("depth"), col("discovered_at"),
         (if (gated) col("admit") else lit(true)).as("admit"))
       val spread =
@@ -333,55 +332,24 @@ class Crawler(
       admittedPb.zipWithIndex.collect { case (c, b) if c > 0 => (b, c) }
     val poppedN = perBucketCounts.map(_._2).sum
 
-    // overlapped driver-thread write (politeness state): started only now,
-    // AFTER the fetch job materialized the pop cache (so it never
-    // recomputes the pop in parallel); joined before the commit's manifest
-    // RENAME so a torn round still replays against round r-1's state (a
-    // stray round-r state dir is harmless — replay overwrites it; the
-    // manifest round gates visibility).
-    var stateWrite: Option[Thread] = None
-    @volatile var stateWriteError: Throwable = null
-    def joinStateWrite(): Unit = {
-      stateWrite.foreach(_.join())
-      if (stateWriteError != null) throw stateWriteError
-    }
-    if (gated && offeredN > 0) {
-      val t = new Thread(() =>
-        try {
-          // the flagging pass's accumulator counts (zero extra jobs),
-          // merged into the resident map; the table is written host-sorted
-          // DIRECTLY from the driver (canonical bytes; a 1-task Spark job
-          // queued seconds behind running stages for ~2 MB), and the merged
-          // map seeds round r+1, which then reads no state file
-          val merged = Politeness.mergeAdmitted(stateMap, admitAcc.flattened,
-            r.toLong, cfg.politenessRate, cfg.politenessBurst)
-          Politeness.writeStateParquet(spark, s"$workDir/politeness/round-$r", merged)
-          politenessCache = Some((r, merged))
-        } catch { case e: Throwable => stateWriteError = e })
-      t.setName(s"politeness-state-r$r")
-      t.start()
-      stateWrite = Some(t)
-    }
-
-    // the round's one frontier commit. Its barrier joins the politeness
-    // state write and then writes the lineage record, so both are on disk
-    // before the manifest rename makes round r visible: a replay never
-    // reruns a committed round, so a record written after the rename
-    // could be lost for good. `seenRows` moves only once the rename is
-    // done (a torn round leaves it at round r-1's count).
-    def commitRound(poolNext: DataFrame, dirty: Set[Int]): RoundStats = {
-      var stats: RoundStats = null
-      frontierTable.commit(poolNext, r, Some(dirty), preClustered = true,
-        beforeRename = poolRows => {
-          joinStateWrite()
-          val rows = poolRows + seenRows + poppedN
-          stats = RoundStats(r, poppedN, fetchedOk, errs,
-            math.max(0L, rows - math.max(frontierRowsHint, 0L)), rows, offeredN)
-          writeLineage(stats, perBucketCounts)
-        })
-      seenRows += poppedN
-      stats
-    }
+    // overlapped politeness-state write on the engine's side-write thread:
+    // started only now, AFTER the fetch job filled the accumulator; joined
+    // before the commit's manifest RENAME so a torn round still replays
+    // against round r-1's state (a stray round-r state dir is harmless —
+    // replay overwrites it; the manifest round gates visibility).
+    val stateWrite =
+      if (!gated || offeredN == 0) Future.unit
+      else Future {
+        // the flagging pass's accumulator counts (zero extra jobs), merged
+        // into the resident map; the table is written host-sorted DIRECTLY
+        // from the driver (canonical bytes; a 1-task Spark job queued
+        // seconds behind running stages for ~2 MB), and the merged map
+        // seeds round r+1, which then reads no state file
+        val merged = Politeness.mergeAdmitted(stateMap, admitAcc.flattened,
+          r.toLong, cfg.politenessRate, cfg.politenessBurst)
+        Politeness.writeStateParquet(spark, s"$workDir/politeness/round-$r", merged)
+        politenessCache = Some((r, merged))
+      }(Crawler.sideWrites)
 
     // offered = pool rows the pop stage produced BEFORE the politeness
     // throttle — it distinguishes "frontier exhausted" (stop) from
@@ -390,27 +358,47 @@ class Crawler(
     // writers open lazily, and the round dirs were cleared before the
     // job) — nothing schedule-dependent stays on disk for the torn-round
     // byte-identity invariant to trip on (StreamingSpec).
-    if (offeredN == 0) {
-      cached.unpersist()
+    if (offeredN == 0)
       return RoundStats(r, 0, 0, 0, 0, math.max(frontierRowsHint, 0L), 0)
-    }
-    if (poppedN == 0) {
-      // throttled to zero: commit no bucket (every bucket clean) so
-      // the snapshot round advances and per-host tokens accrue
-      val stats = commitRound(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Frontier.schema), Set.empty)
-      cached.unpersist()
-      return stats
-    }
-
-    val written = spark.read.schema(Crawler.docsSchema)
-      .parquet(s"$docsDir/round=$r")
 
     // --- frontier expansion (urlStore.Add of Page.DocumentURLs,
-    //     worker.go:1247) + visit marks, one atomic bucket-selective
-    //     commit. Candidates stay RAW (dedup=false): mergeRound's single
-    //     aggregation dedups them with identical min-struct semantics,
-    //     saving one full candidate exchange per round.
+    //     worker.go:1247): the links of the round's docs, read back and
+    //     thinned, are the candidate delta. A round throttled to zero
+    //     wrote no docs and has no delta: its commit touches no bucket,
+    //     so the snapshot round advances and per-host tokens accrue.
+    val delta =
+      if (poppedN == 0)
+        Seq.empty[(String, Long)].toDF("url", "k")
+      else Frontier.roundDelta(candidates(r, poppedN), cfg.numBuckets)
+
+    // the round's one frontier commit: each bucket's task merges its
+    // candidates and its visit marks into its sorted pool file
+    // (Frontier.roundMerge); only the candidates crossed the exchange.
+    // The barrier joins the politeness state write and then writes the
+    // lineage record, so both are on disk before the manifest rename
+    // makes round r visible: a replay never reruns a committed round, so
+    // a record written after the rename could be lost for good.
+    // `seenRows` moves only once the rename is done (a torn round leaves
+    // it at round r-1's count).
+    var stats: RoundStats = null
+    frontierTable.commitMerge(delta, r, Frontier.roundMerge(seenDir, r, cfg.numBuckets),
+      beforeRename = poolRows => {
+        Await.result(stateWrite, Duration.Inf)
+        val rows = poolRows + seenRows + poppedN
+        stats = RoundStats(r, poppedN, fetchedOk, errs,
+          math.max(0L, rows - math.max(frontierRowsHint, 0L)), rows, offeredN)
+        writeLineage(stats, perBucketCounts)
+      })
+    seenRows += poppedN
+    stats
+  }
+
+  /** Round `r`'s candidate urls (url, host, host_bucket, depth,
+    * discovered_at, last_visit), one row per (docs-read partition, url):
+    * the links of the round's docs, read back with column pruning. */
+  private def candidates(r: Int, poppedN: Long): DataFrame = {
+    val written = spark.read.schema(Crawler.docsSchema)
+      .parquet(s"$docsDir/round=$r")
     val rawNew = written
       .select(col("depth"), posexplode(col("links")).as(Seq("pos", "url")))
       .select(col("url"), (col("depth") + 1).as("depth"),
@@ -419,13 +407,12 @@ class Crawler(
     // fetch partition (same-host links target the host's own page space;
     // a hot host referenced from everywhere funnels ~millions of duplicate
     // rows per round into ONE merge partition — measured skew). A
-    // per-partition min-priority hashmap collapses them BEFORE the merge
+    // per-partition min-priority hashmap collapses them BEFORE the
     // exchange — no shuffle of its own, and exact semantics: min(packed
-    // prio) is associative, mergeRound's global aggregation re-mins across
-    // partitions. This is the map-side partial aggregate Catalyst cannot
-    // plan here (the merge's explicit bucket repartition precedes its
-    // groupBy, so its partial agg runs post-shuffle). Memory is bounded by
-    // the fetch task's own output (budget × links-per-page entries).
+    // prio) is associative, and the bucket merge re-mins across
+    // partitions. This is the map-side partial aggregate of the exchange.
+    // Memory is bounded by the fetch task's own output (budget ×
+    // links-per-page entries).
     val thinned = {
       import org.apache.spark.sql.Encoders
       implicit val enc = Encoders.tuple(Encoders.STRING, Encoders.scalaInt, Encoders.scalaLong)
@@ -438,15 +425,15 @@ class Crawler(
       // capped at 2^22 slots (32 MB of refs) per task.
       val thinCap = math.min(1L << 22, math.max(1L << 10, poppedN / 2)).toInt
       // peek pre-filter: in a saturating crawl most links re-discover
-      // already-seen pages, and each survivor costs exchange bytes + agg +
-      // probe work downstream. The emission filter drops urls the
+      // already-seen pages, and each survivor costs exchange bytes + merge
+      // + probe work downstream. The emission filter drops urls the
       // ALREADY-RESIDENT SeenIndex sets know are archived — exact (hits are
       // real archive members; misses just pass through to the
-      // authoritative merge + partition-local probe), peek-only (never loads
-      // a bucket — on a cluster an executor simply knows whatever its
-      // tasks loaded), and race-free (the thinning job is ordered after
-      // every load-triggering job of the round).
-      val seenRootB = s"$workDir/seen"
+      // authoritative probe in the bucket merge), peek-only (never loads a
+      // bucket — on a cluster an executor simply knows whatever its tasks
+      // loaded), and race-free (this map stage runs before its job's merge
+      // stage, and after every earlier round's loads).
+      val seenRootB = seenDir
       val nbB = cfg.numBuckets
       rawNew.as[(String, Int, Long)].mapPartitions { it =>
         val best = new java.util.HashMap[String, java.lang.Long](thinCap)
@@ -464,50 +451,7 @@ class Crawler(
           }
       }.toDF("url", "depth", "discovered_at")
     }
-    val cands0 = Frontier.normalizeCandidates(thinned, cfg.numBuckets,
-      cfg.respectRobots, dedup = false)
-    // dirty buckets = buckets with pops or new candidates; ONLY their
-    // frontier rows enter the merge shuffle and ONLY their files are
-    // rewritten — per-round frontier I/O is O(touched), not O(pool).
-    // DENSE shortcut: when the popped buckets already cover every manifest
-    // bucket, everything is dirty — skip the candidate-bucket scan (it was
-    // a near-serial extra pass; new buckets a candidate opens are adopted
-    // by the commit regardless, they have no old rows to lose).
-    val allBuckets = frontierTable.currentSnapshot().map(_.buckets.keySet).getOrElse(Set.empty)
-    val poppedBuckets = perBucketCounts.map(_._1).toSet
-    val dense = allBuckets.nonEmpty && allBuckets.subsetOf(poppedBuckets)
-    // persist only when consumed twice (the sparse path's distinct job)
-    val cands = if (dense) cands0 else cands0.persist()
-    val dirty =
-      if (dense) poppedBuckets
-      else cands.select("host_bucket").distinct().collect().map(_.getInt(0)).toSet ++
-        poppedBuckets
-    // the merge's identity resolution (first-seen wins) must kill a
-    // candidate re-discovering ANY ever-seen url. Live pool rows take part
-    // in the aggregation; ARCHIVED urls do NOT ride the shuffle — that was
-    // O(ever-seen) rows per round, unbounded with crawl age (round-3
-    // decomposition). Instead, re-discoveries of archived urls are dropped
-    // AFTER the aggregation by `seen_index_contains`: an exact,
-    // partition-local probe of this bucket's archive slice (the merge
-    // output is token-partitioned 1:1 bucket→partition, so the task's
-    // partitionIndex IS the bucket — see graft.frontier.SeenIndex).
-    // Per-round merge volume is O(pool + delta), never O(ever-seen).
-    val frontierDirty =
-      if (dense) pool
-      else pool.filter(col("host_bucket").isin(dirty.toSeq.map(Int.box): _*))
-    graft.functions.GraftExpressions.register(spark)
-    // mergeRound's output is bucket-hash-partitioned (partition i holds
-    // bucket i), which both the archive probe below and the commit rely
-    // on: the commit reuses that exchange (preClustered), so the merge and
-    // the sorted bucket-file write share ONE shuffle. Both filters are
-    // narrow and keep the partitioning.
-    val poolNext = Frontier.mergeRound(frontierDirty, cands, popped, r, cfg.numBuckets)
-      .filter(!graft.functions.GraftExpressions.seen_index_contains(col("url"), seenDir, r - 1))
-      .filter(col("last_visit") === 0L)
-    val stats = commitRound(poolNext, dirty)
-    if (!dense) cands.unpersist()
-    cached.unpersist()
-    stats
+    Frontier.normalizeCandidates(thinned, cfg.numBuckets, cfg.respectRobots, dedup = false)
   }
 
   /** Per-round, per-partition lineage metrics (north rule: "checkpoints
@@ -588,6 +532,14 @@ object Crawler {
   /** A fetched page's doc id: "d" + the first 16 hex digits of the url's
     * SHA-256. */
   def docIdOf(url: String): String = "d" + UrlFns.sha256Hex(url).substring(0, 16)
+
+  /** The engine's one side-write thread (a daemon, started once per JVM):
+    * a gated round's politeness-state write runs on it while the commit's
+    * job runs, and the commit's barrier joins it. */
+  private lazy val sideWrites = scala.concurrent.ExecutionContext.fromExecutorService(
+    java.util.concurrent.Executors.newSingleThreadExecutor { r =>
+      val t = new Thread(r, "crawler-side-write"); t.setDaemon(true); t
+    })
 
   /** A fetch task's commit message: per-bucket offered and admitted pop
     * rows and the fetch outcomes (its files are committed by then). */
@@ -672,19 +624,16 @@ object Crawler {
 
   /** Advisory-exact ever-seen peek for the link-thinning emission filter:
     * derive the url's bucket exactly like [[Frontier.hostBucket]]
-    * (xxhash64 seed 42 of the host, pmod numBuckets) and probe the
-    * resident [[graft.frontier.SeenIndex]] set WITHOUT loading. False =
-    * unknown — the candidate proceeds to the authoritative merge and
-    * partition-local probe. */
+    * ([[Frontier.bucketOf]]) and probe the resident
+    * [[graft.frontier.SeenIndex]] set WITHOUT loading. False = unknown —
+    * the candidate proceeds to the bucket merge's authoritative probe. */
   def peekEverSeen(url: String, seenRoot: String, numBuckets: Int): Boolean = {
     val host = graft.functions.UrlFns.hostOf(url)
     if (host == null) return false
-    val hu = org.apache.spark.unsafe.types.UTF8String.fromString(host)
-    val h = org.apache.spark.sql.catalyst.expressions.XXH64
-      .hashUnsafeBytes(hu.getBaseObject, hu.getBaseOffset, hu.numBytes, 42L)
-    val b = (((h % numBuckets) + numBuckets) % numBuckets).toInt
-    val uu = org.apache.spark.unsafe.types.UTF8String.fromString(url)
-    graft.frontier.SeenIndex.peek(seenRoot, b, uu)
+    val b = Frontier.bucketOf(
+      org.apache.spark.unsafe.types.UTF8String.fromString(host), numBuckets)
+    graft.frontier.SeenIndex.peek(seenRoot, b,
+      org.apache.spark.unsafe.types.UTF8String.fromString(url))
   }
 }
 

@@ -217,15 +217,20 @@ object DirectParquet {
 
   /** Recursive delete (no-op if absent) — the overwrite of a round dir. */
   def clearDir(p: Path): Unit = {
-    if (Files.isDirectory(p)) {
-      // close each listing eagerly: an open Files.list holds a directory
-      // fd until GC, and deep deletes would leak them
-      val s = Files.list(p)
-      try {
-        val it = s.iterator()
-        while (it.hasNext) clearDir(it.next())
-      } finally s.close()
-    }
+    if (Files.isDirectory(p)) listDir(p).foreach(clearDir)
     Files.deleteIfExists(p): Unit
+  }
+
+  /** A directory's entries, with the listing stream CLOSED: an unclosed
+    * `Files.list` keeps the directory fd open until GC finalization, and
+    * at per-bucket/per-round call rates the leaked fds exhaust `ulimit -n`
+    * mid-campaign (measured: bench crash at pair 4). */
+  def listDir(p: Path): Seq[Path] = {
+    val s = Files.list(p)
+    try {
+      val b = Vector.newBuilder[Path]
+      s.forEach(x => b += x)
+      b.result()
+    } finally s.close()
   }
 }

@@ -1,6 +1,11 @@
 package graft.sources
 
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.{FileFormat, HadoopFsRelation, InMemoryFileIndex,
+  PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 import java.nio.file.{Files, Paths, StandardCopyOption}
@@ -17,13 +22,17 @@ import scala.jdk.CollectionConverters._
  *
  *  - the manifest maps every `host_bucket` to the data directory holding
  *    its current file (an Iceberg manifest's data-file list, keyed by
- *    partition). A commit may be **partial**: only dirty buckets are
- *    rewritten; clean buckets keep pointing at their old files — the
- *    emulation of `MERGE INTO` + partition-level file replacement, so
- *    per-round I/O is O(touched buckets), never O(table);
+ *    partition). Two commits write it: [[IcebergishTable.commit]] replaces
+ *    the whole table, and [[IcebergishTable.commitMerge]] — the emulation
+ *    of `MERGE INTO` + partition-level file replacement — runs one task
+ *    per bucket that merges the bucket's delta into its sorted file in
+ *    one read and one write. Only dirty buckets are rewritten; clean
+ *    buckets keep pointing at their old files, so per-round I/O is
+ *    O(touched buckets), never O(table), and only the delta is shuffled;
  *  - each bucket's file is written SORTED by `sortCols` (for the frontier:
  *    host, then priority) — the clustered layout that lets the fifo pop be
- *    a streaming per-partition take with no Sort in its plan;
+ *    a streaming per-partition take with no Sort in its plan, and the
+ *    bucket merge stream the file instead of re-sorting it;
  *  - bucket files are written by [[DirectParquet]]: one
  *    `data-r<round>-<nonce>/hb=<b>/part-<partition>.parquet` per bucket,
  *    and each write task returns its per-file row counts, from which the
@@ -59,6 +68,24 @@ object IcebergishTable {
   case class Snapshot(round: Int, rows: Long, buckets: Map[Int, BucketEntry]) {
     def bucketPaths(rootDir: String): Seq[String] =
       buckets.toSeq.sortBy(_._1).map { case (b, e) => s"$rootDir/${e.dir}/hb=$b" }
+  }
+
+  /** (bucket, its delta rows, a reader of its file's rows) → None when
+    * the bucket stays clean, else its new rows in file order. */
+  type BucketMerge = (Int, Iterator[InternalRow], () => Iterator[InternalRow]) =>
+    Option[Iterator[InternalRow]]
+
+  /** Bucket → manifest entry for one commit's files. A bucket written by
+    * two tasks fails the commit: its `sortCols` layout would be torn across
+    * files, which popSortedFifo's sortedness check cannot see — it would
+    * silently over-pop per-host budgets. */
+  def bucketEntries(dataDir: String, files: Seq[DirectParquet.FileCommit]): Map[Int, BucketEntry] = {
+    files.groupBy(_.bucket).foreach { case (bucket, fs) =>
+      if (fs.size > 1)
+        throw new IllegalStateException(
+          s"bucket $bucket was written by partitions ${fs.map(_.partition).sorted.mkString(",")}")
+    }
+    files.map(f => f.bucket -> BucketEntry(dataDir, f.rows)).toMap
   }
 
   def renderManifest(s: Snapshot): String = {
@@ -117,6 +144,9 @@ class IcebergishTable(val root: String, schema: StructType,
   private val fileSchema: StructType =
     StructType(schema.filterNot(f => dropCols.contains(f.name)))
 
+  /** The file schema as a file read gives it: every column nullable. */
+  private val readSchema: StructType = StructType(fileSchema.map(_.copy(nullable = true)))
+
   private def manifestPath = Paths.get(root, "manifest.json")
 
   def currentSnapshot(): Option[Snapshot] = {
@@ -140,86 +170,111 @@ class IcebergishTable(val root: String, schema: StructType,
    * maxPartitionBytes (checked at commit) and packed files are
    * bucket-disjoint, which is all the streaming take needs.
    */
-  def read(spark: SparkSession): DataFrame =
-    currentSnapshot() match {
-      case Some(s) =>
-        val paths = s.bucketPaths(root)
-        if (paths.isEmpty)
-          spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], fileSchema)
-        else spark.read.schema(fileSchema).parquet(paths: _*)
-      case _ =>
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], fileSchema)
+  def read(spark: SparkSession): DataFrame = {
+    val paths = currentSnapshot().map(_.bucketPaths(root)).getOrElse(Nil)
+    if (paths.isEmpty)
+      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], fileSchema)
+    // `spark.read.schema(..).parquet(paths)`'s relation, minus its path
+    // check, which starts a ForkJoinPool thread per path on every call
+    paths.foreach { p =>
+      if (!Files.isDirectory(Paths.get(p)))
+        throw new java.io.FileNotFoundException(s"$manifestPath names a missing bucket dir $p")
     }
+    val index = new InMemoryFileIndex(spark, paths.map(new org.apache.hadoop.fs.Path(_)),
+      Map.empty, Some(readSchema))
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, new StructType(), readSchema, None,
+      new ParquetFileFormat(), Map.empty)(spark))
+  }
 
   /**
-   * Commit `df` as snapshot `round`. With `dirtyBuckets = None` the whole
-   * table is replaced (initial load); with `Some(buckets)` ONLY those
-   * buckets' files are rewritten — `df` must contain exactly the new
-   * content of the dirty buckets, and every clean bucket survives
-   * untouched from the previous snapshot. Returns total table rows.
+   * Commit `df` as snapshot `round`, replacing the whole table (seeding).
+   * One exchange clusters rows per bucket (one task → one file per bucket
+   * dir); the within-partition sort, led by the bucket key so each
+   * bucket's rows are contiguous, gives each file the `sortCols` layout
+   * the streaming pop depends on. Returns total table rows.
    */
-  /** @param preClustered the caller guarantees `df` is already hash-
-    *   partitioned by `bucketCol` (e.g. straight out of
-    *   [[graft.frontier.Frontier.mergeRound]]) — the commit skips its own
-    *   repartition, so merge + sorted write share ONE exchange.
-    * @param beforeRename invoked with the new snapshot's total rows after
-    *   the data write but BEFORE the atomic manifest rename — the caller's
-    *   barrier for side writes (the politeness state, the round's lineage
-    *   record) that must be durable before this snapshot becomes visible.
-    *   A throw aborts the commit with the manifest un-bumped (torn round). */
-  def commit(df: DataFrame, round: Int, dirtyBuckets: Option[Set[Int]] = None,
-      preClustered: Boolean = false, beforeRename: Long => Unit = _ => ()): Long = {
-    Files.createDirectories(Paths.get(root))
-    val spark = df.sparkSession
-    val nonce = java.util.UUID.randomUUID().toString.take(8)
-    val dataDir = s"data-r$round-$nonce"
-    // one exchange clusters rows per bucket (one task → one file per
-    // bucket dir); the within-partition sort gives each bucket file the
-    // (host, priority) layout the streaming pop depends on. The sort leads
-    // with the bucket key so each bucket's rows are contiguous in its
-    // partition — the writer starts one file per run of equal keys.
-    val keyed = df.withColumn("hb", col(bucketCol))
-    val clustered0 =
-      if (preClustered) keyed else keyed.repartition(col(bucketCol))
+  def commit(df: DataFrame, round: Int): Long = {
+    val dataDir = newDataDir(round)
+    val keyed = df.withColumn("hb", col(bucketCol)).repartition(col(bucketCol))
     val clustered =
-      if (sortCols.nonEmpty)
-        clustered0.sortWithinPartitions((col("hb") +: sortCols.map(col)): _*)
-      else clustered0
+      if (sortCols.nonEmpty) keyed.sortWithinPartitions((col("hb") +: sortCols.map(col)): _*)
+      else keyed
     // a projection after the sort is narrow — file row order is preserved
     val files = DirectParquet.writeBuckets(
       clustered.select((fileSchema.fieldNames.map(col) :+ col("hb")).toIndexedSeq: _*),
       s"$root/$dataDir", writerOptions)
+    publish(df.sparkSession, round, dataDir, files, Map.empty, _ => ())
+  }
 
-    // bucket → rows straight from the write tasks' commit messages
-    // (Iceberg-manifest-style stats, no footer re-read)
+  /**
+   * Commit snapshot `round` as a per-bucket merge of `delta` into the
+   * bucket files (`MERGE INTO` with bucket-level file replacement).
+   * Partition b of `delta` must hold exactly bucket b's rows (e.g. on
+   * [[graft.frontier.Frontier.bucketToken]]); its task runs `merge` over
+   * them and a reader of bucket b's file (file-schema rows in `sortCols`
+   * order) and writes the rows it returns straight to the new file — no
+   * file row crosses an exchange or is re-sorted. A clean bucket keeps
+   * its file unread; a dirty one left empty drops out of the manifest.
+   * Returns total table rows.
+   *
+   * @param beforeRename invoked with the new snapshot's total rows after
+   *   the data write but BEFORE the atomic manifest rename — the caller's
+   *   barrier for side writes that must be durable before this snapshot
+   *   becomes visible. A throw aborts the commit with the manifest
+   *   un-bumped (torn round).
+   */
+  def commitMerge(delta: DataFrame, round: Int, merge: IcebergishTable.BucketMerge,
+      beforeRename: Long => Unit): Long = {
+    val spark = delta.sparkSession
+    val dataDir = newDataDir(round)
+    val prev = currentSnapshot().map(_.buckets).getOrElse(Map.empty)
+    val current = prev.map { case (b, e) => b -> s"$root/${e.dir}/hb=$b" }
+    // Spark's own parquet reader (vectorized, InternalRow out), built once
+    // here: the tasks carry its broadcast conf, not a Hadoop conf each.
+    // Merged files keep the schema a re-sort of read rows wrote (nullable).
+    val readFile = new ParquetFileFormat().buildReaderWithPartitionValues(
+      spark, readSchema, new StructType(), readSchema, Nil,
+      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), spark.sessionState.newHadoopConf())
+    val settings = DirectParquet.Settings.resolve(spark, readSchema, writerOptions)
+    val out = s"$root/$dataDir"
+    val results = DirectParquet.runJob(delta) { (bucket, rows) =>
+      def pool(): Iterator[InternalRow] = current.get(bucket).iterator
+        .flatMap(d => DirectParquet.listDir(Paths.get(d)))
+        .filter(_.getFileName.toString.endsWith(".parquet"))
+        .flatMap(f => readFile(PartitionedFile(InternalRow.empty,
+          SparkPath.fromPath(new org.apache.hadoop.fs.Path(f.toUri)), 0L, Files.size(f))))
+      merge(bucket, rows, () => pool()).map { merged =>
+        var w: DirectParquet.PartWriter = null
+        try {
+          merged.foreach { r =>
+            if (w == null) w = DirectParquet.taskWriter(settings, Paths.get(out, s"hb=$bucket"), bucket)
+            w.write(r)
+          }
+          bucket -> Option(w).map(_.commit())
+        } catch { case e: Throwable => DirectParquet.abortAll(Option(w), e) }
+      }
+    }.flatten
+    val dirty = results.map(_._1).toSet
+    publish(spark, round, dataDir, results.flatMap(_._2).toSeq, prev -- dirty, beforeRename)
+  }
+
+  private def newDataDir(round: Int): String = {
+    Files.createDirectories(Paths.get(root))
+    s"data-r$round-${java.util.UUID.randomUUID().toString.take(8)}"
+  }
+
+  /** Both commits' last step: the written files plus the `kept` buckets
+    * become snapshot `round`; `beforeRename`, the rename, then the prune
+    * of every data dir the new manifest no longer references. */
+  private def publish(spark: SparkSession, round: Int, dataDir: String,
+      files: Seq[DirectParquet.FileCommit], kept: Map[Int, BucketEntry],
+      beforeRename: Long => Unit): Long = {
     val maxSplit = spark.sessionState.conf.filesMaxPartitionBytes
     files.filter(_.bytes > maxSplit).foreach { f =>
       System.err.println(s"[icebergish] WARN bucket ${f.bucket} file (${f.bytes} B) exceeds " +
         s"maxPartitionBytes=$maxSplit — raise numBuckets (streaming-pop invariant)")
     }
-    // preClustered is a caller CLAIM the commit verifies (ADVICE r2): a
-    // truly bucket-hash-partitioned input puts each bucket wholly in one
-    // write task → exactly one file per bucket dir. A bucket from two
-    // tasks means its (host, prio) layout is torn across files and
-    // popSortedFifo's per-partition sortedness check could NOT catch it
-    // (each fragment is sorted); it would silently over-pop per-host
-    // budgets. Fail the commit loudly instead.
-    files.groupBy(_.bucket).foreach { case (bucket, fs) =>
-      if (fs.size > 1)
-        throw new IllegalStateException(
-          s"commit(preClustered=$preClustered) but bucket $bucket was written by " +
-            s"partitions ${fs.map(_.partition).sorted.mkString(",")} — input was not " +
-            s"hash-partitioned by $bucketCol")
-    }
-    val written: Map[Int, BucketEntry] =
-      files.map(f => f.bucket -> BucketEntry(dataDir, f.rows)).toMap
-
-    val prev = currentSnapshot()
-    val kept: Map[Int, BucketEntry] = (prev, dirtyBuckets) match {
-      case (Some(p), Some(dirty)) => p.buckets -- dirty
-      case _ => Map.empty
-    }
-    val buckets = kept ++ written
+    val buckets = kept ++ IcebergishTable.bucketEntries(dataDir, files)
     val rows = buckets.valuesIterator.map(_.rows).sum
     beforeRename(rows)
     renameManifest(Snapshot(round, rows, buckets))
@@ -234,23 +289,10 @@ class IcebergishTable(val root: String, schema: StructType,
       StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** Materialize a directory listing and CLOSE the stream — an unclosed
-    * `Files.list` keeps the directory fd open until GC finalization, and
-    * at per-bucket/per-round call rates the leaked fds exhaust `ulimit -n`
-    * mid-campaign (measured: bench crash at pair 4). */
-  private def listDir(p: java.nio.file.Path): Seq[java.nio.file.Path] = {
-    val s = Files.list(p)
-    try {
-      val b = Vector.newBuilder[java.nio.file.Path]
-      s.forEach(x => b += x)
-      b.result()
-    } finally s.close()
-  }
-
   private def prune(keep: Set[String]): Unit = {
     val dir = Paths.get(root)
     if (!Files.exists(dir)) return
-    listDir(dir).foreach { p =>
+    DirectParquet.listDir(dir).foreach { p =>
       val name = p.getFileName.toString
       if (name.startsWith("data-r") && !keep.contains(name))
         DirectParquet.clearDir(p)

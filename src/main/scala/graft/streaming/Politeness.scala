@@ -73,9 +73,9 @@ object Politeness {
    * Per-host admitted counts collected AS A SIDE OUTPUT of the pass that
    * flags the pop ([[graft.frontier.Frontier.popSortedFifoFlagged]] or
    * [[flagAdmissionsWithMap]]), an accumulator keyed by partitionId — the
-   * gated round needs no `groupBy(host)` job over the popped cache (a
+   * gated round needs no `groupBy(host)` job over the pop output (a
    * full scan plus a shuffle, measured 5-7 s/round at local[32]). Keyed
-   * by partition so cache rebuilds, task retries, and speculative
+   * by partition so recomputed partitions, task retries, and speculative
    * attempts stay idempotent: a partition's map is deterministic, and
    * re-adding it OVERWRITES rather than double-counts. Every offered
    * host appears (count 0 if all its offers were rejected), so

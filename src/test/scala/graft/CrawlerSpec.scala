@@ -262,6 +262,48 @@ class CrawlerSpec extends AnyFunSuite {
       .exists(_.getFileName.toString.startsWith("host_bucket=")))
   }
 
+  test("the commit exchange carries the round's thinned candidates, not the pool") {
+    import spark.implicits._
+    val sim = new FetchSim(numHosts = 16, pagesPerHost = 40, linksPerPage = 4)
+    val cfg = CrawlConfig(numBuckets = 4, perHostBudget = 2, perBucketBudget = 1000)
+    graft.functions.GraftExpressions.register(spark)
+    // round 3 of one crawl, over its own pool or over a larger one
+    def roundThree(larger: Boolean) = {
+      val dir = tmpDir()
+      val c = new Crawler(spark, dir, sim, cfg)
+      c.addSeeds(sim.seedUrls(16))
+      c.round(); c.round()
+      if (larger) {
+        // extra rows rank after every real row of a host that still holds
+        // a full per-host budget, so round 3 pops exactly the same rows
+        val full = Frontier.restorePool(c.frontierTable.read(spark), cfg.numBuckets)
+          .groupBy("host").count().filter(col("count") >= cfg.perHostBudget)
+          .select("host").as[String].collect().toSeq
+        c.addSeedCandidates(full.flatMap(h => (0 until 40).map(i => (s"http://$h/extra/$i", 50, i.toLong)))
+          .toDF("url", "depth", "discovered_at"))
+      }
+      val poolRows = c.frontierTable.currentSnapshot().get.rows
+      // nothing resident: the thinning's ever-seen peek drops no link
+      graft.frontier.SeenIndex.invalidate()
+      val probe = new RoundProbe(spark)
+      val st = probe.during(c.round())
+      // thinning keeps each distinct link with a host once per docs-read
+      // partition, and each (small) docs file is one read partition
+      val thinned = spark.read.parquet(s"$dir/docs/round=3")
+        .select(input_file_name().as("f"), explode(col("links")).as("url"))
+        .filter(graft.functions.GraftExpressions.url_host(col("url")).isNotNull)
+        .distinct().count()
+      (st.copy(frontierRows = 0), poolRows, probe.shuffleRecordsWritten, thinned)
+    }
+    val (statsA, poolA, shuffledA, thinnedA) = roundThree(larger = false)
+    val (statsB, poolB, shuffledB, thinnedB) = roundThree(larger = true)
+    assert(statsA.popped > 0 && statsA == statsB, s"$statsA vs $statsB")
+    assert(poolB > poolA)
+    assert(shuffledA == thinnedA && shuffledB == thinnedB,
+      s"shuffle records $shuffledA/$shuffledB, thinned candidates $thinnedA/$thinnedB")
+    assert(shuffledA == shuffledB)
+  }
+
   test("real-socket fetch: a crawl runs over loopback HTTP through the pluggable seam") {
     // the reference's TestCrawl fetches from live in-test HTTP servers
     // (worker_test.go:275-444); this is the engine's analogue — an in-JVM

@@ -97,17 +97,36 @@ class DirectWriteSpec extends AnyFunSuite {
       .exists(t => String.valueOf(t.getMessage).contains("not contiguous")))
   }
 
-  test("commit(preClustered) refuses a bucket that arrives from two tasks") {
+  test("the manifest builder refuses a bucket that arrives from two tasks") {
+    // neither commit can produce one (the full commit repartitions on the
+    // bucket column; the merge commit's task b writes only bucket b), so
+    // the builder both share is checked directly
+    import graft.sources.IcebergishTable.{BucketEntry, bucketEntries}
+    val files = Seq(DirectParquet.FileCommit(1, 0, 10L, 100L),
+      DirectParquet.FileCommit(2, 1, 5L, 50L), DirectParquet.FileCommit(1, 3, 7L, 70L))
+    val e = intercept[IllegalStateException](bucketEntries("data-r1-x", files))
+    assert(e.getMessage.contains("bucket 1") && e.getMessage.contains("partitions 0,3"))
+    assert(bucketEntries("d", files.take(2)) == Map(1 -> BucketEntry("d", 10L), 2 -> BucketEntry("d", 5L)))
+  }
+
+  test("the bucket merge refuses a delta row routed to another bucket's task") {
     import spark.implicits._
+    import graft.frontier.Frontier
     val dir = tmpDir()
-    val table = new graft.sources.IcebergishTable(dir, graft.frontier.Frontier.schema)
-    // one host ⇒ one bucket; round-robin puts its rows in both partitions
-    val rows = graft.frontier.Frontier.normalizeCandidates(
-      (0 until 40).map(i => (s"http://a.test/p/$i", 0, i.toLong))
-        .toDF("url", "depth", "discovered_at"), 4).repartition(2)
-    val e = intercept[IllegalStateException](table.commit(rows, 0, preClustered = true))
-    assert(e.getMessage.contains("partitions 0,1"))
-    assert(table.currentSnapshot().isEmpty, "a refused commit must not rename the manifest")
+    val table = new graft.sources.IcebergishTable(dir, Frontier.schema,
+      sortCols = Seq("host", "depth", "discovered_at", "url"),
+      dropCols = Seq("host", "host_bucket", "last_visit"))
+    val seed = Frontier.normalizeCandidates(
+      (0 until 40).map(i => (s"http://h$i.test/p", 0, i.toLong)).toDF("url", "depth", "discovered_at"), 4)
+    table.commit(seed, 0)
+    // round-robin, not the bucket token: most rows reach a foreign task
+    val delta = seed.select(col("url"), lit(1L).as("k")).repartition(4)
+    val e = intercept[org.apache.spark.SparkException](
+      table.commitMerge(delta, 1, Frontier.roundMerge(s"$dir/seen", 1, 4), _ => ()))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("reached the merge task of bucket")))
+    assert(table.currentSnapshot().map(_.round).contains(0),
+      "a refused merge must not rename the manifest")
   }
 
   test("docs(), seen() and frontier() written directly equal the sequential oracle") {

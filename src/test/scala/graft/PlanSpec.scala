@@ -163,36 +163,26 @@ class PlanSpec extends AnyFunSuite {
       windowed.collect().map(_.getString(0)).sorted.toSeq)
   }
 
-  test("frontier merge is a pure HashAggregate — no SortAggregate, no join, one bucket exchange") {
-    import spark.implicits._
-    // dedup=false inputs: no upstream aggregation, so every exchange in the
-    // plan belongs to the merge itself
-    def frame(urls: Seq[String]) = Frontier.normalizeCandidates(
-      urls.zipWithIndex.map { case (u, i) => (u, 1, i.toLong) }
-        .toDF("url", "depth", "discovered_at"), 8, dedup = false)
-    val f = frame((0 until 40).map(i => s"http://h$i.test/a"))
-    val c = frame((20 until 60).map(i => s"http://h$i.test/a"))
-    val p = f.limit(5)
-    val plan = planOf(Frontier.mergeRound(f, c, p, 3L, 8))
-    assert(plan.contains("HashAggregate"), s"merge lost the hash agg:\n$plan")
-    assert(!plan.contains("SortAggregate"),
-      s"merge fell back to SortAggregate (var-width agg buffer?):\n$plan")
-    assert(!plan.contains("Join"), s"merge should not join:\n$plan")
-    // ONE exchange, hashed on host_bucket (url-clustering comes for free:
-    // host_bucket is a function of url) — the groupBy must NOT add its own
-    // url-hash exchange, and the commit reuses this same partitioning
-    val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).length
-    assert(exchanges == 1, s"merge planned $exchanges exchanges (want 1):\n$plan")
-    assert(!plan.contains("hashpartitioning(url"),
-      s"merge shuffled on url — bucket partitioning not reused:\n$plan")
-    // and the packed-priority semantics round-trip exactly
-    val out = Frontier.mergeRound(f, c, p, 3L, 8).collect()
-      .map(r => r.getString(0) -> (r.getInt(3), r.getLong(4), r.getLong(5))).toMap
-    assert(out.size == 60)
-    assert(out("http://h25.test/a") == ((1, 25L, 0L))) // existing row wins identity
-    assert(out("http://h45.test/a") == ((1, 25L, 0L))) // new cand keeps its stamp
-    val popped = p.collect().map(_.getString(0)).toSet
-    popped.foreach(u => assert(out(u)._3 == 3L, s"visit mark lost for $u"))
+  test("round commit: one exchange, and no frontier file is scanned below it") {
+    // the bucket merge streams each pool file inside its task; only the
+    // round's candidates (docs read-back → thinning) may feed the shuffle
+    val dir = java.nio.file.Files.createTempDirectory("graft-plan").toString
+    val sim = new graft.fetch.FetchSim(numHosts = 10, pagesPerHost = 12, linksPerPage = 3)
+    val c = new graft.pipeline.Crawler(spark, dir, sim,
+      graft.pipeline.CrawlConfig(numBuckets = 4, perHostBudget = 2, perBucketBudget = 100))
+    c.addSeeds(sim.seedUrls(8))
+    c.round()
+    val probe = new RoundProbe(spark)
+    assert(probe.during(c.round()).popped > 0)
+    def scans(p: org.apache.spark.sql.execution.SparkPlanInfo) =
+      RoundProbe.nodes(p).filter(_.nodeName.startsWith("Scan"))
+        .map(_.metadata.getOrElse("Location", ""))
+    val exchanging = probe.plans.filter(p => RoundProbe.nodes(p).exists(_.nodeName == "Exchange"))
+    assert(exchanging.size == 1, s"want one shuffling execution per round: ${probe.plans}")
+    val commit = exchanging.head
+    assert(RoundProbe.nodes(commit).count(_.nodeName == "Exchange") == 1)
+    assert(scans(commit).nonEmpty && scans(commit).forall(_.contains("docs/round=2")),
+      s"the commit's exchange reads more than the round's docs: ${scans(commit)}")
   }
 
   test("bucket token mapping is a perfect 1:1 bucket→shuffle-partition layout") {
