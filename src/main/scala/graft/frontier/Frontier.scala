@@ -23,10 +23,9 @@ import scala.jdk.CollectionConverters._
  *    [[SeenIndex]] probe), and only the candidates are shuffled;
  *  - rows are partitioned by `host_bucket = pmod(xxhash64(host), P)` so
  *    pop/visit/dedup all shuffle on the same key → co-partitioned joins;
- *  - membership when seeding: broadcast Bloom filter as an ADVISORY
- *    pre-filter only — bloom-negative candidates are provably new and
- *    skip the join; only bloom-positives pay the exact left-anti join
- *    (false positives never drop a URL — SURVEY.md §7.3 hard part 2);
+ *  - seeding is a round with candidates and no pops: seeds go through
+ *    the same bucket merge ([[roundMerge]]), so one exact probe serves
+ *    both insert paths (kraaler's single `urlStore.Add`);
  *  - politeness: a per-host cap per round (the 1-in-flight ready token of
  *    worker.go:1238-1253, generalized to a budget). The crawler's fifo
  *    pop is a streaming per-host counter over the host-sorted bucket
@@ -87,91 +86,36 @@ object Frontier {
 
   /**
    * First-seen priority packed into ONE non-negative BIGINT —
-   * `src(1b) | depth(15b) | discovered_at(47b)` — so a dedup aggregation
-   * is `min(long)`, a fixed-width buffer Spark runs as a pure
-   * HashAggregate (a var-width `min(struct(...))` buffer plans as a
-   * SortAggregate), and the round's delta ships one long per candidate.
+   * `depth(15b) | discovered_at(47b)` — so the delta ships one long per
+   * candidate ([[roundDelta]]; [[roundMerge]] unpacks it).
    * Bounds: depth < 2^15, discovered_at < 2^47.
    */
-  def packPrio(src: Column, depth: Column, discoveredAt: Column): Column =
-    src.cast(LongType) * lit(1L << 62) +
-      depth.cast(LongType) * lit(1L << 47) + discoveredAt
-
-  def unpackDepth(k: Column): Column =
-    pmod(call_function("shiftright", k, lit(47)), lit(1L << 15)).cast(IntegerType)
-
-  def unpackDiscoveredAt(k: Column): Column =
-    k.bitwiseAND(lit((1L << 47) - 1))
+  def packPrio(depth: Column, discoveredAt: Column): Column =
+    depth.cast(LongType) * lit(1L << 47) + discoveredAt
 
   /**
    * Normalize raw candidate URLs (columns: url, depth, discovered_at) into
    * frontier shape. Drops `data:` URLs (worker.go:1032-1034) and URLs with
    * no parseable host; lowercases/trims like ReadDomainsFromFile
-   * (kraaler.go:38-48). In-batch dedup keeps the first-seen (min depth,
-   * then min discovered_at) occurrence.
-   *
-   * @param dedup when false, skips the in-batch groupBy — callers feeding
-   *   the round's bucket merge leave dedup to [[mergeBucket]] (same
-   *   first-seen rule), saving one full candidate shuffle/round.
+   * (kraaler.go:38-48). No in-batch dedup: the bucket merge
+   * ([[mergeBucket]]) keeps the first-seen (min depth, then min
+   * discovered_at) occurrence of a url, so no candidate shuffle is paid
+   * here.
    */
   def normalizeCandidates(raw: DataFrame, numBuckets: Int,
-      respectRobots: Boolean = false, dedup: Boolean = true): DataFrame = {
+      respectRobots: Boolean = false): DataFrame = {
     graft.functions.GraftExpressions.register(raw.sparkSession)
     val preFiltered = raw
       .withColumn("url", trim(col("url")))
       .filter(!col("url").startsWith("data:"))
-    val withHost = (if (respectRobots)
+    (if (respectRobots)
       preFiltered.filter(coalesce(
         graft.functions.GraftExpressions.robots_allowed(col("url")), lit(false)))
     else preFiltered)
       .withColumn("host", graft.functions.GraftExpressions.url_host(col("url")))
       .filter(col("host").isNotNull)
-      .withColumn("host_bucket", hostBucket(col("host"), numBuckets))
-    if (!dedup)
-      withHost.select(col("url"), col("host"), col("host_bucket"),
+      .select(col("url"), col("host"), hostBucket(col("host"), numBuckets).as("host_bucket"),
         col("depth"), col("discovered_at"), lit(0L).as("last_visit"))
-    else withHost
-      // host/host_bucket are functions of url → part of the KEY (groups
-      // unchanged); the only aggregate is min over the packed priority —
-      // fixed-width buffer ⇒ HashAggregate, never a sort
-      .groupBy(col("url"), col("host"), col("host_bucket"))
-      .agg(min(packPrio(lit(0), col("depth"), col("discovered_at"))).as("k"))
-      .select(col("url"), col("host"), col("host_bucket"),
-        unpackDepth(col("k")).as("depth"),
-        unpackDiscoveredAt(col("k")).as("discovered_at"),
-        lit(0L).as("last_visit"))
-  }
-
-  /**
-   * URL-seen dedup (urlStore.Add, store/url.go:155-220): return only the
-   * candidates NOT already in the frontier. Bloom pre-filter + exact
-   * anti-join on bloom-positives; never drops on a Bloom hit alone.
-   *
-   * @param expectedRows frontier cardinality hint (e.g. from the table
-   *   manifest) — avoids a count scan; pass -1 to count here.
-   * @param bloomMinRows below this the Bloom pre-filter is skipped (one
-   *   anti-join beats building+broadcasting a filter for small tables).
-   */
-  def newOnly(frontier: DataFrame, candidates: DataFrame,
-      expectedRows: Long = -1L, bloomMinRows: Long = 4000000L): DataFrame = {
-    val n = if (expectedRows >= 0) expectedRows else frontier.count()
-    if (n == 0) return candidates
-    if (n < bloomMinRows)
-      return candidates.join(frontier.select("url"), Seq("url"), "left_anti")
-    graft.functions.GraftExpressions.register(frontier.sparkSession)
-    // build over xxhash64(url) longs; probe with Spark's codegen'd
-    // BloomFilterMightContain (the same expression a runtime-filter join
-    // injects) — the sketch rides the plan as a binary literal, no UDF
-    val bloom = frontier.select(xxhash64(col("url")).as("h"))
-      .stat.bloomFilter("h", math.max(n, 64L), 0.03)
-    val bos = new java.io.ByteArrayOutputStream()
-    bloom.writeTo(bos)
-    val maybe = call_function("bloom_might_contain",
-      lit(bos.toByteArray), xxhash64(col("url")))
-    val definitelyNew = candidates.filter(!maybe)
-    val survivors = candidates.filter(maybe)
-      .join(frontier.select("url"), Seq("url"), "left_anti")
-    definitelyNew.unionByName(survivors)
   }
 
   /** Restore the derivable columns a SLIM pool file drops
@@ -342,7 +286,7 @@ object Frontier {
             if (e.host_bucket == curBucket && prev != null && e.host < curHost)
               throw new IllegalStateException(
                 s"frontier bucket ${e.host_bucket} not host-sorted: ${e.host} after $curHost " +
-                  "(bucket file split or unsorted commit — see IcebergishTable sortCols)")
+                  "(bucket file split or unsorted commit — see Frontier.fileOrder)")
             curBucket = e.host_bucket; curHost = e.host; curCount = 0
             curAdmit = state match {
               case Some(bc) =>
@@ -385,9 +329,9 @@ object Frontier {
   final case class BucketRow(url: UTF8String, host: UTF8String, depth: Int,
       discoveredAt: Long)
 
-  /** The bucket-file order (host, depth, discovered_at, url), strings as
-    * UTF8String bytes: the order `sortWithinPartitions` gives these
-    * columns, so a merged bucket file is byte-identical to a re-sorted one. */
+  /** The bucket-file order (host, depth, discovered_at, url), strings
+    * compared as UTF8String bytes (Spark's string order): every bucket
+    * file is written in it, and the streaming pop checks it. */
   val fileOrder: Ordering[BucketRow] = new Ordering[BucketRow] {
     def compare(a: BucketRow, b: BucketRow): Int = {
       var c = a.host.binaryCompare(b.host)
@@ -459,7 +403,7 @@ object Frontier {
   def roundDelta(cands: DataFrame, numBuckets: Int): DataFrame = {
     val bucketOfUrl =
       hostBucket(graft.functions.GraftExpressions.url_host(col("url")), numBuckets)
-    cands.select(col("url"), packPrio(lit(0), col("depth"), col("discovered_at")).as("k"))
+    cands.select(col("url"), packPrio(col("depth"), col("discovered_at")).as("k"))
       .repartition(numBuckets, bucketToken(bucketOfUrl, numBuckets))
   }
 
@@ -471,6 +415,9 @@ object Frontier {
    * [[mergeBucket]], with the [[SeenIndex]] of rounds ≤ r-1 as the
    * archive. A bucket with neither candidates nor visits stays clean and
    * its file is not read. A delta row of another bucket fails the task.
+   * Seeding runs it too, at the committed round ([[graft.pipeline.Crawler]]
+   * `addSeedCandidates`): that round's slice and the archive before it
+   * are then together every url ever visited.
    */
   def roundMerge(seenRoot: String, round: Int, numBuckets: Int)
       : graft.sources.IcebergishTable.BucketMerge = (bucket, delta, pool) => {

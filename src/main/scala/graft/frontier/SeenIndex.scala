@@ -25,9 +25,12 @@ import org.apache.spark.unsafe.types.UTF8String
  *
  * Exactness: membership is over the full URL strings (UTF8String equality)
  * — not a sketch — so the filter is exactly the archive anti-join it
- * replaces. This index IS the north rule's per-partition refinement; the
- * broadcast Bloom pre-filter of [[Frontier.newOnly]] is the seeding
- * path's advisory volume reducer.
+ * replaces. The URL-seen check keeps the north rule's two tiers: the
+ * advisory one is the link thinning's resident-set [[peek]]
+ * (`Crawler.peekEverSeen`), and the exact per-partition refinement is
+ * this index. No Bloom tier is left: seeding takes the round's bucket
+ * merge too, so both insert paths probe here, and an O(delta) exact probe
+ * per bucket leaves a volume reducer nothing to save.
  *
  * Memory & cluster notes: one JVM holds the buckets it executes —
  * local-mode = all of them (bench: ~6 M URLs/round × rounds ≈ 1 GB of a

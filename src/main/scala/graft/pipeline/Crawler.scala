@@ -27,7 +27,9 @@ import scala.concurrent.duration.Duration
  * per-host × per-bucket instead of per-worker): the fetch job, then the
  * frontier commit's job (docs read-back + thinning, the candidate
  * exchange, one merge task per bucket); a gated round's politeness state
- * is written on the driver, not by a job.
+ * is written on the driver, not by a job. Seeding ([[addSeedCandidates]])
+ * is a round with candidates and no pops: the same candidate exchange
+ * and per-bucket merge, so the frontier has one commit path.
  *
  * Write protocol: every file a round writes goes through
  * [[graft.sources.DirectParquet]] (deterministic `part-<partition>`
@@ -126,7 +128,6 @@ class Crawler(
     * urls are near-unique per bucket, so parquet's per-page dictionary
     * attempt is pure wasted encode CPU. */
   val frontierTable = new IcebergishTable(s"$workDir/frontier", Frontier.schema,
-    sortCols = Seq("host", "depth", "discovered_at", "url"),
     writerOptions = writerOptions ++
       (if (cfg.frontierCodec.nonEmpty) Map("compression" -> cfg.frontierCodec)
        else Map.empty),
@@ -208,18 +209,32 @@ class Crawler(
       .select(col("url"), lit(0).as("depth"), col("pos").cast("long").as("discovered_at")))
 
   /** Distributed seeding: `raw` has (url, depth, discovered_at) and can be
-    * any size — 10^10-scale seed lists never pass through the driver. */
+    * any size — 10^10-scale seed lists never pass through the driver.
+    *
+    * Seeding is a round with candidates and no pops, committed at round
+    * `R = max(lastRound, 0)` through the round's own steps:
+    * [[Frontier.normalizeCandidates]] → [[Frontier.roundDelta]] → the
+    * per-bucket [[Frontier.roundMerge]] in `commitMerge`. Round R's seen
+    * slice serves as the visit marks and the archive of rounds ≤ R-1 as
+    * the exact probe, so together they are every url ever visited: a seed
+    * already in the pool, visited or archived is not added (the existing
+    * row wins), and duplicate seeds keep the minimum (depth,
+    * discovered_at). Only the buckets that get seeds are rewritten.
+    *
+    * Precondition: a bucket's merge task holds that bucket's seeds in
+    * memory. That is the bound the `maxPartitionBytes` bucket-file
+    * invariant already puts on a bucket ([[IcebergishTable]]), so a seed
+    * list larger than it is seeded in several calls. */
   def addSeedCandidates(raw: DataFrame): Long = {
-    val cands = Frontier.normalizeCandidates(raw, cfg.numBuckets, cfg.respectRobots)
-    val pool = poolView
-    // the seen-set check is against EVERYTHING ever seen: live pool +
-    // archive. Manifest row count + archive counter as the cardinality
-    // hint — newOnly would otherwise pay a count() scan on every re-seed.
-    val fresh = Frontier.newOnly(pool.unionByName(seen()), cands,
-      expectedRows =
-        frontierTable.currentSnapshot().map(_.rows).getOrElse(0L) + seenRows)
-    // only the POOL is rewritten; archived rows never re-enter it
-    frontierTable.commit(pool.unionByName(fresh), math.max(lastRound, 0)) + seenRows
+    val r = math.max(lastRound, 0)
+    val delta = Frontier.roundDelta(
+      Frontier.normalizeCandidates(raw, cfg.numBuckets, cfg.respectRobots), cfg.numBuckets)
+    val merge = Frontier.roundMerge(seenDir, r, cfg.numBuckets)
+    // round r's visit marks already left the pool: a bucket no seed
+    // reaches keeps its file
+    frontierTable.commitMerge(delta, r,
+      (b, seeds, pool) => if (seeds.hasNext) merge(b, seeds, pool) else None,
+      _ => ()) + seenRows
   }
 
   /** Run one fetch round; returns stats (popped==0 ⇒ frontier exhausted). */
@@ -397,9 +412,7 @@ class Crawler(
     * discovered_at, last_visit), one row per (docs-read partition, url):
     * the links of the round's docs, read back with column pruning. */
   private def candidates(r: Int, poppedN: Long): DataFrame = {
-    val written = spark.read.schema(Crawler.docsSchema)
-      .parquet(s"$docsDir/round=$r")
-    val rawNew = written
+    val rawNew = DirectParquet.scan(spark, Seq(s"$docsDir/round=$r"), Crawler.docsSchema)
       .select(col("depth"), posexplode(col("links")).as(Seq("pos", "url")))
       .select(col("url"), (col("depth") + 1).as("depth"),
         (lit(r.toLong * 1000000L) + col("pos")).as("discovered_at"))
@@ -451,7 +464,7 @@ class Crawler(
           }
       }.toDF("url", "depth", "discovered_at")
     }
-    Frontier.normalizeCandidates(thinned, cfg.numBuckets, cfg.respectRobots, dedup = false)
+    Frontier.normalizeCandidates(thinned, cfg.numBuckets, cfg.respectRobots)
   }
 
   /** Per-round, per-partition lineage metrics (north rule: "checkpoints
@@ -484,21 +497,19 @@ class Crawler(
 
   /** All committed wide round rows (torn rounds excluded by the manifest
     * round). The explicit schema skips footer inference and reads a round
-    * that wrote no docs file (every offer throttled) as zero rows. */
+    * that wrote no docs file (every offer throttled) as zero rows; before
+    * any round has docs the frame is empty with the same columns. */
   def docsWide(): DataFrame = {
+    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+    val schema = StructType(Crawler.docsSchema :+ StructField("round", IntegerType))
     val r = lastRound
     if (r < 1 || !Files.exists(Paths.get(docsDir)))
-      return spark.emptyDataFrame
-    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
-    spark.read.schema(StructType(Crawler.docsSchema :+ StructField("round", IntegerType)))
-      .parquet(docsDir).filter(col("round") <= r)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    else spark.read.schema(schema).parquet(docsDir).filter(col("round") <= r)
   }
 
-  /** The `input_hint`-shaped docs table (doc_id, spans [, round]). */
-  def docs(): DataFrame = {
-    val w = docsWide()
-    if (w.columns.isEmpty) w else w.select("doc_id", "spans", "round")
-  }
+  /** The `input_hint`-shaped docs table (doc_id, spans, round). */
+  def docs(): DataFrame = docsWide().select("doc_id", "spans", "round")
 
   /** Session metadata view — a pruned projection of the wide round files
     * (never touches the spans column). */

@@ -6,10 +6,12 @@ import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.io.LocalOutputFile
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write.{DataWriter, WriterCommitMessage}
 import org.apache.spark.sql.execution.SQLExecution
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetWriteSupport}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetOptions,
+  ParquetWriteSupport}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
@@ -17,7 +19,8 @@ import scala.reflect.ClassTag
 
 /**
  * The crawl round's one parquet writer: docs, seen-archive slices,
- * frontier bucket files and politeness state all go through it.
+ * frontier bucket files and politeness state all go through it. Its
+ * [[scan]] is the round's read of its own directories.
  *
  * Each file is encoded by Spark's own [[ParquetWriteSupport]] (same
  * encoder, footer schema and metadata as `df.write.parquet`) into
@@ -166,42 +169,22 @@ object DirectParquet {
   }
 
   /**
-   * Write `df` as bucket files `<dir>/hb=<b>/part-<partition>.parquet`.
-   * The LAST column of `df` is the int bucket key (not written); the
-   * others form the file rows, in order. Within a partition each bucket's
-   * rows must be contiguous (sort by the bucket first) — a bucket that
-   * reappears after another one fails the task rather than overwrite its
-   * file. Returns one message per written file.
+   * `spark.read.schema(schema).parquet(dirs: _*)`'s relation minus Spark's
+   * path check, which starts a ForkJoinPool thread per path on every call
+   * (the crawl reads the pool's bucket dirs and the round's docs every
+   * round). `schema` is the data schema as given (`spark.read` would make
+   * it nullable); the files must sit directly under `dirs` (no partition
+   * discovery), and a missing dir throws [[java.io.FileNotFoundException]].
    */
-  def writeBuckets(df: DataFrame, dir: String, options: Map[String, String]): Seq[FileCommit] = {
-    val fileSchema = StructType(df.schema.fields.dropRight(1))
-    val settings = Settings.resolve(df.sparkSession, fileSchema, options)
-    val n = fileSchema.length
-    runJob(df) { (_, rows) =>
-      val view = ProjectingInternalRow(fileSchema, 0 until n)
-      val done = scala.collection.mutable.ArrayBuffer.empty[FileCommit]
-      val seen = new java.util.BitSet()
-      var w: PartWriter = null
-      try {
-        while (rows.hasNext) {
-          val row = rows.next()
-          val b = row.getInt(n)
-          if (w == null || b != w.bucket) {
-            if (w != null) { done += w.commit(); w = null }
-            if (seen.get(b))
-              throw new IllegalStateException(
-                s"bucket $b rows are not contiguous in partition ${TaskContext.getPartitionId()}")
-            seen.set(b)
-            w = taskWriter(settings, Paths.get(dir, s"hb=$b"), b)
-          }
-          view.project(row)
-          w.write(view)
-        }
-        if (w != null) done += w.commit()
-        w = null
-        done.toSeq
-      } catch { case e: Throwable => abortAll(Option(w), e) }
-    }.toSeq.flatten
+  def scan(spark: SparkSession, dirs: Seq[String], schema: StructType): DataFrame = {
+    dirs.foreach { d =>
+      if (!Files.isDirectory(Paths.get(d)))
+        throw new java.io.FileNotFoundException(s"no parquet directory $d")
+    }
+    val index = new InMemoryFileIndex(spark, dirs.map(new org.apache.hadoop.fs.Path(_)),
+      Map.empty, Some(schema))
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, new StructType(), schema, None,
+      new ParquetFileFormat(), Map.empty)(spark))
   }
 
   /** Write `rows` on the driver as `<dir>/part-00000.parquet`, replacing

@@ -3,10 +3,8 @@ package graft.sources
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.execution.datasources.{FileFormat, HadoopFsRelation, InMemoryFileIndex,
-  PartitionedFile}
+import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
@@ -22,17 +20,18 @@ import scala.jdk.CollectionConverters._
  *
  *  - the manifest maps every `host_bucket` to the data directory holding
  *    its current file (an Iceberg manifest's data-file list, keyed by
- *    partition). Two commits write it: [[IcebergishTable.commit]] replaces
- *    the whole table, and [[IcebergishTable.commitMerge]] — the emulation
- *    of `MERGE INTO` + partition-level file replacement — runs one task
- *    per bucket that merges the bucket's delta into its sorted file in
- *    one read and one write. Only dirty buckets are rewritten; clean
- *    buckets keep pointing at their old files, so per-round I/O is
- *    O(touched buckets), never O(table), and only the delta is shuffled;
- *  - each bucket's file is written SORTED by `sortCols` (for the frontier:
- *    host, then priority) — the clustered layout that lets the fifo pop be
- *    a streaming per-partition take with no Sort in its plan, and the
- *    bucket merge stream the file instead of re-sorting it;
+ *    partition). One commit writes it, for seeding and for every round:
+ *    [[IcebergishTable.commitMerge]] — the emulation of `MERGE INTO` +
+ *    partition-level file replacement — runs one task per bucket that
+ *    merges the bucket's delta into its sorted file in one read and one
+ *    write. Only dirty buckets are rewritten; clean buckets keep pointing
+ *    at their old files, so per-round I/O is O(touched buckets), never
+ *    O(table), and only the delta is shuffled;
+ *  - each bucket's file is SORTED in the order the merge emits (for the
+ *    frontier: host, then priority, [[graft.frontier.Frontier.fileOrder]])
+ *    — the clustered layout that lets the fifo pop be a streaming
+ *    per-partition take with no Sort in its plan, and the next merge
+ *    stream the file instead of re-sorting it;
  *  - bucket files are written by [[DirectParquet]]: one
  *    `data-r<round>-<nonce>/hb=<b>/part-<partition>.parquet` per bucket,
  *    and each write task returns its per-file row counts, from which the
@@ -76,7 +75,7 @@ object IcebergishTable {
     Option[Iterator[InternalRow]]
 
   /** Bucket → manifest entry for one commit's files. A bucket written by
-    * two tasks fails the commit: its `sortCols` layout would be torn across
+    * two tasks fails the commit: its sorted layout would be torn across
     * files, which popSortedFifo's sortedness check cannot see — it would
     * silently over-pop per-host budgets. */
   def bucketEntries(dataDir: String, files: Seq[DirectParquet.FileCommit]): Map[Int, BucketEntry] = {
@@ -122,16 +121,13 @@ object IcebergishTable {
 }
 
 class IcebergishTable(val root: String, schema: StructType,
-    bucketCol: String = "host_bucket",
-    sortCols: Seq[String] = Nil,
     /** Extra options for the parquet writes (e.g. `parquet.block.size` —
       * the default 128 MB row-group buffer per concurrent writer task is
       * real heap at local[32]; bucket files are a few MB here anyway). */
     writerOptions: Map[String, String] = Map.empty,
-    /** Columns DROPPED from the data files right after the commit sort —
-      * for columns the reader can derive (the frontier's `host` and
-      * `host_bucket` are pure functions of `url`; `last_visit` is
-      * constant 0 in the pool). Every dropped byte is paid per round in
+    /** Columns DROPPED from the data files — for columns the reader can
+      * derive (the frontier's `host` and `host_bucket` are pure functions
+      * of `url`; `last_visit` is constant 0 in the pool). Every dropped byte is paid per round in
       * sort+encode CPU and fresh-page commits — at 27 M pool rows the
       * derivable columns were ~25 % of the rewrite volume. Callers that
       * drop columns must restore them on read (see
@@ -173,37 +169,8 @@ class IcebergishTable(val root: String, schema: StructType,
   def read(spark: SparkSession): DataFrame = {
     val paths = currentSnapshot().map(_.bucketPaths(root)).getOrElse(Nil)
     if (paths.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], fileSchema)
-    // `spark.read.schema(..).parquet(paths)`'s relation, minus its path
-    // check, which starts a ForkJoinPool thread per path on every call
-    paths.foreach { p =>
-      if (!Files.isDirectory(Paths.get(p)))
-        throw new java.io.FileNotFoundException(s"$manifestPath names a missing bucket dir $p")
-    }
-    val index = new InMemoryFileIndex(spark, paths.map(new org.apache.hadoop.fs.Path(_)),
-      Map.empty, Some(readSchema))
-    spark.baseRelationToDataFrame(HadoopFsRelation(index, new StructType(), readSchema, None,
-      new ParquetFileFormat(), Map.empty)(spark))
-  }
-
-  /**
-   * Commit `df` as snapshot `round`, replacing the whole table (seeding).
-   * One exchange clusters rows per bucket (one task → one file per bucket
-   * dir); the within-partition sort, led by the bucket key so each
-   * bucket's rows are contiguous, gives each file the `sortCols` layout
-   * the streaming pop depends on. Returns total table rows.
-   */
-  def commit(df: DataFrame, round: Int): Long = {
-    val dataDir = newDataDir(round)
-    val keyed = df.withColumn("hb", col(bucketCol)).repartition(col(bucketCol))
-    val clustered =
-      if (sortCols.nonEmpty) keyed.sortWithinPartitions((col("hb") +: sortCols.map(col)): _*)
-      else keyed
-    // a projection after the sort is narrow — file row order is preserved
-    val files = DirectParquet.writeBuckets(
-      clustered.select((fileSchema.fieldNames.map(col) :+ col("hb")).toIndexedSeq: _*),
-      s"$root/$dataDir", writerOptions)
-    publish(df.sparkSession, round, dataDir, files, Map.empty, _ => ())
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], fileSchema)
+    else DirectParquet.scan(spark, paths, readSchema)
   }
 
   /**
@@ -211,10 +178,11 @@ class IcebergishTable(val root: String, schema: StructType,
    * bucket files (`MERGE INTO` with bucket-level file replacement).
    * Partition b of `delta` must hold exactly bucket b's rows (e.g. on
    * [[graft.frontier.Frontier.bucketToken]]); its task runs `merge` over
-   * them and a reader of bucket b's file (file-schema rows in `sortCols`
-   * order) and writes the rows it returns straight to the new file — no
-   * file row crosses an exchange or is re-sorted. A clean bucket keeps
-   * its file unread; a dirty one left empty drops out of the manifest.
+   * them and a reader of bucket b's file (file-schema rows in file order)
+   * and writes the rows it returns, in the same order, straight to the
+   * new file — no file row crosses an exchange or is re-sorted. A clean
+   * bucket keeps its file unread; a dirty one left empty drops out of the
+   * manifest.
    * Returns total table rows.
    *
    * @param beforeRename invoked with the new snapshot's total rows after
@@ -226,12 +194,13 @@ class IcebergishTable(val root: String, schema: StructType,
   def commitMerge(delta: DataFrame, round: Int, merge: IcebergishTable.BucketMerge,
       beforeRename: Long => Unit): Long = {
     val spark = delta.sparkSession
-    val dataDir = newDataDir(round)
+    Files.createDirectories(Paths.get(root))
+    val dataDir = s"data-r$round-${java.util.UUID.randomUUID().toString.take(8)}"
     val prev = currentSnapshot().map(_.buckets).getOrElse(Map.empty)
     val current = prev.map { case (b, e) => b -> s"$root/${e.dir}/hb=$b" }
     // Spark's own parquet reader (vectorized, InternalRow out), built once
     // here: the tasks carry its broadcast conf, not a Hadoop conf each.
-    // Merged files keep the schema a re-sort of read rows wrote (nullable).
+    // Bucket files are written with the read schema (every column nullable).
     val readFile = new ParquetFileFormat().buildReaderWithPartitionValues(
       spark, readSchema, new StructType(), readSchema, Nil,
       Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), spark.sessionState.newHadoopConf())
@@ -254,27 +223,16 @@ class IcebergishTable(val root: String, schema: StructType,
         } catch { case e: Throwable => DirectParquet.abortAll(Option(w), e) }
       }
     }.flatten
-    val dirty = results.map(_._1).toSet
-    publish(spark, round, dataDir, results.flatMap(_._2).toSeq, prev -- dirty, beforeRename)
-  }
-
-  private def newDataDir(round: Int): String = {
-    Files.createDirectories(Paths.get(root))
-    s"data-r$round-${java.util.UUID.randomUUID().toString.take(8)}"
-  }
-
-  /** Both commits' last step: the written files plus the `kept` buckets
-    * become snapshot `round`; `beforeRename`, the rename, then the prune
-    * of every data dir the new manifest no longer references. */
-  private def publish(spark: SparkSession, round: Int, dataDir: String,
-      files: Seq[DirectParquet.FileCommit], kept: Map[Int, BucketEntry],
-      beforeRename: Long => Unit): Long = {
     val maxSplit = spark.sessionState.conf.filesMaxPartitionBytes
+    val files = results.flatMap(_._2).toSeq
     files.filter(_.bytes > maxSplit).foreach { f =>
       System.err.println(s"[icebergish] WARN bucket ${f.bucket} file (${f.bytes} B) exceeds " +
         s"maxPartitionBytes=$maxSplit — raise numBuckets (streaming-pop invariant)")
     }
-    val buckets = kept ++ IcebergishTable.bucketEntries(dataDir, files)
+    // the written files plus the clean buckets become snapshot `round`;
+    // the barrier, the rename, then the prune of every data dir the new
+    // manifest no longer references
+    val buckets = (prev -- results.map(_._1)) ++ IcebergishTable.bucketEntries(dataDir, files)
     val rows = buckets.valuesIterator.map(_.rows).sum
     beforeRename(rows)
     renameManifest(Snapshot(round, rows, buckets))

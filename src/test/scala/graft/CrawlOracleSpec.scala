@@ -165,7 +165,7 @@ object CrawlOracleSpec {
 
     def addCandidates(cands: Seq[(String, Int, Long)]): Unit = {
       // first-seen per url by min (depth, discovered_at) — mirrors
-      // Frontier.normalizeCandidates' min-struct dedup
+      // the bucket merge's dedup (Frontier.mergeBucket)
       val best = scala.collection.mutable.LinkedHashMap.empty[String, (String, Int, Long)]
       cands.foreach { case (u0, d, t) =>
         normalize(u0).foreach { case (u, h) =>

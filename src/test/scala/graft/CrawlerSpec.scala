@@ -31,33 +31,22 @@ class FrontierSpec extends AnyFunSuite {
     Frontier.normalizeCandidates(
       urls.toSeq.toDF("url", "depth", "discovered_at"), 8)
 
-  test("normalizeCandidates: drops data: urls and unparseable hosts, dedups by first-seen") {
+  test("normalizeCandidates: drops data: and hostless urls only") {
     val c = cands(
       ("http://a.test/x", 1, 10L),
-      ("http://a.test/x", 0, 20L), // lower depth wins despite later discovery
+      ("http://a.test/x", 0, 20L),
       ("data:text/plain;base64,AAA", 0, 1L),
       ("::not a url::", 0, 1L))
     val rows = c.collect()
-    assert(rows.length == 1)
-    assert(rows.head.getAs[Int]("depth") == 0)
-    assert(rows.head.getAs[Long]("discovered_at") == 20L)
-  }
-
-  test("newOnly: exact dedup vs frontier; bloom is advisory only (Add, store/url.go:155-220)") {
-    val frontier = cands(("http://a.test/1", 0, 0L), ("http://a.test/2", 0, 1L))
-    val incoming = cands(
-      ("http://a.test/2", 1, 5L), // already seen → dropped
-      ("http://b.test/9", 1, 6L)) // new → kept
-    val fresh = Frontier.newOnly(frontier, incoming).collect()
-    assert(fresh.map(_.getAs[String]("url")).toSet == Set("http://b.test/9"))
-  }
-
-  test("newOnly is idempotent (Add twice → no dupes)") {
-    val frontier = cands(("http://a.test/1", 0, 0L))
-    val once = Frontier.newOnly(frontier, cands(("http://c.test/1", 1, 1L)))
-    val merged = frontier.unionByName(once)
-    val twice = Frontier.newOnly(merged, cands(("http://c.test/1", 1, 1L)))
-    assert(twice.count() == 0)
+    // no in-batch dedup: the bucket merge keeps the first-seen occurrence
+    // (CrawlerSpec "seeding takes the round's bucket merge")
+    assert(rows.map(r => (r.getAs[String]("url"), r.getAs[Int]("depth"),
+      r.getAs[Long]("discovered_at"))).toSet ==
+      Set(("http://a.test/x", 1, 10L), ("http://a.test/x", 0, 20L)))
+    assert(rows.forall(r => r.getAs[String]("host") == "a.test" &&
+      r.getAs[Int]("host_bucket") == Frontier.bucketOf(
+        org.apache.spark.unsafe.types.UTF8String.fromString("a.test"), 8) &&
+      r.getAs[Long]("last_visit") == 0L))
   }
 
   test("pop: fifo order per host = (depth, discovered_at); politeness budget respected") {
@@ -260,6 +249,60 @@ class CrawlerSpec extends AnyFunSuite {
     assert(java.nio.file.Files.list(
         java.nio.file.Paths.get(s"$dir/seen/round=1")).iterator().asScala
       .exists(_.getFileName.toString.startsWith("host_bucket=")))
+  }
+
+  test("seeding takes the round's bucket merge: known urls stay out, first-seen wins, clean buckets keep their files") {
+    import spark.implicits._
+    val sim = new FetchSim(numHosts = 16, pagesPerHost = 40, linksPerPage = 4)
+    val nb = 4
+    val c = new Crawler(spark, tmpDir(), sim,
+      CrawlConfig(numBuckets = nb, perHostBudget = 2, perBucketBudget = 1000))
+    c.addSeeds(sim.seedUrls(16))
+    c.round(); c.round()
+    def everSeen() = c.frontier().select("url", "depth", "discovered_at", "last_visit")
+      .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSet
+    def seed(rows: (String, Int, Long)*) =
+      c.addSeedCandidates(rows.toDF("url", "depth", "discovered_at"))
+    val before = everSeen()
+    def oneWith(visit: Long) = before.collectFirst { case (u, _, _, v) if v == visit => u }.get
+    // a pool url, a url visited in the last round, one archived earlier:
+    // re-seeded at a better priority, none is added or changed
+    val rowsBefore = c.frontierTable.currentSnapshot().get.rows
+    val known = seed(Seq(0L, 2L, 1L).map(v => (oneWith(v), 0, 0L)): _*)
+    assert(everSeen() == before)
+    assert(c.frontierTable.currentSnapshot().get.rows == rowsBefore)
+    assert(c.lastRound == 2)
+    // duplicate seeds of a new url keep the minimum (depth, discovered_at);
+    // only the bucket they reach is rewritten
+    val snap = c.frontierTable.currentSnapshot().get
+    val fresh = "http://fresh.test/a"
+    val dups = Seq((fresh, 3, 50L), (fresh, 1, 90L), (fresh, 1, 70L))
+    val added = seed(dups: _*)
+    assert(added == known + 1)
+    assert(everSeen() == before + ((fresh, 1, 70L, 0L)))
+    val hb = Frontier.bucketOf(org.apache.spark.unsafe.types.UTF8String.fromString("fresh.test"), nb)
+    val after = c.frontierTable.currentSnapshot().get
+    assert(after.round == 2 && after.rows == snap.rows + 1)
+    assert(after.buckets(hb).dir != snap.buckets(hb).dir)
+    (0 until nb).filter(_ != hb).foreach(b => assert(after.buckets.get(b) == snap.buckets.get(b),
+      s"clean bucket $b was rewritten"))
+    // seeding the same list twice returns the same row count
+    assert(seed(dups: _*) == added)
+    assert(everSeen() == before + ((fresh, 1, 70L, 0L)))
+  }
+
+  test("a seeded crawler with no round: docs() and sessions() are empty with their columns") {
+    val c = new Crawler(spark, tmpDir(), new FetchSim(numHosts = 4, pagesPerHost = 4),
+      CrawlConfig(numBuckets = 4))
+    c.addSeeds(Seq("http://h0.test/p/0"))
+    val docs = c.docs()
+    val sessions = c.sessions()
+    assert(docs.columns.toSeq == Seq("doc_id", "spans", "round"))
+    assert(sessions.columns.toSeq == Seq("doc_id", "url", "host", "depth", "error",
+      "navigate_ts", "loaded_ts", "terminated_ts", "round"))
+    assert(docs.count() == 0 && sessions.count() == 0)
+    val wh = graft.warehouse.Warehouse.build(docs, sessions)
+    assert(wh("fact_sessions").count() == 0 && wh("stored_bodies").count() == 0)
   }
 
   test("the commit exchange carries the round's thinned candidates, not the pool") {

@@ -72,35 +72,11 @@ class DirectWriteSpec extends AnyFunSuite {
     assert(java.util.Arrays.equals(Files.readAllBytes(target), bytes))
     assert(first == retry && first.rows == 500 && first.bytes == bytes.length)
     assert(spark.read.parquet(dir.toString).count() == 500)
-
-    // the same for a whole bucket write job run twice into one directory
-    import spark.implicits._
-    val df = (0 until 200).map(i => (s"u$i", i.toLong, i % 4)).toDF("url", "k", "b")
-      .repartition(col("b")).sortWithinPartitions("b", "k")
-    val out = tmpDir()
-    val once = DirectParquet.writeBuckets(df, out, Map.empty)
-    val hashes = walk(Paths.get(out)).filter(Files.isRegularFile(_))
-      .map(p => p.toString -> UrlFns.sha256Hex(Files.readAllBytes(p))).toMap
-    val twice = DirectParquet.writeBuckets(df, out, Map.empty)
-    assert(once.sortBy(_.bucket) == twice.sortBy(_.bucket))
-    assert(once.map(_.rows).sum == 200 && once.map(_.bucket).toSet == Set(0, 1, 2, 3))
-    assert(walk(Paths.get(out)).filter(Files.isRegularFile(_))
-      .map(p => p.toString -> UrlFns.sha256Hex(Files.readAllBytes(p))).toMap == hashes)
-  }
-
-  test("a bucket that is not contiguous in its partition fails the write") {
-    import spark.implicits._
-    val df = Seq(("a", 0), ("b", 1), ("c", 0)).toDF("url", "b").coalesce(1)
-    val e = intercept[org.apache.spark.SparkException](
-      DirectParquet.writeBuckets(df, tmpDir(), Map.empty))
-    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-      .exists(t => String.valueOf(t.getMessage).contains("not contiguous")))
   }
 
   test("the manifest builder refuses a bucket that arrives from two tasks") {
-    // neither commit can produce one (the full commit repartitions on the
-    // bucket column; the merge commit's task b writes only bucket b), so
-    // the builder both share is checked directly
+    // the merge commit cannot produce one (its task b writes only bucket
+    // b), so the manifest builder is checked directly
     import graft.sources.IcebergishTable.{BucketEntry, bucketEntries}
     val files = Seq(DirectParquet.FileCommit(1, 0, 10L, 100L),
       DirectParquet.FileCommit(2, 1, 5L, 50L), DirectParquet.FileCommit(1, 3, 7L, 70L))
@@ -114,11 +90,10 @@ class DirectWriteSpec extends AnyFunSuite {
     import graft.frontier.Frontier
     val dir = tmpDir()
     val table = new graft.sources.IcebergishTable(dir, Frontier.schema,
-      sortCols = Seq("host", "depth", "discovered_at", "url"),
       dropCols = Seq("host", "host_bucket", "last_visit"))
     val seed = Frontier.normalizeCandidates(
       (0 until 40).map(i => (s"http://h$i.test/p", 0, i.toLong)).toDF("url", "depth", "discovered_at"), 4)
-    table.commit(seed, 0)
+    table.commitMerge(Frontier.roundDelta(seed, 4), 0, Frontier.roundMerge(s"$dir/seen", 0, 4), _ => ())
     // round-robin, not the bucket token: most rows reach a foreign task
     val delta = seed.select(col("url"), lit(1L).as("k")).repartition(4)
     val e = intercept[org.apache.spark.SparkException](

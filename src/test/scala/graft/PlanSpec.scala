@@ -38,10 +38,10 @@ class PlanSpec extends AnyFunSuite {
     val popped = Frontier.pop(f, "fifo", 42L, 2, 1000)
     val plan = planOf(popped)
     val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).length
-    // one exchange for the frontier input itself (normalizeCandidates'
-    // groupBy) + exactly one for the pop repartition — the two windows
+    // the input has no exchange of its own (normalizeCandidates is
+    // row-local): exactly one for the pop repartition — the two windows
     // must NOT add more
-    assert(exchanges <= 2, s"pop added extra exchanges ($exchanges):\n$plan")
+    assert(exchanges == 1, s"pop planned $exchanges exchanges, want 1:\n$plan")
     assert(plan.contains("Window"), "expected window operators")
   }
 
@@ -141,16 +141,18 @@ class PlanSpec extends AnyFunSuite {
 
   test("sorted fifo pop: streaming take with NO Sort node and NO exchange") {
     import spark.implicits._
-    // commit a frontier through the real table (bucket files stored sorted),
-    // then the fifo pop plan must be scan → filter → mapPartitions only
+    // seed a frontier through the real table's bucket merge (bucket files
+    // stored sorted), then the fifo pop plan must be scan → filter →
+    // mapPartitions only
     val dir = java.nio.file.Files.createTempDirectory("graft-pop-plan").toString
     val table = new graft.sources.IcebergishTable(dir, Frontier.schema,
-      sortCols = Seq("host", "depth", "discovered_at", "url"))
+      dropCols = Seq("host", "host_bucket", "last_visit"))
     val f = Frontier.normalizeCandidates(
       (0 until 200).map(i => (s"http://h${i % 7}.test/p/$i", 0, i.toLong))
         .toDF("url", "depth", "discovered_at"), 8)
-    table.commit(f, 0)
-    val popped = Frontier.pop(table.read(spark), "fifo", 42L, 2, 1000, sorted = true)
+    table.commitMerge(Frontier.roundDelta(f, 8), 0, Frontier.roundMerge(s"$dir/seen", 0, 8), _ => ())
+    val pool = Frontier.restorePool(table.read(spark), 8)
+    val popped = Frontier.pop(pool, "fifo", 42L, 2, 1000, sorted = true)
     val plan = planOf(popped)
     assert(!plan.contains("Exchange"), s"sorted pop shuffled:\n$plan")
     assert(!plan.linesIterator.exists(_.trim.startsWith("+- Sort")) &&
@@ -158,7 +160,7 @@ class PlanSpec extends AnyFunSuite {
       s"sorted pop re-sorted the pool:\n$plan")
     assert(plan.contains("MapPartitions"), s"expected streaming take:\n$plan")
     // and it pops the same rows as the window form
-    val windowed = Frontier.pop(table.read(spark), "fifo", 42L, 2, 1000)
+    val windowed = Frontier.pop(pool, "fifo", 42L, 2, 1000)
     assert(popped.collect().map(_.getString(0)).sorted.toSeq ==
       windowed.collect().map(_.getString(0)).sorted.toSeq)
   }
@@ -271,30 +273,6 @@ class PlanSpec extends AnyFunSuite {
       }
     }
     assert(bad.isEmpty, s"unmarked unpersist in operators (see q42 lesson): $bad")
-  }
-
-  test("frontier bloom pre-filter probes via codegen'd might_contain, not a UDF") {
-    import spark.implicits._
-    // parquet-backed inputs: a LocalRelation would be constant-folded,
-    // evaporating the probe from the physical plan
-    val dir = java.nio.file.Files.createTempDirectory("graft-bloom-plan").toString
-    Frontier.normalizeCandidates(
-      (0 until 50).map(i => (s"http://h$i.test/", 0, i.toLong))
-        .toDF("url", "depth", "discovered_at"), 8)
-      .write.parquet(s"$dir/f")
-    Frontier.normalizeCandidates(
-      (40 until 90).map(i => (s"http://h$i.test/", 0, i.toLong))
-        .toDF("url", "depth", "discovered_at"), 8)
-      .write.parquet(s"$dir/c")
-    val f = spark.read.parquet(s"$dir/f")
-    val cands = spark.read.parquet(s"$dir/c")
-    val out = Frontier.newOnly(f, cands, expectedRows = 50L, bloomMinRows = 1L)
-    val plan = planOf(out)
-    assert(plan.contains("might_contain"), s"bloom probe missing:\n$plan")
-    assert(!plan.contains("UDF"), s"bloom probe fell back to a UDF:\n$plan")
-    // advisory only: output must still be the exact set difference
-    assert(out.select("url").collect().map(_.getString(0)).toSet ==
-      (50 until 90).map(i => s"http://h$i.test/").toSet)
   }
 
   test("corpus dim joins plan WITHOUT broadcast when the size-gate is off") {

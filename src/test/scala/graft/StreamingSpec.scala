@@ -97,27 +97,28 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     import graft.frontier.Frontier
     import StreamingSpec.{mapOf, mergedRows, nextStateWindow, flagAdmissionsWindow}
-    // commit a frontier through the real table so the fused pass sees the
-    // sorted bucket files it requires; perBucketBudget=3 forces the
+    // seed a frontier through the real table's bucket merge so the fused
+    // pass sees the sorted bucket files it requires; perBucketBudget=3 forces the
     // per-bucket heap to EVICT (7 hosts × budget 2 >> 3 per bucket) — the
     // regime where flag-before-truncate vs truncate-before-flag could
     // diverge if the prefix property did not hold
     val dir = java.nio.file.Files.createTempDirectory("graft-fused-pop").toString
     val table = new graft.sources.IcebergishTable(dir, Frontier.schema,
-      sortCols = Seq("host", "depth", "discovered_at", "url"))
+      dropCols = Seq("host", "host_bucket", "last_visit"))
     val f = Frontier.normalizeCandidates(
       (0 until 200).map(i => (s"http://h${i % 7}.test/p/$i", i % 3, i.toLong))
         .toDF("url", "depth", "discovered_at"), 4)
-    table.commit(f, 0)
+    table.commitMerge(Frontier.roundDelta(f, 4), 0, Frontier.roundMerge(s"$dir/seen", 0, 4), _ => ())
+    val pool = Frontier.restorePool(table.read(spark), 4)
     val stateSeq = Seq(("h0.test", 1.2, 6L), ("h3.test", 0.1, 6L))
     val state = stateSeq.toDF("host", "tokens", "last_round")
     val (roundId, rate, burst) = (7L, 0.5, 2.0)
     val acc = new Politeness.AdmittedCountsAcc()
     spark.sparkContext.register(acc)
-    val fused = Frontier.popSortedFifoFlagged(table.read(spark), 2, 3,
+    val fused = Frontier.popSortedFifoFlagged(pool, 2, 3,
       spark.sparkContext.broadcast(mapOf(stateSeq)), roundId, rate, burst, acc)
     val reference = flagAdmissionsWindow(
-      Frontier.pop(table.read(spark), "fifo", 42L, 2, 3, sorted = true),
+      Frontier.pop(pool, "fifo", 42L, 2, 3, sorted = true),
       state, roundId, rate, burst)
     def verdicts(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getString(0), r.getBoolean(5))).toSet
